@@ -237,10 +237,21 @@ class TTLCache:
         self._clock = clock
         self._data: OrderedDict[Hashable, tuple[float, Any]] = OrderedDict()
 
-    def get_or_compute(self, key: Hashable, compute: Callable[[], Any]) -> Any:
+    def get_or_compute(
+        self,
+        key: Hashable,
+        compute: Callable[[], Any],
+        valid: Callable[[Any], bool] | None = None,
+    ) -> Any:
+        """Cached value for ``key``, recomputed when missing, expired, or
+        rejected by ``valid`` (a caller-side freshness check)."""
         now = self._clock()
         hit = self._data.get(key)
-        if hit is not None and now - hit[0] < self.ttl_s:
+        if (
+            hit is not None
+            and now - hit[0] < self.ttl_s
+            and (valid is None or valid(hit[1]))
+        ):
             self._data.move_to_end(key)
             return hit[1]
         value = compute()

@@ -47,6 +47,7 @@ Within a single trusted session, :meth:`Engine.create_governed_view` gives
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import shutil
@@ -56,6 +57,7 @@ import uuid
 from collections import Counter
 from typing import Any
 
+import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -170,6 +172,80 @@ def _is_foreign_path(p: str) -> bool:
     """An add path that references a file OUTSIDE the table root (absolute
     path or URI) — how shallow clones reference the source's files."""
     return p.startswith("/") or "://" in p
+
+
+def _is_log_key(rel: str) -> bool:
+    """``_delta_log`` itself or a key inside it with no ``.``/``..``
+    segment — the only keys that bypass the ACL (src/main.rs:532-538)."""
+    parts = rel.split("/")
+    return parts[0] == deltalog.LOG_DIR and not {".", ".."} & set(parts)
+
+
+def _run_end(keys: list[str], prefix: str, lo: int, hi: int) -> int:
+    """End of the run of sorted ``keys[lo:hi]`` that start with ``prefix``."""
+    return bisect.bisect_left(
+        keys, True, lo, hi, key=lambda k: not k.startswith(prefix)
+    )
+
+
+_LIST_PAGE_SCHEMA = pa.schema(
+    [
+        ("key", pa.string()),
+        ("size", pa.int64()),
+        ("modificationTime", pa.int64()),
+        ("is_common_prefix", pa.bool_()),
+    ]
+)
+
+
+class _FileIndex:
+    """One table version's live files on the driver: the snapshot GET, LIST
+    and the enumerated scan all read (ref snapshot cache, src/main.rs:82-85).
+    The sorted alias-namespaced keys are built on the first LIST."""
+
+    __slots__ = ("version", "adds", "_keys")
+
+    def __init__(self, path: str):
+        self.version = deltalog.latest_version(path)
+        self.adds = deltalog._live_adds_no_spark(path, max_version=self.version)
+        self._keys: dict[str, list[str]] = {}
+
+    def page(
+        self,
+        alias: str,
+        prefix: str,
+        after: str | None,
+        max_keys: int | None,
+        delimiter: str | None,
+    ) -> list[tuple[str, int | None, int | None, bool]]:
+        """``(key, size, modificationTime, is_common_prefix)`` rows of one
+        ListObjectsV2 page, in key order."""
+        keys = self._keys.get(alias)
+        if keys is None:
+            keys = self._keys[alias] = sorted(f"{alias}/{p}" for p in self.adds)
+        lo = bisect.bisect_left(keys, prefix)
+        hi = _run_end(keys, prefix, lo, len(keys))
+        if after:
+            # a grouped key is a prefix of its members, so no key <= after
+            # can group to a key > after
+            lo = max(lo, bisect.bisect_right(keys, after, lo, hi))
+        limit = len(keys) if max_keys is None else int(max_keys)
+        out: list[tuple[str, int | None, int | None, bool]] = []
+        cut = len(alias) + 1
+        while lo < hi and len(out) < limit:
+            k = keys[lo]
+            pos = k.find(delimiter, len(prefix)) if delimiter else -1
+            if pos < 0:
+                a = self.adds[k[cut:]]
+                out.append((k, a.get("size"), a.get("modificationTime"), False))
+                lo += 1
+                continue
+            # one CommonPrefixes row per group, at its first member
+            group = k[: pos + len(delimiter)]
+            if not after or group > after:
+                out.append((group, None, None, True))
+            lo = _run_end(keys, group, lo, hi)
+        return out
 
 
 def _safe_castable(src, dst) -> bool:
@@ -4774,11 +4850,9 @@ class Engine:
                 # scan switches to the distributed listing-join.
                 if deltalog.estimate_snapshot_actions(path) > limit:
                     return _TOO_MANY_FILES
-                # share the ("live_files", path) entry with authorize_file:
-                # one replay serves both the scan plan and per-request auth
-                live_adds = self._snapshot_cache.get_or_compute(
-                    ("live_files", path), lambda: deltalog._live_adds_no_spark(path)
-                )
+                # share the file index with authorize_file and list_files:
+                # one replay serves the scan plan and per-request auth
+                live_adds = self._file_index(path).adds
                 if len(live_adds) > limit:
                     return _TOO_MANY_FILES
                 return [os.path.join(path, rel) for rel in sorted(live_adds)]
@@ -4837,10 +4911,7 @@ class Engine:
                 # basePath partition derivation cannot work — partition
                 # values come from the LOG instead (Delta's own model)
                 if pv_of is None:
-                    adds = self._snapshot_cache.get_or_compute(
-                        ("live_files", path),
-                        lambda: deltalog._live_adds_no_spark(path),
-                    )
+                    adds = self._file_index(path).adds
                     pv_of = {
                         r: dict(a.get("partitionValues") or {})
                         for r, a in adds.items()
@@ -5204,9 +5275,7 @@ class Engine:
         def compute():
             if not self._dv_protocol(path):
                 return {}
-            live = self._snapshot_cache.get_or_compute(
-                ("live_files", path), lambda: deltalog._live_adds_no_spark(path)
-            )
+            live = self._file_index(path).adds
             return {
                 rel: dict(a["deletionVector"])
                 for rel, a in live.items()
@@ -5439,6 +5508,13 @@ class Engine:
         pred = compile_dnf_on_partition_values(dnf)
         return files if pred is None else files.filter(pred)
 
+    def _file_index(self, path: str, valid=None) -> _FileIndex:
+        """The shared per-path :class:`_FileIndex` entry of the snapshot
+        cache; ``valid`` rejects a cached index (LIST's tip check)."""
+        return self._snapshot_cache.get_or_compute(
+            ("live_files", path), lambda: _FileIndex(path), valid
+        )
+
     def authorize_file(self, alias: str, user: str, rel_path: str) -> bool:
         """File-level membership check; raises 403/404 exactly like the
         reference's data-file GET (src/main.rs:576-594, 770-788).
@@ -5448,13 +5524,13 @@ class Engine:
         live-file map comes from the checkpoint-aware driver-side log replay
         (memoized in the snapshot TTL cache) and the DNF evaluates in pure
         Python. Batch authorization stays on the DataFrame path
-        (:meth:`authorize_requests`)."""
-        if rel_path.startswith(deltalog.LOG_DIR):
+        (:meth:`authorize_requests`). The index is not tip-checked here: a
+        GET trusts the cached snapshot, which engine writes invalidate and
+        :meth:`list_files` refreshes."""
+        if _is_log_key(rel_path):
             return True  # metadata bypasses the ACL (src/main.rs:532-538)
         path = self.resolve(alias)
-        live = self._snapshot_cache.get_or_compute(
-            ("live_files", path), lambda: deltalog._live_adds_no_spark(path)
-        )
+        live = self._file_index(path).adds
         add = live.get(rel_path)
         dnf = deltalog.translate_dnf(
             self.resolved_dnf(alias, user), self._column_mapping(path)
@@ -5596,54 +5672,24 @@ class Engine:
         directories with ``delimiter=/``. With a delimiter the result gains
         an ``is_common_prefix`` column (grouped rows carry null size/mtime),
         and prefixes count toward ``max_keys`` interleaved in key order,
-        matching S3. The grouping is one groupBy over the (metadata-sized)
-        key listing — fully declarative, no driver-side key walk.
+        matching S3.
+
+        Pages come from the driver-side snapshot, version-checked against
+        the log tip on every call (rebuilt when a commit landed) and walked
+        by binary search over its sorted keys. The page is a local Arrow
+        relation, so building and collecting it runs zero Spark jobs — the
+        reference's cached-snapshot listing (src/main.rs:228-339).
         """
-        df = self.snapshot_files(alias).select("key", "size", "modificationTime")
-        if prefix:
-            df = df.filter(F.col("key").startswith(prefix))
-        if delimiter:
-            plen = len(prefix or "")
-            rest = F.substring(F.col("key"), plen + 1, 1 << 30)
-            pos = F.instr(rest, delimiter)
-            grouped_key = F.when(
-                pos > 0,
-                F.concat(
-                    F.lit(prefix or ""),
-                    F.substring(rest, 1, pos + len(delimiter) - 1),
-                ),
-            ).otherwise(F.col("key"))
-            df = (
-                df.select(
-                    grouped_key.alias("key"),
-                    (pos > 0).alias("is_common_prefix"),
-                    "size",
-                    "modificationTime",
-                )
-                .groupBy("key", "is_common_prefix")
-                .agg(
-                    F.max("size").alias("size"),
-                    F.max("modificationTime").alias("modificationTime"),
-                )
-                .withColumns(
-                    {
-                        "size": F.when(
-                            F.col("is_common_prefix"), F.lit(None).cast("long")
-                        ).otherwise(F.col("size")),
-                        "modificationTime": F.when(
-                            F.col("is_common_prefix"), F.lit(None).cast("long")
-                        ).otherwise(F.col("modificationTime")),
-                    }
-                )
-                .select("key", "size", "modificationTime", "is_common_prefix")
-            )
-        after = continuation_token or start_after
-        if after:
-            df = df.filter(F.col("key") > F.lit(after))
-        df = df.orderBy("key")
-        if max_keys is not None:
-            df = df.limit(int(max_keys))
-        return df
+        path = self.resolve(alias)
+        tip = deltalog.latest_version(path)
+        index = self._file_index(path, valid=lambda ix: ix.version == tip)
+        rows = index.page(
+            alias, prefix or "", continuation_token or start_after, max_keys, delimiter
+        )
+        page = pa.table(list(zip(*rows)) or [()] * 4, schema=_LIST_PAGE_SCHEMA)
+        if not delimiter:
+            page = page.drop_columns(["is_common_prefix"])
+        return self.spark.createDataFrame(page)
 
     # -- writes & maintenance (S12/G2/G9) ----------------------------------
 
@@ -6223,9 +6269,7 @@ class Engine:
                 > self.large_listing_threshold
             ):
                 return False
-            live = self._snapshot_cache.get_or_compute(
-                ("live_files", path), lambda: deltalog._live_adds_no_spark(path)
-            )
+            live = self._file_index(path).adds
             return any(_is_foreign_path(r) for r in live)
 
         return self._snapshot_cache.get_or_compute(("foreign", path), compute)
@@ -6250,9 +6294,7 @@ class Engine:
         if not (has_rt or has_dv):
             return removes
         dv_map = self._dv_map(path) if has_dv else {}
-        live = self._snapshot_cache.get_or_compute(
-            ("live_files", path), lambda: deltalog._live_adds_no_spark(path)
-        )
+        live = self._file_index(path).adds
         out = []
         for r in removes:
             d = dv_map.get(r["path"])
@@ -6969,9 +7011,7 @@ class Engine:
         """Build the (adds, removes) action pair for freshly written DVs:
         remove the old (path, dv) identity, re-add with the new descriptor;
         fully-dead files (cardinality == numRecords) get a plain remove."""
-        live = self._snapshot_cache.get_or_compute(
-            ("live_files", path), lambda: deltalog._live_adds_no_spark(path)
-        )
+        live = self._file_index(path).adds
         adds, removes = [], []
         for d in descs:
             a = live[d["rel"]]

@@ -111,6 +111,8 @@ def local_df(spark: SparkSession, rows: list, schema) -> DataFrame:
     (32 under the bench profile), so a 1-row catalog listing becomes 32
     near-empty tasks — and a cross join of two of them 32x32 ≈ 1000 tasks of
     pure scheduler overhead. One slice keeps metadata surfaces at one task.
+    Each collect still runs a Python-worker job, so per-request surfaces
+    must not use it (build a local Arrow relation instead).
     """
     if not rows:
         return spark.createDataFrame([], schema)

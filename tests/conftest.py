@@ -45,6 +45,25 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn) -> (fn(), Spark jobs fn ran)``: read from the status
+    store once the listener bus drains (job ids are consecutive)."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def last_job_id():
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)  # newest first
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    def count(fn):
+        before = last_job_id()
+        out = fn()
+        return out, last_job_id() - before
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def lineitem(spark):
     from delta_lake_proxy_spark.io import load_table

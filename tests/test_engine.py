@@ -137,6 +137,31 @@ def test_authorize_file_matrix(spark, gov_table):
         eng2.authorize_file("gov", "u", "l_returnflag=A/ghost.parquet")
 
 
+def test_authorize_file_log_bypass_is_exact(spark, gov_table):
+    """Only ``_delta_log`` and keys inside it skip the ACL. A sibling named
+    like the log, or a ``..``/``.`` walk out of it, goes through the
+    membership check like any data key."""
+    eng = make_engine(spark, gov_table, allowed={"gov": [{"l_returnflag": "A"}]})
+    files = {r["partitionValues"]["l_returnflag"]: r["path"] for r in
+             eng.snapshot_files("gov").collect()}
+    assert eng.authorize_file("gov", "u", "_delta_log")
+    assert eng.authorize_file("gov", "u", "_delta_log/")
+    for key in (
+        f"_delta_log_x/{files['R']}",
+        f"_delta_log/../{files['R']}",
+        f"_delta_log/../{files['A']}",  # granted file, but not a live key
+        f"_delta_log/./../{files['R']}",
+        "_delta_log/../_delta_log/00000000000000000000.json",
+    ):
+        with pytest.raises(ForbiddenByPolicyError):
+            eng.authorize_file("gov", "u", key)
+    # ungoverned: not a live key, so 404 instead of a bypass 200
+    with pytest.raises(NoSuchKeyError):
+        make_engine(spark, gov_table).authorize_file(
+            "gov", "u", f"_delta_log_x/{files['R']}"
+        )
+
+
 def test_authorize_file_runs_zero_spark_jobs(spark, gov_table):
     """The per-request membership check is the reference's driver-side set
     lookup — it must never launch a Spark job. Severing eng.spark after

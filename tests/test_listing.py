@@ -100,3 +100,186 @@ def test_file_stats_schema(eng):
     assert len(rows) == 3
     for r in rows:
         assert r["size"] > 0 and r["last_modified"] is not None
+
+
+@pytest.fixture(scope="module")
+def churned(spark, lineitem, tmp_path_factory):
+    """A two-level partitioned table whose snapshot needs every replay
+    rule: a checkpoint, a JSON tail after it, and a file the tail removes."""
+    from delta_lake_proxy_spark import deltalog
+    from delta_lake_proxy_spark.engine import write_governed_table
+
+    path = str(tmp_path_factory.mktemp("listing") / "churned")
+    df = lineitem.select("l_orderkey", "l_returnflag", "l_linestatus")
+    write_governed_table(
+        spark, df.repartition(1), path, ["l_returnflag", "l_linestatus"]
+    )
+    eng = Engine(spark, EngineConfig(table_mapping={"t": path}, read_only=False))
+    eng.write_table("t", df.limit(50))
+    deltalog.write_checkpoint(spark, path)
+    eng.write_table("t", df.limit(20).repartition(2))
+    victim = sorted(deltalog._live_adds_no_spark(path))[0]
+    deltalog.write_commit(path, [], [{"path": victim, "dataChange": True}])
+    assert deltalog.last_checkpoint(path)["version"] == 1
+    return eng, path, victim
+
+
+def expected_page(files, prefix=None, start_after=None, max_keys=None,
+                  continuation_token=None, delimiter=None):
+    """ListObjectsV2 semantics stated directly: group every prefixed key,
+    keep grouped keys strictly after the token, sort, cut at max_keys."""
+    prefix = prefix or ""
+    after = continuation_token or start_after
+    rows = {}
+    for key, size, mtime in files:
+        if not key.startswith(prefix):
+            continue
+        pos = key.find(delimiter, len(prefix)) if delimiter else -1
+        if pos >= 0:
+            group = key[: pos + len(delimiter)]
+            rows[group] = (group, None, None, True)
+        else:
+            rows[key] = (key, size, mtime, False)
+    out = sorted(r for k, r in rows.items() if not after or k > after)
+    out = out[:max_keys] if max_keys is not None else out
+    return out if delimiter else [r[:3] for r in out]
+
+
+def snapshot_listing(spark, path):
+    """Alias-namespaced keys with size and mtime from the Spark log replay."""
+    from delta_lake_proxy_spark import deltalog
+
+    return [
+        ("t/" + r["path"], r["size"], r["modificationTime"])
+        for r in deltalog.snapshot_files(spark, path).collect()
+    ]
+
+
+def test_replay_fixture_has_removed_file(spark, churned):
+    eng, path, victim = churned
+    files = snapshot_listing(spark, path)
+    assert "t/" + victim not in {k for k, _, _ in files}
+    assert len(files) > 4
+    assert keys(eng.list_files("t")) == sorted(k for k, _, _ in files)
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        {},
+        {"prefix": "t/l_returnflag=N/"},
+        {"prefix": "t/l_returnflag=N"},
+        {"prefix": "t/zzz"},
+        {"max_keys": 0},
+        {"max_keys": 1},
+        {"max_keys": 10_000},
+        {"prefix": "t/l_returnflag=N/", "max_keys": 2},
+        {"delimiter": "/"},
+        {"prefix": "t/", "delimiter": "/"},
+        {"prefix": "t/", "delimiter": "="},
+        {"prefix": "t/l_returnflag=N/", "delimiter": "/"},
+        {"prefix": "t/l_returnflag=N/", "delimiter": "="},
+        {"prefix": "t/l_returnflag=A/l_linestatus=F/", "delimiter": "/"},
+        {"prefix": "t/", "delimiter": "/", "max_keys": 0},
+    ],
+)
+def test_listing_matches_spark_replay(spark, churned, kw):
+    eng, path, _ = churned
+    want = expected_page(snapshot_listing(spark, path), **kw)
+    assert [tuple(r) for r in eng.list_files("t", **kw).collect()] == want
+
+
+@pytest.mark.parametrize("delimiter", [None, "/", "="])
+@pytest.mark.parametrize("token", ["start_after", "continuation_token"])
+def test_strictly_after_matches_spark_replay(spark, churned, delimiter, token):
+    """Every key, every group and a key inside a group as the marker."""
+    eng, path, _ = churned
+    files = snapshot_listing(spark, path)
+    markers = sorted({k for k, _, _ in files}) + [
+        "t/", "t/l_returnflag=N/", "t/l_returnflag=N/l_linestatus=O/", "t/zzz"
+    ]
+    for after in markers:
+        kw = {"prefix": "t/", token: after, "delimiter": delimiter}
+        want = expected_page(files, **kw)
+        assert [tuple(r) for r in eng.list_files("t", **kw).collect()] == want, after
+
+
+@pytest.mark.parametrize(
+    "prefix, delimiter",
+    [("t/", "/"), ("t/l_returnflag=N/", "/"), ("t/l_returnflag=", "=")],
+)
+def test_delimiter_pages_chain_with_continuation_token(spark, churned, prefix,
+                                                       delimiter):
+    eng, path, _ = churned
+    want = expected_page(snapshot_listing(spark, path), prefix=prefix,
+                         delimiter=delimiter)
+    page1 = [tuple(r) for r in eng.list_files(
+        "t", prefix=prefix, delimiter=delimiter, max_keys=1).collect()]
+    page2 = [tuple(r) for r in eng.list_files(
+        "t", prefix=prefix, delimiter=delimiter, max_keys=len(want),
+        continuation_token=page1[-1][0]).collect()]
+    assert len(want) >= 2
+    assert page1 + page2 == want
+
+
+def test_empty_page_keeps_column_types(churned):
+    eng, _, _ = churned
+    assert eng.list_files("t", max_keys=0).dtypes == [
+        ("key", "string"), ("size", "bigint"), ("modificationTime", "bigint")
+    ]
+    assert eng.list_files("t", prefix="t/zzz", delimiter="/").dtypes == [
+        ("key", "string"), ("size", "bigint"), ("modificationTime", "bigint"),
+        ("is_common_prefix", "boolean"),
+    ]
+
+
+def test_list_and_get_run_zero_spark_jobs(spark, churned, count_jobs):
+    """LIST pages and GETs are driver-side lookups on a cold and on a warm
+    file index."""
+    _, path, _ = churned
+    eng = Engine(
+        spark,
+        EngineConfig(
+            table_mapping={"t": path},
+            allowed_partitions={"t": [{"l_returnflag": "N"}]},
+        ),
+    )
+    granted = next(k for k in keys(eng.list_files("t")) if "l_returnflag=N" in k)
+    for warm in (False, True):
+        if not warm:
+            eng.invalidate_caches()
+        rows, jobs = count_jobs(
+            lambda: eng.list_files("t", prefix="t/", max_keys=3).collect()
+        )
+        assert len(rows) == 3 and jobs == 0
+        rows, jobs = count_jobs(
+            lambda: eng.list_files("t", prefix="t/", delimiter="/").collect()
+        )
+        assert rows and jobs == 0
+        if not warm:
+            eng.invalidate_caches()
+        ok, jobs = count_jobs(lambda: eng.authorize_file("t", "u", granted[2:]))
+        assert ok is True and jobs == 0
+
+
+def test_list_sees_commit_written_behind_the_engine(spark, churned):
+    """A commit straight through the log writer, with no engine cache
+    invalidation, shows in the next LIST; the refreshed index is the one
+    GET reads."""
+    import os
+    import shutil
+
+    from delta_lake_proxy_spark import deltalog
+
+    eng, path, _ = churned
+    before = keys(eng.list_files("t"))
+    src = before[0][2:]
+    assert eng.authorize_file("t", "u", src)
+    rel = os.path.join(os.path.dirname(src), "part-behind-engine.parquet")
+    shutil.copyfile(os.path.join(path, src), os.path.join(path, rel))
+    deltalog.write_commit(
+        path, [deltalog.add_action_for(path, rel, ["l_returnflag", "l_linestatus"])]
+    )
+    after = keys(eng.list_files("t"))
+    assert after == sorted(before + ["t/" + rel])
+    assert eng.authorize_file("t", "u", rel)

@@ -108,9 +108,14 @@ def test_agg_group_partial_final(spark):
     assert "BatchEvalPython" not in p
 
 
-def test_file_surface_pages_take_ordered(spark):
+def test_file_surface_pages_are_local_relations(spark):
+    # the three listing pages come from the driver-side snapshot: local
+    # relations with no log scan, window or sort to build them
     p = plan_of("file_surface", spark)
-    assert p.count("TakeOrderedAndProject") >= 2  # both listing pages
+    legs = [ln for ln in p.splitlines() if ln.startswith("   :- ")]
+    assert len(legs) == 3 and all("LocalTableScan" in ln for ln in legs), p
+    for op in ("Sort", "Window", "TakeOrderedAndProject", "_delta_log"):
+        assert op not in p, op
     assert "CartesianProduct" not in p
 
 
