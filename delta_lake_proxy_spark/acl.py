@@ -261,5 +261,8 @@ class TTLCache:
             self._data.popitem(last=False)
         return value
 
+    def discard(self, key: Hashable) -> None:
+        self._data.pop(key, None)
+
     def invalidate(self) -> None:
         self._data.clear()

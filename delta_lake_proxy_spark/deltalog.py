@@ -22,6 +22,8 @@ through ``spark.read.json`` and therefore works against any Hadoop-supported FS)
 
 from __future__ import annotations
 
+import copy
+import functools
 import json
 import os
 import re
@@ -271,42 +273,8 @@ _STATS_ALL: set[str] | None = None
 
 
 def stats_columns(table_path: str) -> set[str] | None:
-    """PHYSICAL column names whose footer min/max belong in add-action
-    ``stats``, per the Delta data-skipping properties:
-    ``delta.dataSkippingStatsColumns`` (explicit logical-name list, wins)
-    else the first ``delta.dataSkippingNumIndexedCols`` schema columns
-    (Delta default 32; ``-1`` = no limit -> None). Logical names translate
-    through the column mapping because stats keys — like partitionValues
-    keys — are physical in mapped tables. ``numRecords`` is always kept;
-    this bounds only the min/max payload, which is what grows with schema
-    width."""
-    conf = table_configuration_no_spark(table_path)
-    try:
-        l2p = column_mapping(table_path)
-    except UnsupportedProtocolError:
-        l2p = {}
-    explicit = conf.get("delta.dataSkippingStatsColumns")
-    if explicit:
-        names = [c.strip().strip("`") for c in str(explicit).split(",") if c.strip()]
-        return {l2p.get(c, c) for c in names}
-    n_raw = str(conf.get("delta.dataSkippingNumIndexedCols", DEFAULT_NUM_INDEXED_COLS))
-    try:
-        n = int(n_raw)
-    except ValueError:
-        n = DEFAULT_NUM_INDEXED_COLS
-    if n < 0:
-        return _STATS_ALL
-    meta = table_metadata_no_spark(table_path)
-    if meta is None or not meta.get("schemaString"):
-        return _STATS_ALL  # pre-metadata commit: nothing to rank columns by
-    try:
-        fields = [
-            str(f["name"])
-            for f in json.loads(meta["schemaString"]).get("fields") or []
-        ]
-    except Exception:
-        return _STATS_ALL
-    return {l2p.get(c, c) for c in fields[:n]}
+    """The tip's stats columns (:meth:`Snapshot.stats_columns`)."""
+    return load_snapshot(table_path).stats_columns()
 
 
 def collect_file_stats(
@@ -430,6 +398,7 @@ def write_commit(
     collations_handled: bool = False,
     crc_fresh_adds: bool = False,
     crc_live_removes: bool = False,
+    snapshot: Snapshot | None = None,
 ) -> int:
     """Append one commit; returns the committed version.
 
@@ -460,6 +429,7 @@ def write_commit(
         collations_handled=collations_handled,
         crc_fresh_adds=crc_fresh_adds,
         crc_live_removes=crc_live_removes,
+        snapshot=snapshot,
     )
 
 
@@ -489,6 +459,7 @@ def write_commit_streamed(
     collations_handled: bool = False,
     crc_fresh_adds: bool = False,
     crc_live_removes: bool = False,
+    snapshot: Snapshot | None = None,
 ) -> int:
     """:func:`write_commit` for action sets too large to hold in driver
     memory: ``adds_fn`` / ``removes_fn`` are RE-CALLABLE factories returning
@@ -503,7 +474,14 @@ def write_commit_streamed(
     required by properties that must name their own enabling commit,
     e.g. ``delta.inCommitTimestampEnablementVersion/-Timestamp``, which a
     CAS retry would otherwise leave stale.
+
+    ``snapshot`` is the version the caller computed the commit against
+    (default: the tip, resolved here). Gates and carried-forward properties
+    come from it, and the first attempt targets ``snapshot.version + 1``:
+    a winner committed after the caller's snapshot meets the conflict
+    check below instead of being silently overwritten.
     """
+    snap = snapshot or load_snapshot(table_path)
     # Gate BEFORE any attempt: committing into a table that demands writer
     # capabilities we lack (constraints, generated columns, row tracking)
     # corrupts it for conforming clients. New tables (no logged protocol yet)
@@ -520,12 +498,13 @@ def write_commit_streamed(
         defaults_handled=defaults_handled,
         iceberg_handled=iceberg_handled,
         collations_handled=collations_handled,
+        snapshot=snap,
     )
     # rowTracking obligation: every commit adding files assigns fresh
     # baseRowIds above the high-water mark and advances it (enabled or
     # not — the spec's 'supported' contract). Pre-assigned ids (restore
     # re-adds, clone carries) pass through untouched.
-    rt_active = row_tracking_assign and row_tracking_maintainable(table_path)
+    rt_active = row_tracking_assign and snap.row_tracking_maintainable
     # Writer-2 TABLE PROPERTIES we must HONOR, not just version-gate:
     # column invariants require per-row enforcement — the Engine write
     # paths validate written rows against them (the same
@@ -533,20 +512,19 @@ def write_commit_streamed(
     # constraints, since both are row predicates checked at the same call
     # sites); raw commits cannot prove it and refuse. delta.appendOnly
     # forbids remove-carrying commits (checked as removes stream, below).
-    inv_col = _schema_has_invariants(table_path)
-    if inv_col is not None and not enforced_constraints:
+    if snap.invariants and not enforced_constraints:
         raise UnsupportedProtocolError(
             table_path,
-            f"column {inv_col!r} declares delta.invariants — this write "
+            f"column {next(iter(snap.invariants))!r} declares delta.invariants — this write "
             "path does not enforce row invariants (the Engine write paths "
             "do), so committing could violate the table's constraint "
             "contract",
         )
-    append_only = check_append_only(table_path)
+    append_only = snap.append_only
     if configuration is None and configuration_fn is None:
         # re-emitting metaData without the table's properties would STRIP
         # them (delta.appendOnly would silently turn off) — carry forward
-        configuration = table_configuration_no_spark(table_path)
+        configuration = snap.configuration
     os.makedirs(log_path(table_path), exist_ok=True)
     now_ms = int(time.time() * 1000)
     # per-attempt commit tally feeding the (optional, best-effort) version
@@ -605,7 +583,7 @@ def write_commit_streamed(
             # them before use (spec contract): timestamp_ntz / variant are
             # reader+writer features; collations is writer-only (binary
             # layout unchanged, old readers stay correct)
-            r_feats, w_feats = schema_protocol_demands(schema_json)
+            r_feats, w_feats = schema_protocol_demands(schema_json, table_path)
             proto0: dict = {"minReaderVersion": 1, "minWriterVersion": 2}
             if w_feats:
                 proto0 = {
@@ -735,7 +713,7 @@ def write_commit_streamed(
     # rules, _conflicts_with_winners) proves the winners' changes are
     # disjoint from the files this commit tombstones; otherwise the
     # conflict surfaces to the caller to recompute.
-    version = latest_version(table_path) + 1
+    version = snap.version + 1
     for _ in range(100):
         target = _commit_file(table_path, version)
         tmp = target + f".{uuid.uuid4().hex}.tmp"
@@ -756,7 +734,7 @@ def write_commit_streamed(
             try:
                 # version checksum: optional per the protocol — a failure to
                 # maintain it must never fail (or roll back) the commit
-                _write_version_checksum_after_commit(table_path, version, tally)
+                _write_version_checksum_after_commit(table_path, version, tally, snap)
             except Exception:
                 pass
             return version
@@ -889,21 +867,16 @@ def commit_dir_state(
     on_disk = set(_relative_data_files(table_path))
     tracked_adds: dict[str, dict] = {}
     tracked: set[str] = set()
-    if latest_version(table_path) >= 0:
-        tracked_adds = _live_adds_no_spark(table_path)
+    snap = load_snapshot(table_path)
+    if snap.version >= 0:
+        tracked_adds = _live_adds_no_spark(table_path, snapshot=snap)
         tracked = set(tracked_adds)
-        stats_cols = stats_columns(table_path)
+        stats_cols = snap.stats_columns()
     else:
         # creating commit: the schema being logged ranks the columns for
         # the default first-N stats bound
-        try:
-            fields = [
-                str(f["name"])
-                for f in json.loads(schema_json or "{}").get("fields") or []
-            ]
-            stats_cols = set(fields[:DEFAULT_NUM_INDEXED_COLS]) if fields else None
-        except Exception:
-            stats_cols = None
+        fields = _parse_fields(table_path, schema_json) or ()
+        stats_cols = {f["name"] for f in fields[:DEFAULT_NUM_INDEXED_COLS]} or None
     adds = []
     for rel in sorted(on_disk - tracked):
         full = os.path.join(table_path, rel)
@@ -932,10 +905,13 @@ def commit_dir_state(
         operation=operation,
         # adds are on_disk - tracked by construction: never live before
         crc_fresh_adds=True,
+        snapshot=snap,
     )
 
 
-def _live_adds_no_spark(table_path: str, max_version: int | None = None) -> dict[str, dict]:
+def _live_adds_no_spark(
+    table_path: str, max_version: int | None = None, snapshot: Snapshot | None = None
+) -> dict[str, dict]:
     """Driver-side snapshot replay: path -> latest live ``add`` action.
 
     CHECKPOINT-AWARE, exactly like :func:`snapshot_files`: when
@@ -945,9 +921,10 @@ def _live_adds_no_spark(table_path: str, max_version: int | None = None) -> dict
     authorization, the write-path reconcile, the governed Python DataSource)
     correct the day log cleanup prunes pre-checkpoint JSON commits.
     ``max_version`` bounds the replay (time travel / stream offsets); the
-    checkpoint seeds it only when not newer than the bound.
+    checkpoint seeds it only when not newer than the bound. ``snapshot``
+    (default: the tip) is the version whose protocol gates the replay.
     """
-    check_read_protocol(table_path)
+    (snapshot or load_snapshot(table_path)).check_read()
     from .dv import dv_unique_id
 
     # Reconciliation key is (path, deletionVector uniqueId) — the Delta
@@ -1085,44 +1062,21 @@ _KNOWN_ACTION_KEYS = {
 
 
 def configuration_at(table_path: str, version: int) -> dict[str, str]:
-    """Table configuration as of ``version``: the latest metaData action at
-    or below it (JSON commits / compactions bounded by ``max_version``,
-    checkpoint fallback when the tail below was cleaned). Driver-side, no
-    Spark job — the compaction writer resolves the RANGE-END configuration
-    with this, because the tip's may differ (a property toggled after the
-    range must not change how the range compacts)."""
-    meta = None
-    for _s, _e, fp in log_segments(table_path, max_version=version):
-        with open(fp, "r", encoding="utf-8") as f:
-            for line in f:
-                if '"metaData"' not in line[:64]:
-                    continue
-                m = json.loads(line).get("metaData")
-                if m is not None:
-                    meta = m
-    if meta is None:
+    """Table configuration as of ``version`` (:func:`load_snapshot` at that
+    version). Driver-side, no Spark job — the compaction writer resolves the
+    RANGE-END configuration with this, because the tip's may differ (a
+    property toggled after the range must not change how the range
+    compacts)."""
+    snap = load_snapshot(table_path, version)
+    if snap.metadata_action is None:
         ck = last_checkpoint(table_path)
-        if ck is not None and int(ck["version"]) <= version:
-            import pyarrow.parquet as pq
-
-            for ck_file in checkpoint_data_files(table_path, ck):
-                pf = pq.ParquetFile(ck_file)
-                if "metaData" not in pf.schema_arrow.names:
-                    continue
-                col = pq.read_table(ck_file, columns=["metaData"]).column("metaData")
-                for m in col.to_pylist():
-                    if m is not None and m.get("schemaString"):
-                        meta = m
-        elif ck is not None:
+        if ck is not None and int(ck["version"]) > version:
             # the pre-`version` metaData was cleaned and the only
             # checkpoint sits ABOVE the requested version: the exact
             # historical configuration is unrecoverable — serve the tip's
             # as best effort rather than claiming "no configuration"
-            return table_configuration_no_spark(table_path)
-    return {
-        str(k): str(v)
-        for k, v in ((meta or {}).get("configuration") or {}).items()
-    }
+            snap = load_snapshot(table_path)
+    return {str(k): str(v) for k, v in snap.configuration.items()}
 
 
 def write_log_compaction(table_path: str, start: int, end: int) -> str:
@@ -1275,100 +1229,483 @@ def estimate_snapshot_actions(table_path: str) -> int:
     return total
 
 
-def table_metadata_no_spark(
-    table_path: str, use_checksum: bool = True
-) -> dict[str, Any] | None:
-    """Driver-side :func:`table_metadata` (no Spark job): a tip version
-    checksum serves it from ONE file when present; otherwise JSON commits
-    (newest metaData wins) with checkpoint fallback after log cleanup. The
-    per-request read path resolves its schema this way — one request must
-    not cost a Spark job (or a log-tail replay) for metadata the reference
-    serves from its cache. Protocol-gated (check_read_protocol). In
-    NAME-mode column-mapped tables the schemaString's field names are
-    LOGICAL; the physical names the data files carry resolve via
-    :func:`column_mapping`."""
-    check_read_protocol(table_path)
-    if use_checksum:
-        crc = _tip_checksum(table_path)
-        if crc is not None and crc["metadata"].get("schemaString"):
-            m = crc["metadata"]
-            return {
-                "schemaString": m.get("schemaString"),
-                "partitionColumns": list(m.get("partitionColumns") or []),
-                "id": m.get("id"),
+def _parse_fields(table_path: str, schema_string: str | None) -> tuple[dict, ...] | None:
+    """The top-level fields of a ``schemaString``, parsed once. None for a
+    missing or ``{}`` schema and for JSON without ``fields`` (raw fixture
+    logs): no declared columns. Anything else that is not a list of named
+    field objects is corrupt metadata and raises — a table whose schema
+    cannot be read must not silently lose its invariants, generated
+    columns or feature demands."""
+    if not schema_string:
+        return None
+    try:
+        parsed = json.loads(schema_string)
+    except ValueError:
+        raise UnsupportedProtocolError(
+            table_path, "schemaString is not valid JSON — corrupt metadata"
+        ) from None
+    if not isinstance(parsed, dict):
+        raise UnsupportedProtocolError(
+            table_path, "schemaString is not a JSON object — corrupt metadata"
+        )
+    fields = parsed.get("fields")
+    if fields is None:
+        return None
+    if not isinstance(fields, list) or not all(
+        isinstance(f, dict) and isinstance(f.get("name"), str) for f in fields
+    ):
+        raise UnsupportedProtocolError(
+            table_path,
+            "schemaString fields are not a list of named field objects — "
+            "corrupt metadata",
+        )
+    return tuple(fields)
+
+
+def _invariant_sql(table_path: str, column: str, value: Any) -> str:
+    """The SQL of one ``delta.invariants`` value: the spec's JSON wrapper
+    ``{"expression": {"expression": "<sql>"}}``, or a bare SQL string
+    (older writers). A non-string, or JSON of any other shape, is corrupt
+    metadata."""
+    try:
+        parsed = json.loads(value) if isinstance(value, str) else None
+    except ValueError:
+        return value  # bare SQL string form
+    inner = parsed.get("expression") if isinstance(parsed, dict) else None
+    if isinstance(inner, dict) and isinstance(inner.get("expression"), str):
+        return inner["expression"]
+    raise UnsupportedProtocolError(
+        table_path,
+        f"column {column!r} carries a delta.invariants value that is not the "
+        '{"expression": {"expression": "<sql>"}} wrapper — corrupt metadata',
+    )
+
+
+class Snapshot:
+    """One table version: its protocol, ``metaData`` and schema, read by one
+    pass over the log and parsed once (Delta Lake paper, VLDB 2020: the
+    snapshot is the unit of isolation; the reference caches one
+    ``deltalake`` snapshot per table, ``src/main.rs:82-85``).
+
+    Built by :func:`load_snapshot` and never changed afterwards. The
+    schema-derived maps (column mapping, field ids, invariants, generated,
+    identity and default columns, collations, CHECK constraints, the
+    Iceberg-compat level) are computed from the one parse on first use. A
+    schemaString that is not JSON, or whose ``fields`` is not a list of named
+    objects, refuses at load with :class:`UnsupportedProtocolError` — so
+    every read and commit against that version refuses too.
+
+    An operation resolves the log tip once, at its start, and passes its
+    snapshot down: every gate, rule and scan of that operation sees this
+    version, and its commit attempt begins at ``version + 1`` (a winner
+    committed after the snapshot reaches the commit's conflict check).
+    ``Engine`` caches one entry per table path — this snapshot plus the
+    live-file index built from it — and every engine operation except GET
+    (``Engine.authorize_file``) tip-checks that entry at its start,
+    rebuilding it when a commit landed; engine commits drop it."""
+
+    def __init__(
+        self,
+        path: str,
+        version: int,
+        protocol: dict[str, Any] | None,
+        metadata: dict[str, Any] | None,
+    ):
+        self.path = path
+        self.version = version
+        self._protocol = protocol
+        # latest full metaData action, or None before the first commit
+        self.metadata_action = metadata
+        conf = (metadata or {}).get("configuration")
+        # pyarrow renders a checkpoint's map column as [(k, v), ...]
+        self._configuration: dict[str, str] = (
+            dict(conf) if isinstance(conf, dict) else dict(conf or [])
+        )
+        parsed = _parse_fields(path, (metadata or {}).get("schemaString"))
+        self.declares_schema = parsed is not None
+        self.fields: tuple[dict, ...] = parsed or ()
+
+    @property
+    def protocol(self) -> dict[str, Any] | None:
+        """A copy of the latest protocol action; None when the log records
+        none (raw fixture logs), which readers treat as reader 1 / writer 1."""
+        return copy.deepcopy(self._protocol)
+
+    @property
+    def configuration(self) -> dict[str, str]:
+        """A copy of the table properties (``metaData.configuration``)."""
+        return dict(self._configuration)
+
+    @property
+    def metadata(self) -> dict[str, Any] | None:
+        """``schemaString`` / ``partitionColumns`` / ``id`` of the metaData."""
+        m = self.metadata_action
+        if m is None:
+            return None
+        return {
+            "schemaString": m.get("schemaString"),
+            "partitionColumns": list(m.get("partitionColumns") or []),
+            "id": m.get("id"),
+        }
+
+    @property
+    def schema_string(self) -> str | None:
+        return (self.metadata_action or {}).get("schemaString")
+
+    @property
+    def partition_columns(self) -> list[str]:
+        return list((self.metadata_action or {}).get("partitionColumns") or [])
+
+    def flag(self, key: str) -> bool:
+        """Whether table property ``key`` is ``true``."""
+        return str(self._configuration.get(key, "")).strip().lower() == "true"
+
+    @functools.cached_property
+    def schema(self) -> T.StructType | None:
+        """The logged schema as a Spark ``StructType``; None when the log
+        declares no columns."""
+        if not self.declares_schema:
+            return None
+        try:
+            return T.StructType.fromJson({"type": "struct", "fields": list(self.fields)})
+        except (AssertionError, KeyError, TypeError, ValueError) as e:
+            raise UnsupportedProtocolError(
+                self.path, f"schemaString is not a valid schema ({e}) — corrupt metadata"
+            ) from None
+
+    @property
+    def reader_features(self) -> set[str]:
+        return set((self._protocol or {}).get("readerFeatures") or [])
+
+    @property
+    def writer_features(self) -> set[str]:
+        return set((self._protocol or {}).get("writerFeatures") or [])
+
+    @property
+    def deletion_vectors(self) -> bool:
+        """Whether the protocol declares the ``deletionVectors`` reader
+        feature — the gate that keeps scans of plain tables DV-free."""
+        return "deletionVectors" in self.reader_features
+
+    @property
+    def append_only(self) -> bool:
+        """``delta.appendOnly`` — writer protocol 2: commits that REMOVE
+        files must be refused."""
+        return self.flag("delta.appendOnly")
+
+    @property
+    def mapping_mode(self) -> str:
+        return str(self._configuration.get("delta.columnMapping.mode", "none")).lower()
+
+    @functools.cached_property
+    def column_mapping(self) -> dict[str, str]:
+        """Logical -> physical column-name map (``delta.columnMapping.mode``
+        name OR id): each top-level field's
+        ``delta.columnMapping.physicalName``. Physical names govern partition
+        directories, ``partitionValues`` keys and stats keys in both modes;
+        in id mode the parquet data columns additionally resolve by field id
+        (:attr:`field_ids`). Empty when the table has no mapping. Struct
+        columns map their nested fields too (:func:`physical_data_type`)."""
+        mode = self.mapping_mode
+        if mode in ("", "none"):
+            return {}
+        if mode not in ("name", "id"):
+            raise UnsupportedProtocolError(
+                self.path, f"columnMapping mode {mode!r} is not supported (name or id)"
+            )
+        out: dict[str, str] = {}
+        for f in self.fields:
+            phys = (f.get("metadata") or {}).get("delta.columnMapping.physicalName")
+            if not phys:
+                raise UnsupportedProtocolError(
+                    self.path,
+                    f"column {f['name']!r} lacks delta.columnMapping."
+                    f"physicalName in a {mode}-mapped table — malformed metadata",
+                )
+            out[f["name"]] = str(phys)
+        return out
+
+    @functools.cached_property
+    def field_ids(self) -> dict[str, int]:
+        """Logical -> parquet field id for ID-mode column mapping: the
+        ``delta.columnMapping.id`` field metadata, by which parquet data
+        columns MUST resolve in id mode. Empty otherwise."""
+        if self.mapping_mode != "id":
+            return {}
+        out: dict[str, int] = {}
+        for f in self.fields:
+            fid = (f.get("metadata") or {}).get("delta.columnMapping.id")
+            if fid is None:
+                raise UnsupportedProtocolError(
+                    self.path,
+                    f"column {f['name']!r} lacks delta.columnMapping.id "
+                    "in an id-mapped table — malformed metadata",
+                )
+            out[f["name"]] = int(fid)
+        return out
+
+    @functools.cached_property
+    def field_ids_any_mode(self) -> dict[str, int]:
+        """Logical -> ``delta.columnMapping.id`` in either mapping mode (the
+        icebergCompat write path needs them in name mode too); columns
+        without an id are absent."""
+        return {
+            f["name"]: int(f["metadata"]["delta.columnMapping.id"])
+            for f in self.fields
+            if (f.get("metadata") or {}).get("delta.columnMapping.id") is not None
+        }
+
+    @property
+    def mapping_has_struct(self) -> bool:
+        """True when a MAPPED table's schema contains struct columns (nested
+        physical names): the Spark scan paths handle these; the pyarrow
+        DataSource refuses with a pointer to Engine.read_table."""
+        return bool(self.column_mapping) and any(
+            _type_contains_struct(f.get("type")) for f in self.fields
+        )
+
+    def _field_meta(self, key: str) -> dict[str, Any]:
+        """``column name -> field metadata[key]`` for fields carrying it."""
+        return {
+            f["name"]: f["metadata"][key]
+            for f in self.fields
+            if key in (f.get("metadata") or {})
+        }
+
+    @functools.cached_property
+    def invariants(self) -> dict[str, str]:
+        """Column invariants (writer protocol 2): ``column -> SQL`` for every
+        top-level field whose metadata carries ``delta.invariants`` (see
+        :func:`_invariant_sql` for the accepted forms). Writers must abort a
+        commit when one evaluates to false for a written row —
+        ``Engine._enforce_check_constraints`` does; raw commits are refused
+        by :func:`write_commit_streamed`."""
+        return {
+            name: _invariant_sql(self.path, name, v)
+            for name, v in self._field_meta("delta.invariants").items()
+        }
+
+    @functools.cached_property
+    def generated(self) -> dict[str, str]:
+        """``column -> delta.generationExpression`` (writer protocol 4);
+        ``Engine.write_table`` computes or validates them, other commit
+        paths are refused by :func:`check_write_protocol`."""
+        return {
+            name: str(v)
+            for name, v in self._field_meta("delta.generationExpression").items()
+        }
+
+    @functools.cached_property
+    def identity(self) -> dict[str, dict]:
+        """``column -> {start, step, highWaterMark, allowExplicitInsert}``
+        for identity columns (writer 6 / ``identityColumns``; spec keys
+        ``delta.identity.*``). ``highWaterMark`` is None until the first
+        value is generated."""
+        out: dict[str, dict] = {}
+        for f in self.fields:
+            md = f.get("metadata") or {}
+            if not any(k.startswith("delta.identity.") for k in md):
+                continue
+            hwm = md.get("delta.identity.highWaterMark")
+            allow = md.get("delta.identity.allowExplicitInsert", False)
+            out[f["name"]] = {
+                "start": int(md.get("delta.identity.start", 1)),
+                "step": int(md.get("delta.identity.step", 1)),
+                "highWaterMark": int(hwm) if hwm is not None else None,
+                "allowExplicitInsert": (
+                    allow if isinstance(allow, bool) else str(allow).lower() == "true"
+                ),
             }
-    meta = None
-    for _s, _e, fp in log_segments(table_path):
+        return out
+
+    @functools.cached_property
+    def defaults(self) -> dict[str, str]:
+        """``column -> CURRENT_DEFAULT`` expression (``allowColumnDefaults``)."""
+        return {n: str(v) for n, v in self._field_meta("CURRENT_DEFAULT").items()}
+
+    @functools.cached_property
+    def collations(self) -> dict[str, str]:
+        """``column -> collation id`` (e.g. ``UNICODE_CI``) for top-level
+        string fields declared with a non-default collation (``collations``
+        writer feature, the spec's ``__COLLATIONS`` field-metadata form)."""
+        if "__COLLATIONS" not in (self.schema_string or ""):
+            return {}
+        return {
+            f.name: str(f.dataType.collation)
+            for f in self.schema.fields
+            if isinstance(f.dataType, T.StringType)
+            and getattr(f.dataType, "collation", "UTF8_BINARY") != "UTF8_BINARY"
+        }
+
+    @property
+    def constraints(self) -> dict[str, str]:
+        """CHECK constraints (``delta.constraints.<name>`` properties,
+        writer protocol 3), name -> SQL expression."""
+        prefix = "delta.constraints."
+        return {
+            k[len(prefix):]: v
+            for k, v in self._configuration.items()
+            if k.startswith(prefix)
+        }
+
+    @property
+    def iceberg_compat(self) -> int | None:
+        """The ACTIVE Iceberg-compatibility level (2, 1 or None): the
+        ``icebergCompatV1/V2`` features bite only while the matching
+        ``delta.enableIcebergCompatVn`` property is true. When active every
+        new data file must be Iceberg-readable (``Engine.write_table``'s
+        ``_prepare_iceberg_write``); raw commits are refused."""
+        if self.flag("delta.enableIcebergCompatV2"):
+            return 2
+        if self.flag("delta.enableIcebergCompatV1"):
+            return 1
+        return None
+
+    @property
+    def row_tracking_maintainable(self) -> bool:
+        """Engine writes can maintain rowTracking only when the table ALSO
+        declares ``domainMetadata`` (the high-water mark lives in the
+        ``delta.rowTracking`` domain); a rowTracking-only protocol is
+        malformed per the spec's dependency."""
+        return {"rowTracking", "domainMetadata"} <= self.writer_features
+
+    def stats_columns(self) -> set[str] | None:
+        """PHYSICAL column names whose footer min/max belong in add-action
+        ``stats``: ``delta.dataSkippingStatsColumns`` (explicit logical
+        list, wins) else the first ``delta.dataSkippingNumIndexedCols``
+        schema columns (Delta default 32; ``-1`` = no limit -> None).
+        ``numRecords`` is always kept; this bounds only the min/max
+        payload, which grows with schema width."""
+        conf = self._configuration
+        try:
+            l2p = self.column_mapping
+        except UnsupportedProtocolError:
+            l2p = {}
+        explicit = conf.get("delta.dataSkippingStatsColumns")
+        if explicit:
+            names = [c.strip().strip("`") for c in str(explicit).split(",") if c.strip()]
+            return {l2p.get(c, c) for c in names}
+        n_raw = str(conf.get("delta.dataSkippingNumIndexedCols", DEFAULT_NUM_INDEXED_COLS))
+        try:
+            n = int(n_raw)
+        except ValueError:
+            n = DEFAULT_NUM_INDEXED_COLS
+        if n < 0 or not self.schema_string:
+            return _STATS_ALL  # no limit, or nothing to rank columns by
+        return {l2p.get(f["name"], f["name"]) for f in self.fields[:n]}
+
+    def check_read(self) -> None:
+        """Refuse to REPLAY a table whose protocol this engine cannot honor:
+        a table replayed without honoring its reader demands would return
+        WRONG ROWS — resurrected DV-deleted rows, physical column names —
+        not an error. Matches ``deltalake::open_table``'s refusal (ref
+        ``src/main.rs:357``). Absent protocol (raw fixture logs) = reader 1.
+
+        Honored beyond version 1: reader 2 / the ``columnMapping`` reader
+        feature in NAME and ID mode, including nested struct fields
+        (:func:`physical_data_type`), plus the reader-3 features in
+        ``SUPPORTED_READER_FEATURES``; anything else refuses."""
+        if self._protocol is None:
+            return
+        reader = int(self._protocol.get("minReaderVersion") or 1)
+        features = self.reader_features
+        reader_ok = (
+            reader <= SUPPORTED_READER_VERSION
+            or (reader == 2 and not features)
+            or (reader == 3 and features <= SUPPORTED_READER_FEATURES)
+        )
+        if reader_ok and reader > SUPPORTED_READER_VERSION:
+            reader_ok = self.mapping_mode in ("none", "name", "id")
+        if not reader_ok:
+            managed = sorted(features & CATALOG_COMMIT_FEATURES)
+            if managed:
+                _refuse_catalog_managed(self.path, managed, "reader")
+            raise UnsupportedProtocolError(
+                self.path,
+                f"table requires minReaderVersion={reader}"
+                + (f" with readerFeatures={sorted(features)}" if features else "")
+                + f"; this engine supports reader version {SUPPORTED_READER_VERSION}, "
+                "plus column mapping (name and id modes) and deletion vectors",
+            )
+
+
+def load_snapshot(
+    table_path: str, version: int | None = None, use_checksum: bool = True
+) -> Snapshot:
+    """The :class:`Snapshot` at ``version`` (default: the log tip, resolved
+    here — the one :func:`latest_version` call of an operation), with no
+    Spark job. A version checksum at that version serves protocol and
+    metaData from ONE file; otherwise one pass over the JSON commits and
+    log compactions (newest action wins), with the checkpoint as fallback
+    for what log cleanup pruned. ``use_checksum=False`` forces the replay
+    (checksum validation compares the two)."""
+    if version is None:
+        version = latest_version(table_path)
+    if version < 0:
+        return Snapshot(table_path, version, None, None)
+    crc = read_version_checksum(table_path, version) if use_checksum else None
+    if (
+        crc is not None
+        and crc["metadata"].get("schemaString")
+        and crc["protocol"].get("minReaderVersion") is not None
+    ):
+        return Snapshot(table_path, version, crc["protocol"], crc["metadata"])
+    found: dict[str, dict | None] = {"protocol": None, "metaData": None}
+    for _s, _e, fp in log_segments(table_path, max_version=version):
         with open(fp, "r", encoding="utf-8") as f:
             for line in f:
                 # cheap prefix probe before json.loads: action objects are
-                # single-key, so a metaData action names its key in the
-                # first bytes of the line — add/remove lines never parse
-                if '"metaData"' not in line[:64]:
-                    continue
-                m = json.loads(line).get("metaData")
-                if m is not None:
-                    meta = m
-    if meta is None:
-        ck = last_checkpoint(table_path)
-        if ck is None:
-            return None
+                # single-key, so protocol/metaData actions name their key in
+                # the first bytes of the line — add/remove lines never parse
+                head = line[:64]
+                for key in ("metaData", "protocol"):
+                    if f'"{key}"' in head:
+                        a = json.loads(line).get(key)
+                        if a is not None:
+                            found[key] = a
+    missing = [k for k, v in found.items() if v is None]
+    ck = last_checkpoint(table_path) if missing else None
+    if ck is not None and int(ck["version"]) <= version:
+        # the carrying commit was cleaned up: the checkpoint keeps it
         import pyarrow.parquet as pq
 
+        required = {"protocol": "minReaderVersion", "metaData": "schemaString"}
         for ck_file in checkpoint_data_files(table_path, ck):
-            pf = pq.ParquetFile(ck_file)
-            if "metaData" not in pf.schema_arrow.names:
+            names = pq.ParquetFile(ck_file).schema_arrow.names
+            cols = [k for k in missing if k in names]
+            if not cols:
                 continue
-            for m in pq.read_table(ck_file, columns=["metaData"]).column("metaData").to_pylist():
-                if m is not None and m.get("schemaString"):
-                    meta = m
-        if meta is None:
-            return None
-    return {
-        "schemaString": meta.get("schemaString"),
-        "partitionColumns": list(meta.get("partitionColumns") or []),
-        "id": meta.get("id"),
-    }
+            tbl = pq.read_table(ck_file, columns=cols)
+            for k in cols:
+                for a in tbl.column(k).to_pylist():
+                    if a is not None and a.get(required[k]) is not None:
+                        found[k] = a
+    return Snapshot(table_path, version, found["protocol"], found["metaData"])
+
+
+def table_metadata_no_spark(
+    table_path: str, use_checksum: bool = True
+) -> dict[str, Any] | None:
+    """The tip's ``schemaString`` / ``partitionColumns`` / ``id``, read-gated
+    (:meth:`Snapshot.check_read`); see :func:`load_snapshot`."""
+    snap = load_snapshot(table_path, use_checksum=use_checksum)
+    snap.check_read()
+    return snap.metadata
 
 
 def table_protocol_no_spark(
     table_path: str, use_checksum: bool = True
 ) -> dict[str, Any] | None:
-    """Latest ``protocol`` action, driver-side (no Spark job): a tip version
-    checksum serves it from ONE file when present; otherwise JSON commits
-    (protocol upgrades are strictly newer commits) with checkpoint fallback
-    after log cleanup pruned the commit that carried it. ``None`` when the
-    log exists but records no protocol (raw fixture logs) — callers treat
-    that as the minimum (reader 1 / writer 1), like Delta's own default."""
-    if use_checksum:
-        crc = _tip_checksum(table_path)
-        if crc is not None and crc["protocol"].get("minReaderVersion") is not None:
-            return crc["protocol"]
-    proto = None
-    for _s, _e, fp in log_segments(table_path):
-        with open(fp, "r", encoding="utf-8") as f:
-            for line in f:
-                # action objects are single-key: a protocol action names
-                # its key in the first bytes of the line (cheap probe)
-                if '"protocol"' not in line[:64]:
-                    continue
-                p = json.loads(line).get("protocol")
-                if p is not None:
-                    proto = p
-    if proto is None:
-        ck = last_checkpoint(table_path)
-        if ck is None:
-            return None
-        import pyarrow.parquet as pq
+    """The tip's latest ``protocol`` action; None for raw fixture logs."""
+    return load_snapshot(table_path, use_checksum=use_checksum).protocol
 
-        for ck_file in checkpoint_data_files(table_path, ck):
-            pf = pq.ParquetFile(ck_file)
-            if "protocol" not in pf.schema_arrow.names:
-                continue
-            for p in pq.read_table(ck_file, columns=["protocol"]).column("protocol").to_pylist():
-                if p is not None and p.get("minReaderVersion") is not None:
-                    proto = p
-    return proto
+
+def table_configuration_no_spark(
+    table_path: str, use_checksum: bool = True
+) -> dict[str, str]:
+    """The tip's ``metaData.configuration`` (table properties); empty when
+    absent."""
+    return load_snapshot(table_path, use_checksum=use_checksum).configuration
 
 
 # Reader capabilities beyond version 1 this engine IMPLEMENTS: column
@@ -1449,48 +1786,8 @@ def _refuse_catalog_managed(table_path: str, managed: list[str], verb: str) -> N
 
 
 def check_read_protocol(table_path: str) -> None:
-    """Refuse to REPLAY a table whose protocol this engine cannot honor: a
-    table replayed without honoring its reader demands would return WRONG
-    ROWS — resurrected DV-deleted rows, physical column names — not an
-    error. Matches ``deltalake::open_table``'s refusal (ref
-    ``src/main.rs:357``). Absent protocol (raw fixture logs) = reader 1.
-
-    Honored beyond version 1: reader 2 / the ``columnMapping`` reader
-    feature in NAME mode (physical-name translation —
-    :func:`column_mapping`) and ID mode (parquet field-id resolution —
-    :func:`column_mapping_field_ids`), both including nested struct fields
-    (:func:`physical_data_type`), plus the reader-3 features in
-    ``SUPPORTED_READER_FEATURES``; anything else refuses."""
-    proto = table_protocol_no_spark(table_path)
-    if proto is None:
-        return
-    reader = int(proto.get("minReaderVersion") or 1)
-    features = set(proto.get("readerFeatures") or [])
-    reader_ok = (
-        reader <= SUPPORTED_READER_VERSION
-        or (reader == 2 and not features)
-        or (reader == 3 and features <= SUPPORTED_READER_FEATURES)
-    )
-    if reader_ok and reader > SUPPORTED_READER_VERSION:
-        # column mapping readable in NAME mode (physical-name resolution)
-        # and ID mode (parquet field-id resolution)
-        mode = str(
-            table_configuration_no_spark(table_path).get(
-                "delta.columnMapping.mode", "none"
-            )
-        ).lower()
-        reader_ok = mode in ("none", "name", "id")
-    if not reader_ok:
-        managed = sorted(features & CATALOG_COMMIT_FEATURES)
-        if managed:
-            _refuse_catalog_managed(table_path, managed, "reader")
-        raise UnsupportedProtocolError(
-            table_path,
-            f"table requires minReaderVersion={reader}"
-            + (f" with readerFeatures={sorted(features)}" if features else "")
-            + f"; this engine supports reader version {SUPPORTED_READER_VERSION}, "
-            "plus column mapping (name and id modes) and deletion vectors",
-        )
+    """Read gate of the tip snapshot (:meth:`Snapshot.check_read`)."""
+    load_snapshot(table_path).check_read()
 
 
 def _type_contains_struct(t: Any) -> bool:
@@ -1575,105 +1872,14 @@ def physical_data_type(
     return dt
 
 
-def mapping_has_struct(table_path: str) -> bool:
-    """True when a MAPPED table's schema contains struct columns (nested
-    physical names): the Spark scan paths handle these; the pyarrow
-    DataSource does not and refuses with a pointer to Engine.read_table."""
-    if not column_mapping(table_path):
-        return False
-    meta = table_metadata_no_spark(table_path) or {}
-    try:
-        fields = json.loads(meta.get("schemaString") or "{}").get("fields") or []
-    except Exception:
-        return False
-    return any(_type_contains_struct(f.get("type")) for f in fields)
-
-
 def column_mapping(table_path: str) -> dict[str, str]:
-    """Logical -> physical column-name map for a column-mapped table
-    (``delta.columnMapping.mode`` name OR id): each top-level field's
-    ``delta.columnMapping.physicalName`` metadata. Physical names govern
-    partition directories, ``partitionValues`` keys, and stats keys in BOTH
-    modes; in id mode the parquet DATA columns additionally resolve by
-    field id (:func:`column_mapping_field_ids`). Empty when the table has
-    no mapping. Struct columns map their NESTED fields too — the Spark
-    scan paths rebuild the nested physical type via
-    :func:`physical_data_type` and rename back with a positional struct
-    cast; the pyarrow DataSource refuses such tables with a pointer to
-    ``Engine.read_table``."""
-    conf = table_configuration_no_spark(table_path)
-    mode = str(conf.get("delta.columnMapping.mode", "none")).lower()
-    if mode in ("", "none"):
-        return {}
-    if mode not in ("name", "id"):
-        raise UnsupportedProtocolError(
-            table_path,
-            f"columnMapping mode {mode!r} is not supported (name or id)",
-        )
-    meta = table_metadata_no_spark(table_path) or {}
-    try:
-        fields = json.loads(meta.get("schemaString") or "{}").get("fields") or []
-    except Exception:
-        fields = []
-    out: dict[str, str] = {}
-    for f in fields:
-        phys = (f.get("metadata") or {}).get("delta.columnMapping.physicalName")
-        if not phys:
-            raise UnsupportedProtocolError(
-                table_path,
-                f"column {f.get('name')!r} lacks delta.columnMapping."
-                f"physicalName in a {mode}-mapped table — malformed metadata",
-            )
-        out[str(f["name"])] = str(phys)
-    return out
+    """The tip's logical -> physical column map (:attr:`Snapshot.column_mapping`)."""
+    return load_snapshot(table_path).column_mapping
 
 
 def column_mapping_field_ids(table_path: str) -> dict[str, int]:
-    """Logical -> parquet field id for ID-mode column mapping
-    (``delta.columnMapping.mode=id``): the ``delta.columnMapping.id`` field
-    metadata, by which parquet data columns MUST be resolved in id mode
-    (the file's column names are not authoritative). Empty for name-mode
-    and unmapped tables."""
-    conf = table_configuration_no_spark(table_path)
-    if str(conf.get("delta.columnMapping.mode", "none")).lower() != "id":
-        return {}
-    meta = table_metadata_no_spark(table_path) or {}
-    try:
-        fields = json.loads(meta.get("schemaString") or "{}").get("fields") or []
-    except Exception:
-        fields = []
-    out: dict[str, int] = {}
-    for f in fields:
-        fid = (f.get("metadata") or {}).get("delta.columnMapping.id")
-        if fid is None:
-            raise UnsupportedProtocolError(
-                table_path,
-                f"column {f.get('name')!r} lacks delta.columnMapping.id "
-                "in an id-mapped table — malformed metadata",
-            )
-        out[str(f["name"])] = int(fid)
-    return out
-
-
-def column_field_ids_any_mode(table_path: str) -> dict[str, int]:
-    """Logical -> ``delta.columnMapping.id`` for ANY mapped table (name or
-    id mode — the spec assigns ids in both). Read-side resolution only
-    needs them in id mode (:func:`column_mapping_field_ids`); the
-    icebergCompat WRITE path needs them in name mode too, because Iceberg
-    resolves parquet columns by field id regardless of the Delta mapping
-    mode. Columns without an id are simply absent (caller decides whether
-    that refuses)."""
-    meta = table_metadata_no_spark(table_path) or {}
-    try:
-        fields = json.loads(meta.get("schemaString") or "{}").get("fields") or []
-    except Exception:
-        fields = []
-    out: dict[str, int] = {}
-    for f in fields:
-        fid = (f.get("metadata") or {}).get("delta.columnMapping.id")
-        if fid is not None:
-            out[str(f["name"])] = int(fid)
-    return out
+    """The tip's id-mode field ids (:attr:`Snapshot.field_ids`)."""
+    return load_snapshot(table_path).field_ids
 
 
 def translate_dnf(dnf, l2p: dict[str, str]):
@@ -1686,149 +1892,33 @@ def translate_dnf(dnf, l2p: dict[str, str]):
 
 
 def declared_constraints(table_path: str) -> dict[str, str]:
-    """CHECK constraints declared as ``delta.constraints.<name>`` table
-    properties (Delta writer protocol 3), name -> SQL expression."""
-    prefix = "delta.constraints."
-    return {
-        k[len(prefix):]: v
-        for k, v in table_configuration_no_spark(table_path).items()
-        if k.startswith(prefix)
-    }
+    """The tip's CHECK constraints (:attr:`Snapshot.constraints`)."""
+    return load_snapshot(table_path).constraints
 
 
 def declared_invariants(table_path: str) -> dict[str, str]:
-    """Column invariants (Delta writer protocol 2): ``column name -> SQL
-    expression`` for every TOP-LEVEL schema field whose metadata carries
-    ``delta.invariants``. The protocol serializes the value as a JSON
-    wrapper ``{"expression": {"expression": "<sql>"}}``; a bare SQL string
-    is accepted too (older writers emitted it). Writers must abort a commit
-    when an invariant expression evaluates to false for any written row —
-    ``Engine._enforce_check_constraints`` does; raw commits cannot prove it
-    and are refused by :func:`write_commit_streamed` when any are declared."""
-    meta = table_metadata_no_spark(table_path)
-    raw = (meta or {}).get("schemaString")
-    if not raw or raw == "{}":
-        return {}
-    try:
-        fields = json.loads(raw).get("fields") or []
-    except Exception:
-        return {}
-    out: dict[str, str] = {}
-    for f in fields:
-        v = (f.get("metadata") or {}).get("delta.invariants")
-        if v is None:
-            continue
-        sql = str(v)
-        try:
-            parsed = json.loads(v)
-            if isinstance(parsed, dict):
-                inner = parsed.get("expression")
-                if isinstance(inner, dict) and "expression" in inner:
-                    sql = str(inner["expression"])
-                elif isinstance(inner, str):
-                    sql = inner
-        except (TypeError, ValueError):
-            pass  # bare SQL string form
-        out[str(f["name"])] = sql
-    return out
-
-
-def generated_columns(table_path: str) -> dict[str, str]:
-    """``column name -> generation SQL expression`` for every schema field
-    carrying ``delta.generationExpression`` (Delta writer protocol 4). A
-    conforming writer must either compute these for each written row or
-    prove the provided values satisfy them — ``Engine.write_table`` does
-    (``_apply_generated_columns``); commit paths that cannot prove it are
-    refused by :func:`check_write_protocol`."""
-    meta = table_metadata_no_spark(table_path)
-    raw = (meta or {}).get("schemaString")
-    if not raw or raw == "{}":
-        return {}
-    try:
-        fields = json.loads(raw).get("fields") or []
-    except Exception:
-        return {}
-    return {
-        str(f["name"]): str((f.get("metadata") or {})["delta.generationExpression"])
-        for f in fields
-        if "delta.generationExpression" in (f.get("metadata") or {})
-    }
-
-
-def _schema_has_generated_columns(table_path: str) -> str | None:
-    """First generated-column name, else None (see :func:`generated_columns`)."""
-    gens = generated_columns(table_path)
-    return next(iter(sorted(gens)), None)
-
-
-def _schema_fields(table_path: str) -> list[dict]:
-    meta = table_metadata_no_spark(table_path)
-    raw = (meta or {}).get("schemaString")
-    if not raw or raw == "{}":
-        return []
-    try:
-        return json.loads(raw).get("fields") or []
-    except Exception:
-        return []
+    """The tip's column invariants (:attr:`Snapshot.invariants`)."""
+    return load_snapshot(table_path).invariants
 
 
 def identity_columns(table_path: str) -> dict[str, dict]:
-    """``column name -> {start, step, highWaterMark, allowExplicitInsert}``
-    for every schema field carrying identity metadata (Delta identity
-    columns: writer version 6 / writer feature ``identityColumns``; spec
-    keys ``delta.identity.start/step/highWaterMark/allowExplicitInsert``).
-    ``highWaterMark`` is None until the first value is generated. A
-    conforming writer must GENERATE values beyond the mark for rows that
-    omit the column, advance the mark in the same commit, and refuse
-    explicit values unless ``allowExplicitInsert`` (GENERATED BY DEFAULT)
-    — ``Engine.write_table`` does; raw commits are refused by
-    :func:`check_write_protocol`."""
-    out: dict[str, dict] = {}
-    for f in _schema_fields(table_path):
-        md = f.get("metadata") or {}
-        if not any(k.startswith("delta.identity.") for k in md):
-            continue
-        hwm = md.get("delta.identity.highWaterMark")
-        allow = md.get("delta.identity.allowExplicitInsert", False)
-        out[str(f["name"])] = {
-            "start": int(md.get("delta.identity.start", 1)),
-            "step": int(md.get("delta.identity.step", 1)),
-            "highWaterMark": int(hwm) if hwm is not None else None,
-            "allowExplicitInsert": (
-                allow if isinstance(allow, bool) else str(allow).lower() == "true"
-            ),
-        }
-    return out
+    """The tip's identity columns (:attr:`Snapshot.identity`)."""
+    return load_snapshot(table_path).identity
 
 
-def column_defaults(table_path: str) -> dict[str, str]:
-    """``column name -> default SQL expression`` for every schema field
-    carrying a ``CURRENT_DEFAULT`` metadata key (Delta default columns:
-    writer feature ``allowColumnDefaults``). A conforming writer applies
-    the default to rows that omit the column on INSERT —
-    ``Engine.write_table`` does; raw commits into declaring tables are
-    refused by :func:`check_write_protocol`."""
-    out: dict[str, str] = {}
-    for f in _schema_fields(table_path):
-        md = f.get("metadata") or {}
-        if "CURRENT_DEFAULT" in md:
-            out[str(f["name"])] = str(md["CURRENT_DEFAULT"])
-    return out
-
-
-def schema_protocol_demands(schema_json: str | None) -> tuple[set, set]:
+def schema_protocol_demands(
+    schema_json: str | None, table_path: str = ""
+) -> tuple[set, set]:
     """(reader features, writer features) a schema's TYPES demand
     (Delta spec: a table may only use ``timestamp_ntz`` / ``variant`` /
     collated strings when the matching protocol feature is declared).
     Walks the parsed type tree, so nested occurrences count and a column
-    merely NAMED "variant" does not."""
+    merely NAMED "variant" does not. A corrupt schema refuses (see
+    :func:`_parse_fields`)."""
     r_feats: set = set()
     w_feats: set = set()
-    if not schema_json:
-        return r_feats, w_feats
-    try:
-        st = T.StructType.fromJson(json.loads(schema_json))
-    except Exception:
+    st = Snapshot(table_path, -1, None, {"schemaString": schema_json}).schema
+    if st is None:
         return r_feats, w_feats
 
     def walk(dt) -> None:
@@ -1855,53 +1945,17 @@ def schema_protocol_demands(schema_json: str | None) -> tuple[set, set]:
 
 
 def collated_columns(table_path: str) -> dict[str, str]:
-    """``column name -> collation id`` (e.g. ``UNICODE_CI``) for every
-    top-level string field the logged schema declares with a non-default
-    collation (Delta ``collations`` writer feature; schemaString carries
-    the spec's ``__COLLATIONS`` field-metadata form, which Spark 4 parses
-    natively into collated ``StringType``). Binary layout is unchanged —
-    the feature changes COMPARISON semantics, which
-    ``Engine._apply_collations`` restores on reads and before write-time
-    constraint/generated-column evaluation."""
-    meta = table_metadata_no_spark(table_path) or {}
-    raw = meta.get("schemaString")
-    if not raw or "__COLLATIONS" not in raw:
-        return {}
-    try:
-        st = T.StructType.fromJson(json.loads(raw))
-    except Exception:
-        return {}
-    out: dict[str, str] = {}
-    for f in st.fields:
-        dt = f.dataType
-        coll = getattr(dt, "collation", None)
-        if isinstance(dt, T.StringType) and coll and coll != "UTF8_BINARY":
-            out[f.name] = str(coll)
-    return out
+    """The tip's collated columns (:attr:`Snapshot.collations`)."""
+    return load_snapshot(table_path).collations
 
 
 def iceberg_compat_version(table_path: str) -> int | None:
-    """The ACTIVE Iceberg-compatibility level (2, 1, or None): the
-    ``icebergCompatV1/V2`` writer features bite only while the matching
-    ``delta.enableIcebergCompatV1/V2`` property is true (the spec's
-    activation contract — a listed-but-disabled feature demands nothing).
-    When active, every NEW data file must be Iceberg-readable: parquet
-    field ids in the footers, int64 timestamps (never INT96), partition
-    values materialized in the files, deletion vectors inactive, and
-    column mapping on. ``Engine.write_table`` honors these (see
-    ``_prepare_iceberg_write``); raw commits cannot prove it and are
-    refused — reference tables with UniForm arrive through the same
-    ``deltalake`` machinery (ref ``src/main.rs:357``)."""
-    conf = table_configuration_no_spark(table_path)
-    if str(conf.get("delta.enableIcebergCompatV2", "")).lower() == "true":
-        return 2
-    if str(conf.get("delta.enableIcebergCompatV1", "")).lower() == "true":
-        return 1
-    return None
+    """The tip's active Iceberg-compat level (:attr:`Snapshot.iceberg_compat`)."""
+    return load_snapshot(table_path).iceberg_compat
 
 
 def advance_identity_hwm(
-    table_path: str,
+    snap: Snapshot,
     schema_json: str | None,
     adds: list[dict],
     l2p: dict[str, str] | None = None,
@@ -1913,10 +1967,11 @@ def advance_identity_hwm(
     An add whose stats omit the column cannot prove the mark — refuse
     rather than under-advance (a stale mark would let a later generation
     collide with committed values)."""
-    idents = identity_columns(table_path)
+    table_path = snap.path
+    idents = snap.identity
     if not idents or not adds:
         return schema_json, False
-    raw = schema_json or (table_metadata_no_spark(table_path) or {}).get("schemaString")
+    raw = schema_json or snap.schema_string
     if not raw:
         return schema_json, False
     schema = json.loads(raw)
@@ -1966,6 +2021,7 @@ def check_write_protocol(
     defaults_handled: bool = False,
     iceberg_handled: bool = False,
     collations_handled: bool = False,
+    snapshot: Snapshot | None = None,
 ) -> None:
     """Refuse to COMMIT into a table demanding writer capabilities this
     engine lacks. Accepted: writer <= 2; writer 3 when the caller VALIDATED
@@ -1979,10 +2035,13 @@ def check_write_protocol(
     demand per-row work this engine does not do). Committing without
     honoring those corrupts the table for every conforming client. A writer
     must also be able to read the table it rewrites, so the read gate
-    applies too."""
-    check_read_protocol(table_path)
-    conf = table_configuration_no_spark(table_path)
-    mode = str(conf.get("delta.columnMapping.mode", "none")).lower()
+    applies too. ``snapshot`` is the version the commit was computed
+    against (default: the tip)."""
+    snap = snapshot or load_snapshot(table_path)
+    snap.check_read()
+    mode = snap.mapping_mode
+    generated_ok = enforced_generated or not snap.generated
+    cdf_ok = cdf_handled or not snap.flag("delta.enableChangeDataFeed")
     if mode not in ("", "none"):
         if not mapped_write:
             raise UnsupportedProtocolError(
@@ -1998,24 +2057,20 @@ def check_write_protocol(
                 f"writing to {mode}-mode mapped tables is not implemented "
                 "(name mode is)",
             )
-        gen = _schema_has_generated_columns(table_path)
-        if gen is not None and not enforced_generated:
+        if not generated_ok:
             raise UnsupportedProtocolError(
                 table_path,
-                f"column {gen!r} declares delta.generationExpression — this "
+                f"column {min(snap.generated)!r} declares delta.generationExpression — this "
                 "write path does not compute generated columns "
                 "(Engine.write_table does)",
             )
-        if (
-            str(conf.get("delta.enableChangeDataFeed", "")).lower() == "true"
-            and not cdf_handled
-        ):
+        if not cdf_ok:
             raise UnsupportedProtocolError(
                 table_path,
                 "delta.enableChangeDataFeed=true requires change files this "
                 "write path does not produce (the Engine DML/write paths do)",
             )
-    proto = table_protocol_no_spark(table_path)
+    proto = snap.protocol
     if proto is None:
         return
     writer = int(proto.get("minWriterVersion") or 1)
@@ -2071,27 +2126,23 @@ def check_write_protocol(
             "typeWidening",
         )
     ]
-    constraints_ok = enforced_constraints or not declared_constraints(table_path)
-    generated_ok = enforced_generated or _schema_has_generated_columns(table_path) is None
-    cdf_ok = cdf_handled or (
-        str(conf.get("delta.enableChangeDataFeed", "")).lower() != "true"
-    )
+    constraints_ok = enforced_constraints or not snap.constraints
     # identity columns: honored when the caller generates values beyond the
     # high water mark for omitted columns, advances the mark in the same
     # commit, and polices allowExplicitInsert (the Engine write paths do,
     # via _apply_identity_columns + _commit_moved's stats-derived mark
     # advance); vacuously honored when no field declares identity metadata.
-    identity_ok = identity_handled or not identity_columns(table_path)
+    identity_ok = identity_handled or not snap.identity
     # default columns: honored when the caller applies CURRENT_DEFAULT
     # expressions to omitted columns on insert (Engine.write_table does);
     # vacuous without declared defaults.
-    defaults_ok = defaults_handled or not column_defaults(table_path)
+    defaults_ok = defaults_handled or not snap.defaults
     # icebergCompatV1/V2: honored when the caller wrote Iceberg-readable
     # data files (field ids, int64 timestamps, materialized partition
     # values, no DVs — Engine.write_table's _prepare_iceberg_write);
     # vacuous while the delta.enableIcebergCompatVn property is off (the
     # spec's activation contract). Raw commits into an ACTIVE table refuse.
-    iceberg_ok = iceberg_handled or iceberg_compat_version(table_path) is None
+    iceberg_ok = iceberg_handled or snap.iceberg_compat is None
     if iceberg_ok:
         features = [
             f for f in features if f not in ("icebergCompatV1", "icebergCompatV2")
@@ -2103,7 +2154,7 @@ def check_write_protocol(
     # does both (the logged schema stays authoritative and
     # _apply_collations retypes columns before evaluation); vacuous when
     # no field declares one. Raw commits into declaring tables refuse.
-    if collations_handled or not collated_columns(table_path):
+    if collations_handled or not snap.collations:
         features = [f for f in features if f != "collations"]
     # Legacy-capability features a writer-7 protocol enumerates explicitly:
     # honored exactly when the corresponding legacy check passes (the same
@@ -2122,7 +2173,7 @@ def check_write_protocol(
         features = [f for f in features if f != "identityColumns"]
     if defaults_ok:
         features = [f for f in features if f != "allowColumnDefaults"]
-    if enforced_constraints or _schema_has_invariants(table_path) is None:
+    if enforced_constraints or not snap.invariants:
         features = [f for f in features if f != "invariants"]
     writer_ok = writer <= SUPPORTED_WRITER_VERSION or (writer == 3 and constraints_ok)
     if (
@@ -2211,65 +2262,6 @@ def check_write_protocol(
         )
 
 
-def table_configuration_no_spark(
-    table_path: str, use_checksum: bool = True
-) -> dict[str, str]:
-    """Latest ``metaData.configuration`` map, driver-side (table properties
-    like ``delta.appendOnly``); empty when absent. Served from the tip
-    version checksum when one exists (O(1), no log-tail replay)."""
-    if use_checksum:
-        crc = _tip_checksum(table_path)
-        if crc is not None and crc["metadata"].get("schemaString"):
-            return dict(crc["metadata"].get("configuration") or {})
-    conf: dict[str, str] | None = None
-    for _s, _e, fp in log_segments(table_path):
-        with open(fp, "r", encoding="utf-8") as f:
-            for line in f:
-                if '"metaData"' not in line[:64]:
-                    continue
-                m = json.loads(line).get("metaData")
-                if m is not None:
-                    conf = dict(m.get("configuration") or {})
-    if conf is None:
-        # metaData commit cleaned up: the checkpoint carries it forward
-        ck = last_checkpoint(table_path)
-        if ck is not None:
-            import pyarrow.parquet as pq
-
-            for ck_file in checkpoint_data_files(table_path, ck):
-                pf = pq.ParquetFile(ck_file)
-                if "metaData" not in pf.schema_arrow.names:
-                    continue
-                for m in (
-                    pq.read_table(ck_file, columns=["metaData"]).column("metaData").to_pylist()
-                ):
-                    if m is not None and m.get("schemaString"):
-                        mc = m.get("configuration")
-                        conf = dict(mc) if isinstance(mc, dict) else dict(mc or [])
-    return conf or {}
-
-
-def _schema_has_invariants(table_path: str) -> str | None:
-    """Name of the first column carrying a ``delta.invariants`` constraint
-    in the table's current schema, else None. Writer protocol 2 REQUIRES
-    enforcing invariants on every written row; the Engine write paths do
-    (``_enforce_check_constraints`` validates them with CHECK constraints),
-    while write paths that cannot prove enforcement refuse rather than
-    silently violate the constraint contract."""
-    meta = table_metadata_no_spark(table_path)
-    raw = (meta or {}).get("schemaString")
-    if not raw or raw == "{}":
-        return None
-    try:
-        fields = json.loads(raw).get("fields") or []
-    except Exception:
-        return None
-    for f in fields:
-        if "delta.invariants" in (f.get("metadata") or {}):
-            return str(f.get("name"))
-    return None
-
-
 _INTERVAL_UNIT_HOURS = {
     "millisecond": 1 / 3_600_000, "milliseconds": 1 / 3_600_000,
     "second": 1 / 3600, "seconds": 1 / 3600,
@@ -2299,20 +2291,9 @@ def parse_interval_hours(s: str | None) -> float | None:
     return None if unit is None else qty * unit
 
 
-def retention_hours_property(table_path: str, prop: str) -> float | None:
-    """Hours from a retention table property (``delta.logRetentionDuration``
-    / ``delta.deletedFileRetentionDuration``), or None when unset."""
-    return parse_interval_hours(
-        table_configuration_no_spark(table_path).get(prop)
-    )
-
-
 def check_append_only(table_path: str) -> bool:
-    """True when the table's ``delta.appendOnly`` property is set — writer
-    protocol 2 semantics: commits that REMOVE files must be refused."""
-    return str(
-        table_configuration_no_spark(table_path).get("delta.appendOnly", "")
-    ).strip().lower() == "true"
+    """The tip's ``delta.appendOnly`` (:attr:`Snapshot.append_only`)."""
+    return load_snapshot(table_path).append_only
 
 
 def check_protocol_action(table_path: str, proto: dict[str, Any]) -> None:
@@ -2323,20 +2304,7 @@ def check_protocol_action(table_path: str, proto: dict[str, Any]) -> None:
     handled file-locally by the partitions, and a column-mapping enable
     necessarily rewrites metaData, which the stream's schema-change
     detection fails separately (restart re-resolves the mapping)."""
-    reader = int(proto.get("minReaderVersion") or 1)
-    features = set(proto.get("readerFeatures") or [])
-    reader_ok = (
-        reader <= SUPPORTED_READER_VERSION
-        or (reader == 2 and not features)
-        or (reader == 3 and features <= SUPPORTED_READER_FEATURES)
-    )
-    if not reader_ok:
-        raise UnsupportedProtocolError(
-            table_path,
-            f"protocol upgraded to minReaderVersion={reader}"
-            + (f" with readerFeatures={sorted(features)}" if features else "")
-            + " — this engine cannot continue reading",
-        )
+    Snapshot(table_path, -1, proto, None).check_read()
 
 
 # ---------------------------------------------------------------------------
@@ -2420,32 +2388,11 @@ def live_domain_metadata(
 ROW_TRACKING_DOMAIN = "delta.rowTracking"
 
 
-def has_row_tracking(table_path: str) -> bool:
-    """Whether the table's protocol declares the ``rowTracking`` writer
-    feature (fresh row ids must be assigned on every commit that adds
-    files, enabled or not — the spec's 'supported' obligation)."""
-    proto = table_protocol_no_spark(table_path) or {}
-    return "rowTracking" in (proto.get("writerFeatures") or [])
-
-
-def row_tracking_maintainable(table_path: str) -> bool:
-    """Engine writes can maintain rowTracking only when the table ALSO
-    declares ``domainMetadata`` (the high-water mark lives in the
-    ``delta.rowTracking`` domain; emitting a domain action into a table
-    that does not declare the feature would violate its protocol). A
-    rowTracking-only protocol is malformed per the spec's dependency —
-    refuse writes rather than guess."""
-    proto = table_protocol_no_spark(table_path) or {}
-    feats = set(proto.get("writerFeatures") or [])
-    return "rowTracking" in feats and "domainMetadata" in feats
-
-
 def row_tracking_enabled(table_path: str) -> bool:
     """``delta.enableRowTracking=true``: row ids are part of the table's
     contract and must be PRESERVED by operations that do not logically
     change rows (compaction, and the rewritten survivors of DML)."""
-    conf = table_configuration_no_spark(table_path)
-    return str(conf.get("delta.enableRowTracking", "")).lower() == "true"
+    return load_snapshot(table_path).flag("delta.enableRowTracking")
 
 
 def row_id_high_water_mark(table_path: str) -> int:
@@ -2573,22 +2520,11 @@ def read_version_checksum(table_path: str, version: int) -> dict[str, Any] | Non
     return data
 
 
-# bound at module load: the staleness guard must see the REAL tip even
-# under test instrumentation that patches deltalog.latest_version to
-# simulate a stale read in the commit CAS loop — the resolvers' guard is
-# not the subject of those races
-_latest_version_unpatched = latest_version
-
-
 def _tip_checksum(table_path: str) -> dict[str, Any] | None:
-    """The crc of the CURRENT tip version, else None. Staleness guard: a
-    crc below the tip describes an older snapshot (e.g. a foreign writer
-    committed without writing one) and must never short-circuit a
-    resolver."""
-    v = _latest_version_unpatched(table_path)
-    if v < 0:
-        return None
-    return read_version_checksum(table_path, v)
+    """The crc of the CURRENT tip version, else None: a crc below the tip
+    describes an older snapshot and must never serve a resolver."""
+    v = latest_version(table_path)
+    return read_version_checksum(table_path, v) if v >= 0 else None
 
 
 def _write_crc_atomic(table_path: str, version: int, crc: dict[str, Any]) -> None:
@@ -2616,7 +2552,7 @@ def _apply_domain(live: dict[str, dict], dm: dict | None) -> None:
 
 
 def _write_version_checksum_after_commit(
-    table_path: str, version: int, t: dict[str, Any]
+    table_path: str, version: int, t: dict[str, Any], snapshot: Snapshot | None = None
 ) -> None:
     """Maintain the crc chain incrementally from the predecessor's crc plus
     THIS commit's tally — O(commit), never O(table):
@@ -2632,7 +2568,8 @@ def _write_version_checksum_after_commit(
     Any gap (no predecessor crc, an unresolvable tombstone, a capped
     streamed remove set) SKIPS writing — a later
     :func:`write_version_checksum` backfill restarts the chain. The file is
-    optional; this function must never make a commit fail."""
+    optional; this function must never make a commit fail. ``snapshot``
+    is the committer's (already protocol-gated) snapshot."""
     if version == 0:
         prev: dict[str, Any] = {
             "tableSizeBytes": 0,
@@ -2667,7 +2604,9 @@ def _write_version_checksum_after_commit(
     if needs_snapshot:
         if t.get("removes_capped") or t.get("adds_capped"):
             return  # over-cap streamed action set: backfill later instead
-        live_prev = _live_adds_no_spark(table_path, max_version=version - 1)
+        live_prev = _live_adds_no_spark(
+            table_path, max_version=version - 1, snapshot=snapshot
+        )
         state = {p: a.get("size") for p, a in live_prev.items()}
         for p in t.get("remove_paths") or []:
             state.pop(p, None)
@@ -2757,8 +2696,8 @@ def _compose_checksum(
     """A full crc dict from the replay resolvers (crc fast paths bypassed)
     plus externally-computed file counters — shared by the driver-side
     backfill and the checkpoint writers' distributed self-heal."""
-    metadata = _raw_metadata_replay(table_path)
-    protocol = table_protocol_no_spark(table_path, use_checksum=False)
+    replayed = load_snapshot(table_path, use_checksum=False)
+    metadata, protocol = replayed.metadata_action, replayed.protocol
     if metadata is None or protocol is None:
         raise ValueError(
             f"{table_path} resolves no metaData/protocol — cannot checksum"
@@ -2834,10 +2773,10 @@ def validate_version_checksum(table_path: str) -> dict[str, Any]:
         mismatches["numFiles"] = (int(crc["numFiles"]), len(live))
     if int(crc["tableSizeBytes"]) != sizes:
         mismatches["tableSizeBytes"] = (int(crc["tableSizeBytes"]), sizes)
-    proto = table_protocol_no_spark(table_path, use_checksum=False)
+    replayed = load_snapshot(table_path, use_checksum=False)
+    proto, meta = replayed.protocol, replayed.metadata_action
     if _drop_none_keys(crc.get("protocol")) != _drop_none_keys(proto):
         mismatches["protocol"] = (crc.get("protocol"), proto)
-    meta = _raw_metadata_replay(table_path)
     if (crc.get("metadata") or {}).get("schemaString") != (meta or {}).get(
         "schemaString"
     ):
@@ -2858,44 +2797,6 @@ def validate_version_checksum(table_path: str) -> dict[str, Any]:
         if gotd != wantd:
             mismatches["domainMetadata"] = (gotd, wantd)
     return {"version": v, "ok": not mismatches, "mismatches": mismatches}
-
-
-def _raw_metadata_replay(table_path: str) -> dict[str, Any] | None:
-    """Latest FULL metaData action from the log/checkpoint (the crc stores
-    the whole action, not the projected view table_metadata_no_spark
-    serves)."""
-    meta = None
-    for _s, _e, fp in log_segments(table_path):
-        with open(fp, "r", encoding="utf-8") as f:
-            for line in f:
-                if '"metaData"' not in line[:64]:
-                    continue
-                m = json.loads(line).get("metaData")
-                if m is not None:
-                    meta = m
-    if meta is None:
-        ck = last_checkpoint(table_path)
-        if ck is not None:
-            import pyarrow.parquet as pq
-
-            for ck_file in checkpoint_data_files(table_path, ck):
-                pf = pq.ParquetFile(ck_file)
-                if "metaData" not in pf.schema_arrow.names:
-                    continue
-                for m in (
-                    pq.read_table(ck_file, columns=["metaData"])
-                    .column("metaData")
-                    .to_pylist()
-                ):
-                    if m is not None and m.get("schemaString"):
-                        cfg = m.get("configuration")
-                        if cfg is not None and not isinstance(cfg, dict):
-                            m["configuration"] = dict(cfg)
-                        pc = m.get("partitionColumns")
-                        if pc is not None and not isinstance(pc, list):
-                            m["partitionColumns"] = list(pc)
-                        meta = m
-    return meta
 
 
 def version_at_timestamp(
@@ -3110,11 +3011,11 @@ def write_checkpoint(
     .parquet`` (parts recorded in ``_last_checkpoint``): the write
     parallelizes across tasks and no single file grows with the table.
     """
-    version = latest_version(table_path)
+    snap = load_snapshot(table_path)
+    version = snap.version
     if version < 0:
         raise ValueError(f"no commits to checkpoint at {table_path}")
-    proto = table_protocol_no_spark(table_path) or {}
-    if "v2Checkpoint" in (proto.get("readerFeatures") or []):
+    if "v2Checkpoint" in snap.reader_features:
         # the v2Checkpoint feature FORBIDS classic checkpoints (readers of
         # the table may rely on v2 resolution) — write the v2 form instead
         return write_checkpoint_v2(spark, table_path, max_actions_per_part)
@@ -3170,7 +3071,7 @@ def write_checkpoint(
                             "format": {"provider": "parquet"},
                             "schemaString": meta["schemaString"],
                             "partitionColumns": meta["partitionColumns"],
-                            "configuration": table_configuration_no_spark(table_path),
+                            "configuration": snap.configuration,
                             "createdTime": None,
                         },
                         None,
@@ -3307,7 +3208,8 @@ def write_checkpoint_v2(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    version = latest_version(table_path)
+    snap = load_snapshot(table_path)
+    version = snap.version
     if version < 0:
         raise ValueError(f"no commits to checkpoint at {table_path}")
     live = snapshot_files(spark, table_path, version=version)
@@ -3356,11 +3258,8 @@ def write_checkpoint_v2(
         import shutil as _shutil
 
         _shutil.rmtree(tmp_dir, ignore_errors=True)
-    proto = table_protocol_no_spark(table_path) or {
-        "minReaderVersion": 1,
-        "minWriterVersion": 2,
-    }
-    meta = table_metadata_no_spark(table_path)
+    proto = snap.protocol or {"minReaderVersion": 1, "minWriterVersion": 2}
+    meta = snap.metadata
     txns = all_txn_versions(table_path)
     domains = live_domain_metadata(table_path)
     n_rows = (

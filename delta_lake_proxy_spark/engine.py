@@ -199,16 +199,76 @@ _LIST_PAGE_SCHEMA = pa.schema(
 
 
 class _FileIndex:
-    """One table version's live files on the driver: the snapshot GET, LIST
-    and the enumerated scan all read (ref snapshot cache, src/main.rs:82-85).
-    The sorted alias-namespaced keys are built on the first LIST."""
+    """The engine's one snapshot-cache entry per table path (ref snapshot
+    cache, src/main.rs:82-85): a :class:`deltalog.Snapshot` plus what GET,
+    LIST, the enumerated scan and DML derive from it — the live ``add`` map,
+    the deletion-vector map, the scan's file list, the foreign-file flag and
+    the sorted alias-namespaced keys — each built on first use, so an append
+    never replays the live files."""
 
-    __slots__ = ("version", "adds", "_keys")
+    __slots__ = ("snapshot", "_adds", "_dv_map", "_scan", "_foreign", "_keys")
 
-    def __init__(self, path: str):
-        self.version = deltalog.latest_version(path)
-        self.adds = deltalog._live_adds_no_spark(path, max_version=self.version)
+    def __init__(self, snapshot: deltalog.Snapshot):
+        self.snapshot = snapshot
+        self._adds: dict[str, dict] | None = None
+        self._dv_map: dict[str, dict] | None = None
+        self._scan = None
+        self._foreign: bool | None = None
         self._keys: dict[str, list[str]] = {}
+
+    @property
+    def path(self) -> str:
+        return self.snapshot.path
+
+    @property
+    def version(self) -> int:
+        return self.snapshot.version
+
+    @property
+    def adds(self) -> dict[str, dict]:
+        """rel path -> live ``add`` action (driver-side, checkpoint-aware)."""
+        if self._adds is None:
+            self._adds = deltalog._live_adds_no_spark(
+                self.path, max_version=self.version, snapshot=self.snapshot
+            )
+        return self._adds
+
+    @property
+    def dv_map(self) -> dict[str, dict]:
+        """rel path -> deletionVector descriptor; empty for plain tables."""
+        if self._dv_map is None:
+            self._dv_map = (
+                {
+                    rel: dict(a["deletionVector"])
+                    for rel, a in self.adds.items()
+                    if a.get("deletionVector")
+                    and a["deletionVector"].get("storageType")
+                }
+                if self.snapshot.deletion_vectors
+                else {}
+            )
+        return self._dv_map
+
+    def scan_files(self, limit: int):
+        """Absolute paths of the live files, or ``_TOO_MANY_FILES`` past
+        ``limit`` — guarded by a metadata-only action-count estimate so an
+        over-threshold table never materializes on the driver."""
+        if self._scan is None:
+            if deltalog.estimate_snapshot_actions(self.path) > limit or len(self.adds) > limit:
+                self._scan = _TOO_MANY_FILES
+            else:
+                self._scan = [os.path.join(self.path, r) for r in sorted(self.adds)]
+        return self._scan
+
+    def foreign(self, limit: int) -> bool:
+        """Whether any live file sits OUTSIDE the table root (shallow clone).
+        An over-threshold snapshot answers False — the broad DML paths refuse
+        foreign references on their own."""
+        if self._foreign is None:
+            self._foreign = self.scan_files(limit) is not _TOO_MANY_FILES and any(
+                _is_foreign_path(r) for r in self.adds
+            )
+        return self._foreign
 
     def page(
         self,
@@ -342,8 +402,9 @@ class Engine:
         self.config = config
         self.permissions_df = permissions_df
         self._acl_cache = acl.TTLCache(config.acl_cache_size, config.acl_cache_ttl_s)
-        # live-file-list memo per table path — the reference's Delta snapshot
-        # cache (20 entries x 120 s, src/main.rs:82-85); invalidated on write.
+        # one _FileIndex per table path — the reference's Delta snapshot
+        # cache (20 entries x 120 s, src/main.rs:82-85); tip-checked by every
+        # operation but GET, dropped by every engine commit (_commit)
         self._snapshot_cache = acl.TTLCache(20, 120.0)
         self.large_listing_threshold = LARGE_LISTING_THRESHOLD
         self.listing_join_broadcast_limit = LISTING_JOIN_BROADCAST_LIMIT
@@ -451,9 +512,15 @@ class Engine:
         (Delta ``timestampAsOf``: epoch seconds, or an ISO-8601 string read
         as UTC) resolves to the last version committed at or before that
         time — within retained history (see ``deltalog.version_at_timestamp``).
+
+        One snapshot per call: the log tip is resolved once, at the start
+        (a commit written behind the engine shows here at once), and the
+        scan, its schema, column mapping, deletion vectors and collations
+        all come from that one cached entry.
         """
         self.counters["queries_served"] += 1
         path = self.resolve(alias)
+        ix = self._file_index(path)
         dnf = self.resolved_dnf(alias, user)
         pred = acl.compile_dnf(dnf)
         # ACL configured but every map empty => deny-all (pred is lit(False));
@@ -469,17 +536,17 @@ class Engine:
                 self.spark, path, _to_epoch_millis(timestamp_as_of)
             )
         if with_row_ids:
-            df = self._with_row_ids(path, version=version)
+            df = self._with_row_ids(ix, version=version)
         else:
-            df = self._read_data(path, version=version)
+            df = self._read_data(path, version=version, ix=ix)
         if pred is not None:
             # ACL BEFORE collation re-typing: partition-value comparison is
             # byte-exact directory matching, never collation-aware
             df = df.filter(pred)
         # no ACL configured => allow everything (src/main.rs:576)
-        return self._apply_collations(path, df)
+        return self._apply_collations(ix.snapshot, df)
 
-    def _with_row_ids(self, path: str, version: int | None = None) -> DataFrame:
+    def _with_row_ids(self, ix: _FileIndex, version: int | None = None) -> DataFrame:
         """Scan with materialized ``_row_id`` / ``_row_commit_version``
         (Delta rowTracking, fresh-id form): keep the raw file URI and
         physical row index through the scan (the same plumbing the
@@ -487,7 +554,8 @@ class Engine:
         (path -> baseRowId, defaultRowCommitVersion) map from the snapshot
         replay. Files without a baseRowId yield null ids (spec: row ids
         unavailable for them)."""
-        if not deltalog.has_row_tracking(path):
+        path = ix.path
+        if "rowTracking" not in ix.snapshot.writer_features:
             raise UnsupportedProtocolError(
                 path,
                 "with_row_ids requires the rowTracking writer feature on "
@@ -495,7 +563,7 @@ class Engine:
             )
         try:
             df = self._read_data(
-                path, version=version, keep_file_col=True, keep_pos=True
+                path, version=version, keep_file_col=True, keep_pos=True, ix=ix
             )
         except _NeedsEnumeratedScan:
             raise ValueError(
@@ -703,7 +771,9 @@ class Engine:
             (F.col("version") > F.lit(int(from_version)))
             & (F.col("version") <= F.lit(to_version))
         )
-        schema = self._table_schema(path)
+        snap = self._snapshot(path)
+        snap.check_read()
+        schema = snap.schema
         limit = self.large_listing_threshold
         actions = (
             log.select(
@@ -767,7 +837,7 @@ class Engine:
         # mapped tables: data and change files carry PHYSICAL column names
         # (this engine's DML stages them that way too) — read physical,
         # serve logical
-        phys_schema, l2p = self._physical_schema(path, schema)
+        phys_schema, l2p = self._physical_schema(snap, schema)
         reader = self.spark.read.option("basePath", path)
         if phys_schema is not None:
             reader = reader.schema(phys_schema)
@@ -812,7 +882,7 @@ class Engine:
             for part in parts_df[1:]:
                 out = out.unionByName(part)
             return out
-        empty = self._empty_table(path)
+        empty = self._empty_table(snap)
         return empty.withColumns(
             {
                 "_change_type": F.lit(None).cast("string"),
@@ -852,8 +922,9 @@ class Engine:
         Spark jobs — the whole DESCRIBE becomes a driver-side read);
         otherwise from the snapshot-replay aggregate."""
         path = self.resolve(alias)
-        meta = deltalog.table_metadata_no_spark(path) or {}
-        proto = deltalog.table_protocol_no_spark(path) or {}
+        snap = self._snapshot(path)
+        meta = snap.metadata or {}
+        proto = snap.protocol or {}
         crc = deltalog._tip_checksum(path)
         if crc is not None:
             n, b = int(crc["numFiles"]), int(crc["tableSizeBytes"])
@@ -874,7 +945,7 @@ class Engine:
             list(meta.get("partitionColumns") or []),
             n,
             b,
-            deltalog.table_configuration_no_spark(path),
+            snap.configuration,
             int(proto.get("minReaderVersion") or 1),
             int(proto.get("minWriterVersion") or 1),
         )
@@ -905,10 +976,11 @@ class Engine:
                     "validates existing rows first"
                 )
         path = self.resolve(alias)
+        snap = self._snapshot(path)
         if (
             str(properties.get("delta.enableDeletionVectors", "")).lower()
             == "true"
-            and not self._dv_protocol(path)
+            and not snap.deletion_vectors
         ):
             # the property alone never authorizes DV actions: a (1,2) table
             # with the property set would accept DV-writing DML whose
@@ -922,17 +994,17 @@ class Engine:
                 "protocol feature — use enable_deletion_vectors(), which "
                 "upgrades to (3,7)+deletionVectors in the same commit",
             )
-        conf = deltalog.table_configuration_no_spark(path)
+        conf = snap.configuration
         conf.update({str(k): str(v) for k, v in properties.items()})
         for k in unset or []:
             conf.pop(k, None)
-        meta = deltalog.table_metadata_no_spark(path) or {}
+        meta = snap.metadata or {}
         # enabling CDF demands writer protocol 4 (Delta semantics): upgrade
         # in the SAME commit so a raw/non-CDF-producing writer refuses from
         # this version on instead of committing change-less DML
         protocol_action = None
         if str(conf.get("delta.enableChangeDataFeed", "")).lower() == "true":
-            proto = deltalog.table_protocol_no_spark(path) or {}
+            proto = snap.protocol or {}
             writer = int(proto.get("minWriterVersion") or 1)
             wfeats = list(proto.get("writerFeatures") or [])
             if writer < 4:
@@ -945,7 +1017,7 @@ class Engine:
                 # demand must be APPENDED there (an append never drops a
                 # declared capability, so the no-clobber rule is preserved)
                 protocol_action = {**proto, "writerFeatures": wfeats + ["changeDataFeed"]}
-        version = deltalog.write_commit_streamed(
+        version = self._commit(
             path,
             lambda: iter(()),
             None,
@@ -960,11 +1032,10 @@ class Engine:
             cdf_handled=True,
             # a metadata-only commit adds/removes no files, so DV identity
             # maintenance is vacuously satisfied on declared-DV tables
-            dv_write=self._dv_protocol(path),
+            dv_write=snap.deletion_vectors,
             protocol_action=protocol_action,
             row_tracking_assign=True,
         )
-        self._snapshot_cache.invalidate()
         return version
 
     def add_check_constraint(self, alias: str, name: str, sql: str) -> int:
@@ -982,13 +1053,13 @@ class Engine:
                 f"cannot add CHECK constraint {name!r} ({sql}): existing "
                 "rows violate it"
             )
-        conf = deltalog.table_configuration_no_spark(path)
+        snap = self._snapshot(path)
+        conf = snap.configuration
         conf[f"delta.constraints.{name}"] = str(sql)
-        meta = deltalog.table_metadata_no_spark(path) or {}
-        version = deltalog.write_commit(
+        meta = snap.metadata or {}
+        version = self._commit(
             path,
-            [],
-            [],
+            lambda: iter(()),
             schema_json=meta.get("schemaString"),
             partition_cols=list(meta.get("partitionColumns") or []),
             operation="ADD CONSTRAINT",
@@ -996,7 +1067,6 @@ class Engine:
             enforced_constraints=True,
             row_tracking_assign=True,
         )
-        self._snapshot_cache.invalidate()
         return version
 
     def restore(
@@ -1082,7 +1152,7 @@ class Engine:
                         ]
                 yield rm
 
-        new_version = deltalog.write_commit_streamed(
+        new_version = self._commit(
             path,
             add_rows,
             remove_rows,
@@ -1095,10 +1165,9 @@ class Engine:
             identity_handled=True,
             defaults_handled=True,
             cdf_handled=True,
-            dv_write=self._dv_protocol(path),
+            dv_write=self._snapshot(path).deletion_vectors,
             row_tracking_assign=True,
         )
-        self._snapshot_cache.invalidate()
         return new_version
 
     def clone_table(
@@ -1129,11 +1198,12 @@ class Engine:
         if self.config.read_only:
             raise ReadOnlyError(alias)
         src = self.resolve(alias)
-        deltalog.check_read_protocol(src)
+        src_snap = self._snapshot(src)
+        src_snap.check_read()
         if deltalog.latest_version(dst_path) >= 0:
             raise ValueError(f"clone destination {dst_path} is already a table")
-        meta = deltalog.table_metadata_no_spark(src) or {}
-        src_proto = deltalog.table_protocol_no_spark(src)
+        meta = src_snap.metadata or {}
+        src_proto = src_snap.protocol
         snap = deltalog.snapshot_files(self.spark, src, version=version)
         from delta_lake_proxy_spark import dv as dv_mod
 
@@ -1186,14 +1256,14 @@ class Engine:
         # domain would violate the preserve-domains obligation this engine
         # enforces for its own checkpoints
         domains = deltalog.live_domain_metadata(src)
-        v = deltalog.write_commit_streamed(
+        v = self._commit(
             dst_path,
             adds_fn,
             None,
             schema_json=meta.get("schemaString"),
             partition_cols=list(meta.get("partitionColumns") or []),
             operation="CLONE",
-            configuration=deltalog.table_configuration_no_spark(src),
+            configuration=src_snap.configuration,
             enforced_constraints=True,  # no rows written; source rows were valid
             enforced_generated=True,
             identity_handled=True,
@@ -1206,7 +1276,6 @@ class Engine:
         )
         if target_alias:
             self.config.table_mapping[target_alias] = dst_path
-        self._snapshot_cache.invalidate()
         return v
 
     def create_governed_view(
@@ -1355,7 +1424,7 @@ class Engine:
         window_added: set[str] = set()
         retract: dict[str, dict] = {}
         saw_dml = False
-        meta = deltalog.table_metadata_no_spark(src_path) or {}
+        meta = self._snapshot(src_path).metadata or {}
         has_parts = bool(meta.get("partitionColumns"))
         base_adds: dict[str, dict] | None = None  # lazy pv-recovery replay
         for v in range(indexed + 1, cur + 1):
@@ -1449,7 +1518,7 @@ class Engine:
         commit, and a missing one returns None so the caller falls back
         (and the file walk's own ``_require_retract_files`` decides from
         there)."""
-        if not self._cdf_enabled(src_path):
+        if not self._snapshot(src_path).flag("delta.enableChangeDataFeed"):
             return None
         from pyspark.errors import AnalysisException
         from pyspark.sql import Window
@@ -1591,7 +1660,7 @@ class Engine:
         from .functions import similarity as _sim
 
         path = self.resolve(index_alias)
-        conf = deltalog.table_configuration_no_spark(path)
+        conf = self._snapshot(path).configuration
         src_alias = conf.get("graft.ivf.source")
         if not src_alias:
             raise ValueError(
@@ -1790,7 +1859,7 @@ class Engine:
         — a drifting TAIL (p95 rising while the mean holds) is the early
         signal a skew-prone corpus gives before mean inertia moves."""
         path = self.resolve(index_alias)
-        conf = deltalog.table_configuration_no_spark(path)
+        conf = self._snapshot(path).configuration
         if not conf.get("graft.ivf.source"):
             raise ValueError(
                 f"{index_alias!r} is not an IVF index built by build_ivf_index"
@@ -1881,7 +1950,7 @@ class Engine:
         from .functions import similarity as _sim
 
         path = self.resolve(index_alias)
-        conf = deltalog.table_configuration_no_spark(path)
+        conf = self._snapshot(path).configuration
         src_alias = conf.get("graft.ivf.source")
         if not src_alias:
             raise ValueError(
@@ -2037,7 +2106,7 @@ class Engine:
             self.spark, path, query_vec, n_probe
         )
         df = self.read_table(index_alias, user=user)
-        src_alias = deltalog.table_configuration_no_spark(path).get(
+        src_alias = self._snapshot(path).configuration.get(
             "graft.ivf.source"
         )
         if src_alias:
@@ -2238,7 +2307,7 @@ class Engine:
                 r["_cid"] for r in q_cid.select("_cid").distinct().collect()
             ]
         df = self.read_table(index_alias, user=user)
-        src_alias = deltalog.table_configuration_no_spark(path).get(
+        src_alias = self._snapshot(path).configuration.get(
             "graft.ivf.source"
         )
         if src_alias:
@@ -2798,7 +2867,7 @@ class Engine:
         index (the carry column would duplicate an index output or shadow
         an internal binding; advice r14 #2) — rename the source partition
         column or build over an unpartitioned copy."""
-        meta = deltalog.table_metadata_no_spark(src_path) or {}
+        meta = self._snapshot(src_path).metadata or {}
         cols = [
             c
             for c in (meta.get("partitionColumns") or [])
@@ -2817,7 +2886,7 @@ class Engine:
 
     def _dedup_index_params(self, index_alias: str) -> dict:
         path = self.resolve(index_alias)
-        conf = deltalog.table_configuration_no_spark(path)
+        conf = self._snapshot(path).configuration
         kind = conf.get("graft.dedup.kind")
         if kind not in ("minhash", "simhash", "image", "audio", "video",
                         "embedding", "hashvec", "bm25"):
@@ -3214,7 +3283,7 @@ class Engine:
             retrain_drift_ratio = 1.5
         by_source: dict[str, list] = {}
         for ia in index_aliases:
-            conf = deltalog.table_configuration_no_spark(self.resolve(ia))
+            conf = self._snapshot(self.resolve(ia)).configuration
             src = (
                 conf.get("graft.ivf.source")
                 or conf.get("graft.dedup.source")
@@ -3268,9 +3337,7 @@ class Engine:
                         for ia, _refresher, is_ivf, _is_rollup in pairs:
                             if not is_ivf:
                                 continue
-                            iconf = deltalog.table_configuration_no_spark(
-                                self.resolve(ia)
-                            )
+                            iconf = self._snapshot(self.resolve(ia)).configuration
                             fire = iconf.get("graft.ivf.retrainPending") == "1"
                             if (
                                 not fire
@@ -3839,9 +3906,7 @@ class Engine:
         nk = int(fetch_k) if fetch_k is not None else 2 * k
         prm = self._dedup_index_params(bm25_index_alias)
         id_col = prm["id_col"]
-        iconf = deltalog.table_configuration_no_spark(
-            self.resolve(ivf_index_alias)
-        )
+        iconf = self._snapshot(self.resolve(ivf_index_alias)).configuration
         self._check_hybrid_sources(
             prm, bm25_index_alias, ivf_index_alias, iconf, allow_cross_source
         )
@@ -4009,9 +4074,7 @@ class Engine:
         nk = int(fetch_k) if fetch_k is not None else 2 * k
         prm = self._dedup_index_params(bm25_index_alias)
         id_col = prm["id_col"]
-        iconf = deltalog.table_configuration_no_spark(
-            self.resolve(ivf_index_alias)
-        )
+        iconf = self._snapshot(self.resolve(ivf_index_alias)).configuration
         self._check_hybrid_sources(
             prm, bm25_index_alias, ivf_index_alias, iconf, allow_cross_source
         )
@@ -4085,12 +4148,13 @@ class Engine:
             # (and pinning a poisoned value into graft.sketch.lgK)
             raise ValueError(f"lg_k must be in [4, 21], got {lg_k}")
         src_path = self.resolve(alias)
-        src_version = deltalog.latest_version(src_path)
+        src_snap = self._snapshot(src_path)
+        src_version = src_snap.version
         src_df = self.read_table(alias, user=user, version=src_version)
         if value_col not in src_df.columns:
             raise ValueError(f"value column {value_col!r} not in {alias!r}")
         group_cols = list(group_cols)
-        meta = deltalog.table_metadata_no_spark(src_path) or {}
+        meta = src_snap.metadata or {}
         self._fold_rollup_partition_cols(
             meta, src_df, group_cols, value_col, alias
         )
@@ -4175,7 +4239,7 @@ class Engine:
 
     def _sketch_rollup_params(self, index_alias: str) -> dict:
         path = self.resolve(index_alias)
-        conf = deltalog.table_configuration_no_spark(path)
+        conf = self._snapshot(path).configuration
         if not conf.get("graft.sketch.source"):
             raise ValueError(
                 f"{index_alias!r} is not a sketch rollup built by "
@@ -4369,12 +4433,13 @@ class Engine:
         if self.config.read_only:
             raise ReadOnlyError(alias)
         src_path = self.resolve(alias)
-        src_version = deltalog.latest_version(src_path)
+        src_snap = self._snapshot(src_path)
+        src_version = src_snap.version
         src_df = self.read_table(alias, user=user, version=src_version)
         if value_col not in src_df.columns:
             raise ValueError(f"value column {value_col!r} not in {alias!r}")
         group_cols = list(group_cols)
-        meta = deltalog.table_metadata_no_spark(src_path) or {}
+        meta = src_snap.metadata or {}
         self._fold_rollup_partition_cols(
             meta, src_df, group_cols, value_col, alias
         )
@@ -4428,7 +4493,7 @@ class Engine:
 
     def _hist_rollup_params(self, index_alias: str) -> dict:
         path = self.resolve(index_alias)
-        conf = deltalog.table_configuration_no_spark(path)
+        conf = self._snapshot(path).configuration
         if not conf.get("graft.hist.source"):
             raise ValueError(
                 f"{index_alias!r} is not a histogram rollup built by "
@@ -4641,7 +4706,7 @@ class Engine:
         out = []
         for ia in index_aliases:
             path = self.resolve(ia)
-            conf = deltalog.table_configuration_no_spark(path)
+            conf = self._snapshot(path).configuration
             kind, src, iv, app = None, None, None, None
             if conf.get("graft.ivf.source"):
                 kind = "ivf"
@@ -4761,7 +4826,7 @@ class Engine:
         if self.config.read_only:
             raise ReadOnlyError(index_alias)
         path = self.resolve(index_alias)
-        conf = deltalog.table_configuration_no_spark(path)
+        conf = self._snapshot(path).configuration
         if conf.get("graft.sketch.source"):
             prm = self._sketch_rollup_params(index_alias)
             app, ver_key = _SKETCH_REFRESH_APP, "graft.sketch.indexedVersion"
@@ -4827,6 +4892,7 @@ class Engine:
         version: int | None = None,
         keep_file_col: bool = False,
         keep_pos: bool = False,
+        ix: _FileIndex | None = None,
     ) -> DataFrame:
         """Log-driven scan: read exactly the LIVE file set from the Delta
         snapshot (tombstoned files may still exist on disk until vacuum —
@@ -4836,26 +4902,14 @@ class Engine:
         ``keep_file_col`` adds the source-file URI as ``_file`` (DML needs
         it): materialized INSIDE the scan projection, because
         ``input_file_name()`` cannot be applied on top of the listing-join
-        plan (multi-source).
+        plan (multi-source). ``ix`` is the operation's snapshot entry
+        (default: the tip).
         """
-        if deltalog.latest_version(path) >= 0:
+        ix = ix or self._file_index(path)
+        if ix.version >= 0:
+            snap = ix.snapshot
+            snap.check_read()
             limit = self.large_listing_threshold
-
-            def compute():
-                # Driver-side checkpoint-aware replay — ZERO Spark jobs for
-                # the common (latest-version) plan, exactly the reference's
-                # cached-snapshot lookup (src/main.rs:82-85). Guarded by a
-                # metadata-only action-count estimate so an over-threshold
-                # table never materializes on the driver: past the limit the
-                # scan switches to the distributed listing-join.
-                if deltalog.estimate_snapshot_actions(path) > limit:
-                    return _TOO_MANY_FILES
-                # share the file index with authorize_file and list_files:
-                # one replay serves the scan plan and per-request auth
-                live_adds = self._file_index(path).adds
-                if len(live_adds) > limit:
-                    return _TOO_MANY_FILES
-                return [os.path.join(path, rel) for rel in sorted(live_adds)]
 
             def compute_versioned():
                 # time travel replays distributed (rare path; limit+1 bounds
@@ -4872,12 +4926,11 @@ class Engine:
 
             # only the latest snapshot is memoized; explicit versions are rare
             if version is None:
-                live = self._snapshot_cache.get_or_compute(path, compute)
-                dv_items = (
-                    None
-                    if live is _TOO_MANY_FILES
-                    else list(self._dv_map(path).items())
-                )
+                # the cached entry's driver-side replay — ZERO Spark jobs,
+                # the reference's cached-snapshot lookup (src/main.rs:82-85);
+                # past the limit the scan switches to the listing-join
+                live = ix.scan_files(limit)
+                dv_items = None if live is _TOO_MANY_FILES else list(ix.dv_map.items())
                 pv_of = None  # resolved lazily from the cached live adds
             else:
                 rows = compute_versioned()
@@ -4904,17 +4957,16 @@ class Engine:
                     path, version, keep_file_col=keep_file_col
                 )
             if not live:
-                return self._empty_table(path)
+                return self._empty_table(snap)
             root_prefix = path.rstrip("/") + "/"
             if any(not p.startswith(root_prefix) for p in live):
                 # shallow clone: files live under the SOURCE root, so
                 # basePath partition derivation cannot work — partition
                 # values come from the LOG instead (Delta's own model)
                 if pv_of is None:
-                    adds = self._file_index(path).adds
                     pv_of = {
                         r: dict(a.get("partitionValues") or {})
-                        for r, a in adds.items()
+                        for r, a in ix.adds.items()
                     }
                 return self._read_clone_enumerated(
                     path,
@@ -4924,8 +4976,8 @@ class Engine:
                     dv_items=dv_items,
                 )
             reader = self.spark.read.option("basePath", path)
-            schema = self._table_schema(path)
-            phys_schema, l2p = self._physical_schema(path, schema)
+            schema = snap.schema
+            phys_schema, l2p = self._physical_schema(snap, schema)
             if phys_schema is not None:
                 # Delta reads the schema from the log's metaData, not from N
                 # file footers: no footer-merge job, and files written before
@@ -4974,19 +5026,19 @@ class Engine:
         reference the source's bins by absolute path)."""
         from pyspark.sql import types as T
 
-        schema = self._table_schema(path)
+        snap = self._snapshot(path)
+        schema = snap.schema
         if schema is None:
             raise ValueError(f"cloned table {path} has no logged schema")
-        l2p = self._column_mapping(path)
-        meta = deltalog.table_metadata_no_spark(path) or {}
-        parts = list(meta.get("partitionColumns") or [])
+        l2p = snap.column_mapping
+        parts = snap.partition_columns
 
         def full_of(rel: str) -> str:
             return rel if _is_foreign_path(rel) else os.path.join(path, rel)
 
         files = sorted(full_of(r) for r in pv_of)
         data_fields = [f for f in schema.fields if f.name not in parts]
-        read_schema, _ = self._physical_schema(path, T.StructType(data_fields))
+        read_schema, _ = self._physical_schema(snap, T.StructType(data_fields))
         df = self.spark.read.schema(read_schema).parquet(*files)
         if keep_file_col:
             df = df.withColumn("_file", F.input_file_name())
@@ -5057,9 +5109,11 @@ class Engine:
         until vacuum; the enumerated path reads live bytes only. Correctness
         is identical — only snapshot files survive the join.
         """
+        snap = self._snapshot(path)
+        snap.check_read()
         reader = self.spark.read.option("basePath", path)
-        schema = self._table_schema(path)
-        phys_schema, l2p = self._physical_schema(path, schema)
+        schema = snap.schema
+        phys_schema, l2p = self._physical_schema(snap, schema)
         if phys_schema is not None:
             reader = reader.schema(phys_schema)
         df = reader.parquet(path)
@@ -5082,7 +5136,7 @@ class Engine:
             return self._read_clone_listing_join(
                 path, version, live=live, keep_file_col=keep_file_col
             )
-        dv_filter = self._dv_protocol(path)
+        dv_filter = snap.deletion_vectors
         live = live.select(F.col("path").alias("_live_rel"))
         if live.count() <= self.listing_join_broadcast_limit:
             live = F.broadcast(live)
@@ -5168,11 +5222,13 @@ class Engine:
             snap = snap.join(
                 live.select("path").dropDuplicates(), "path", "left_semi"
             )
-        schema = self._table_schema(path)
+        tsnap = self._snapshot(path)
+        tsnap.check_read()
+        schema = tsnap.schema
         if schema is None:
             raise ValueError(f"table {path} has no logged schema")
-        l2p = self._column_mapping(path)
-        meta = deltalog.table_metadata_no_spark(path) or {}
+        l2p = tsnap.column_mapping
+        meta = tsnap.metadata or {}
         parts = list(meta.get("partitionColumns") or [])
         root_prefix = path.rstrip("/") + "/"
         full = F.when(
@@ -5197,19 +5253,19 @@ class Engine:
             )
         if not dir_rows:
             return (
-                self._empty_table(path)
+                self._empty_table(tsnap)
                 if not keep_file_col
-                else self._empty_table(path).withColumn("_file", F.lit(None).cast("string"))
+                else self._empty_table(tsnap).withColumn("_file", F.lit(None).cast("string"))
             )
         dirs = sorted(r["_dir"] for r in dir_rows)
         n_files = sum(r["count"] for r in dir_rows)
         data_fields = [f for f in schema.fields if f.name not in parts]
-        read_schema, _ = self._physical_schema(path, T.StructType(data_fields))
+        read_schema, _ = self._physical_schema(tsnap, T.StructType(data_fields))
         scan = self.spark.read.schema(read_schema).parquet(*dirs)
         scan = scan.withColumn("_file", F.input_file_name()).withColumn(
             "_scan_key", uri_rel_col(F.col("_file"), path)
         )
-        dv_filter = self._dv_protocol(path)
+        dv_filter = tsnap.deletion_vectors
         if dv_filter:
             # materialized inside the scan projection (hidden _metadata
             # resolves only against the file source)
@@ -5256,33 +5312,9 @@ class Engine:
             *out_cols, *([F.col("_file")] if keep_file_col else [])
         )
 
-    def _dv_protocol(self, path: str) -> bool:
-        """Whether the table's protocol declares the ``deletionVectors``
-        reader feature (memoized): the cheap gate that keeps every scan of a
-        plain table zero-cost with respect to DV handling."""
-
-        def compute():
-            proto = deltalog.table_protocol_no_spark(path) or {}
-            return "deletionVectors" in (proto.get("readerFeatures") or [])
-
-        return self._snapshot_cache.get_or_compute(("dv_proto", path), compute)
-
     def _dv_map(self, path: str) -> dict[str, dict]:
-        """rel path -> deletionVector descriptor over the LIVE snapshot
-        (driver-side; reuses the memoized live-adds replay, so enumerated
-        scans pay nothing extra). Empty for plain tables."""
-
-        def compute():
-            if not self._dv_protocol(path):
-                return {}
-            live = self._file_index(path).adds
-            return {
-                rel: dict(a["deletionVector"])
-                for rel, a in live.items()
-                if a.get("deletionVector") and a["deletionVector"].get("storageType")
-            }
-
-        return self._snapshot_cache.get_or_compute(("dv_map", path), compute)
+        """rel path -> deletionVector descriptor over the live snapshot."""
+        return self._file_index(path).dv_map
 
     _DV_FLAT_SCHEMA = "_dv_rel string, st string, pod string, off int, sz int, card long"
 
@@ -5392,20 +5424,7 @@ class Engine:
             "_dv_rel", "_dv_pos"
         )
 
-    def _column_mapping(self, path: str) -> dict[str, str]:
-        """Memoized logical->physical name map (reader-2 NAME-mode column
-        mapping); empty for unmapped tables."""
-        return self._snapshot_cache.get_or_compute(
-            ("colmap", path), lambda: deltalog.column_mapping(path)
-        )
-
-    def _field_ids(self, path: str) -> dict[str, int]:
-        """Memoized logical -> parquet field id map (id-mode mapping only)."""
-        return self._snapshot_cache.get_or_compute(
-            ("colids", path), lambda: deltalog.column_mapping_field_ids(path)
-        )
-
-    def _physical_schema(self, path: str, schema):
+    def _physical_schema(self, snap: deltalog.Snapshot, schema):
         """The schema to READ parquet with: physical field names when the
         table is column-mapped (files and partition directories carry
         physical names), else the logical schema unchanged. For ID-mode
@@ -5416,10 +5435,10 @@ class Engine:
         NAMES are not authoritative, the ids are."""
         from pyspark.sql import types as T
 
-        l2p = self._column_mapping(path)
+        l2p = snap.column_mapping
         if not l2p or schema is None:
             return schema, None
-        l2id = self._field_ids(path)
+        l2id = snap.field_ids
         phys = T.StructType(
             [
                 T.StructField(
@@ -5427,7 +5446,7 @@ class Engine:
                     # nested struct fields carry their own physical names
                     # (and, in id mode, their own field ids)
                     deltalog.physical_data_type(
-                        f.dataType, path, field_ids=bool(l2id)
+                        f.dataType, snap.path, field_ids=bool(l2id)
                     ),
                     f.nullable,
                     metadata=(
@@ -5457,32 +5476,15 @@ class Engine:
         return df.select(*cols)
 
     def _table_schema(self, path: str):
-        """Schema from the log's latest metaData action, memoized; None when
-        absent or not a valid Spark schema JSON (raw test logs)."""
-        from pyspark.sql import types as T
+        """The logged schema at the tip (:attr:`deltalog.Snapshot.schema`),
+        read-gated; None when the log declares no columns."""
+        snap = self._snapshot(path)
+        snap.check_read()
+        return snap.schema
 
-        def compute():
-            # driver-side (no Spark job): schema resolution is per-request
-            # metadata, served from the log files directly like the
-            # reference's cached snapshot metadata
-            meta = deltalog.table_metadata_no_spark(path)
-            raw = (meta or {}).get("schemaString")
-            if not raw or raw == "{}":
-                return None
-            try:
-                return T.StructType.fromJson(json.loads(raw))
-            except Exception:
-                return None
-
-        return self._snapshot_cache.get_or_compute(("schema", path), compute)
-
-    def _empty_table(self, path: str) -> DataFrame:
-        meta = deltalog.table_metadata_no_spark(path)
-        if meta and meta.get("schemaString") not in (None, "{}"):
-            from pyspark.sql import types as T
-
-            schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-            return self.spark.createDataFrame([], schema)
+    def _empty_table(self, snap: deltalog.Snapshot) -> DataFrame:
+        if snap.schema is not None:
+            return self.spark.createDataFrame([], snap.schema)
         return self.spark.createDataFrame([], "path string").limit(0)
 
     # -- file-level surface (S3-S7, S10, P5, P6) ---------------------------
@@ -5503,37 +5505,57 @@ class Engine:
         files = self.snapshot_files(alias)
         # file-level partitionValues carry PHYSICAL names in mapped tables
         dnf = deltalog.translate_dnf(
-            self.resolved_dnf(alias, user), self._column_mapping(self.resolve(alias))
+            self.resolved_dnf(alias, user),
+            self._snapshot(self.resolve(alias)).column_mapping,
         )
         pred = compile_dnf_on_partition_values(dnf)
         return files if pred is None else files.filter(pred)
 
-    def _file_index(self, path: str, valid=None) -> _FileIndex:
-        """The shared per-path :class:`_FileIndex` entry of the snapshot
-        cache; ``valid`` rejects a cached index (LIST's tip check)."""
+    def _file_index(self, path: str, tip_check: bool = True) -> _FileIndex:
+        """The table's one snapshot-cache entry. Every operation but GET
+        calls this once, at its start, and threads the entry down:
+        ``tip_check`` resolves the log tip (one ``_delta_log/`` listing) and
+        rebuilds the entry when a commit landed since it was cached. GET
+        passes False and trusts the cached entry, which engine commits drop
+        and every other operation refreshes."""
+        if not tip_check:
+            return self._snapshot_cache.get_or_compute(
+                path, lambda: _FileIndex(deltalog.load_snapshot(path))
+            )
+        tip = deltalog.latest_version(path)
         return self._snapshot_cache.get_or_compute(
-            ("live_files", path), lambda: _FileIndex(path), valid
+            path,
+            lambda: _FileIndex(deltalog.load_snapshot(path, tip)),
+            lambda ix: ix.version == tip,
         )
+
+    def _snapshot(self, path: str) -> deltalog.Snapshot:
+        """The tip-checked :class:`deltalog.Snapshot` of ``path``."""
+        return self._file_index(path).snapshot
 
     def authorize_file(self, alias: str, user: str, rel_path: str) -> bool:
         """File-level membership check; raises 403/404 exactly like the
         reference's data-file GET (src/main.rs:576-594, 770-788).
 
-        Runs ZERO Spark jobs: the reference's per-request shape is a
-        driver-side set lookup against its cached snapshot, so here the
-        live-file map comes from the checkpoint-aware driver-side log replay
-        (memoized in the snapshot TTL cache) and the DNF evaluates in pure
-        Python. Batch authorization stays on the DataFrame path
-        (:meth:`authorize_requests`). The index is not tip-checked here: a
-        GET trusts the cached snapshot, which engine writes invalidate and
-        :meth:`list_files` refreshes."""
+        Runs ZERO Spark jobs and, on a warm cache, no filesystem call: the
+        reference's per-request shape is a driver-side set lookup against
+        its cached snapshot, so the live-file map and the column mapping
+        come from the table's one snapshot-cache entry and the DNF evaluates
+        in pure Python. Batch authorization stays on the DataFrame path
+        (:meth:`authorize_requests`).
+
+        GET is the one operation that does NOT tip-check: it trusts the
+        cached entry. Engine commits drop the entry, and every other
+        operation (:meth:`read_table`, :meth:`list_files`, writes and DML)
+        refreshes it when the log tip moved, so a commit written behind the
+        engine shows to GET after the next such operation or the 120 s
+        TTL."""
         if _is_log_key(rel_path):
             return True  # metadata bypasses the ACL (src/main.rs:532-538)
-        path = self.resolve(alias)
-        live = self._file_index(path).adds
-        add = live.get(rel_path)
+        ix = self._file_index(self.resolve(alias), tip_check=False)
+        add = ix.adds.get(rel_path)
         dnf = deltalog.translate_dnf(
-            self.resolved_dnf(alias, user), self._column_mapping(path)
+            self.resolved_dnf(alias, user), ix.snapshot.column_mapping
         )
         if dnf and (
             add is None or not acl.dnf_allows(dnf, add.get("partitionValues") or {})
@@ -5575,7 +5597,8 @@ class Engine:
         column are conservatively kept.
         """
         path = self.resolve(alias)
-        l2p_map = self._column_mapping(path)
+        ix = self._file_index(path)
+        l2p_map = ix.snapshot.column_mapping
         snapshot = deltalog.snapshot_files(self.spark, path).select(
             "path", "stats", "deletionVector"
         )
@@ -5612,7 +5635,7 @@ class Engine:
         if len(rows) > limit:
             df = self._read_data_listing_join(path, live=survivors)
         elif not rows:
-            df = self._read_data(path).limit(0)
+            df = self._read_data(path, ix=ix).limit(0)
         else:
             keep = [os.path.join(path, r["path"]) for r in rows]
             dv_items = [
@@ -5622,8 +5645,8 @@ class Engine:
                 and r["deletionVector"]["storageType"] is not None
             ]
             reader = self.spark.read.option("basePath", path)
-            schema = self._table_schema(path)
-            phys_schema, l2p = self._physical_schema(path, schema)
+            schema = ix.snapshot.schema
+            phys_schema, l2p = self._physical_schema(ix.snapshot, schema)
             if phys_schema is not None:
                 reader = reader.schema(phys_schema)
             df = reader.parquet(*keep)
@@ -5674,15 +5697,14 @@ class Engine:
         and prefixes count toward ``max_keys`` interleaved in key order,
         matching S3.
 
-        Pages come from the driver-side snapshot, version-checked against
-        the log tip on every call (rebuilt when a commit landed) and walked
-        by binary search over its sorted keys. The page is a local Arrow
-        relation, so building and collecting it runs zero Spark jobs — the
-        reference's cached-snapshot listing (src/main.rs:228-339).
+        Pages come from the table's one snapshot-cache entry, tip-checked on
+        every call (one ``_delta_log/`` listing; the entry is rebuilt when a
+        commit landed) and walked by binary search over its sorted keys.
+        The page is a local Arrow relation, so building and collecting it
+        runs zero Spark jobs — the reference's cached-snapshot listing
+        (src/main.rs:228-339).
         """
-        path = self.resolve(alias)
-        tip = deltalog.latest_version(path)
-        index = self._file_index(path, valid=lambda ix: ix.version == tip)
+        index = self._file_index(self.resolve(alias))
         rows = index.page(
             alias, prefix or "", continuation_token or start_after, max_keys, delimiter
         )
@@ -5724,11 +5746,9 @@ class Engine:
         path = self.resolve(alias)
         if mode not in ("append", "overwrite"):
             raise ValueError(f"unsupported write mode: {mode}")
-        existing_meta = (
-            deltalog.table_metadata_no_spark(path)
-            if deltalog.latest_version(path) >= 0
-            else None
-        )
+        ix = self._file_index(path)
+        snap = ix.snapshot
+        existing_meta = snap.metadata
         parts = partition_by or (existing_meta or {}).get("partitionColumns") or []
         schema_json = df.schema.json()
         if mode == "append" and existing_meta:
@@ -5754,7 +5774,7 @@ class Engine:
         # partition directories, partitionValues and stats keys are written
         # PHYSICAL below. Schema evolution would need fresh physical names
         # and a maxColumnId bump; refuse rather than guess.
-        l2p = self._column_mapping(path)
+        l2p = snap.column_mapping
         if l2p:
             extra = [c for c in df.columns if c not in l2p]
             if extra:
@@ -5787,24 +5807,19 @@ class Engine:
         # collation re-typing BEFORE constraint/generated evaluation: a
         # CHECK constraint or generation expression comparing a collated
         # column must run under the declared collation, not binary
-        df = self._apply_collations(path, df)
-        df = self._apply_column_defaults(path, df)
-        df, identity_pin = self._apply_identity_columns(path, df)
-        df, enforced_gen = self._apply_generated_columns(path, df)
-        enforced = self._enforce_check_constraints(path, df, schema_json=schema_json)
+        df = self._apply_collations(snap, df)
+        df = self._apply_column_defaults(snap, df)
+        df, identity_pin = self._apply_identity_columns(snap, df)
+        df, enforced_gen = self._apply_generated_columns(snap, df)
+        enforced = self._enforce_check_constraints(snap, df, schema_json=schema_json)
         # physical translation LAST (constraints and clustering reference
         # logical names): rename every column and partition directory to the
         # mapped physical names so the written files are indistinguishable
         # from a conforming mapped writer's
-        prev_adds: dict[str, dict] = (
-            deltalog._live_adds_no_spark(path)
-            if deltalog.latest_version(path) >= 0
-            else {}
-        )
-        moved, parts_phys = self._stage_physical(path, df, list(parts))
+        moved, parts_phys = self._stage_physical(snap, df, list(parts))
         if identity_pin is not None:
             identity_pin.unpersist()  # the pinned batch is on disk now
-        _scols = deltalog.stats_columns(path)
+        _scols = snap.stats_columns()
         adds = [
             {
                 **deltalog.add_action_for(path, rel, parts_phys, stats_cols=_scols),
@@ -5816,27 +5831,19 @@ class Engine:
         # the log but leaves them on disk — old versions stay time-travel
         # readable until vacuum() reclaims unreferenced files.
         # ``data_change=False`` (compaction/recluster: same rows, new files)
-        # marks both sides so CDF readers and streams skip the commit.
-        removes = []
-        if mode == "overwrite":
-            for p in sorted(prev_adds):
-                rm = {"path": p, "dataChange": data_change}
-                d = prev_adds[p].get("deletionVector")
-                if d and d.get("storageType"):
-                    # DV table: the logical identity being tombstoned is
-                    # (path, dv uniqueId)
-                    rm["deletionVector"] = d
-                # rowTracking: identity carried on the tombstone too (spec
-                # shape — removes preserve baseRowId/defaultRowCommitVersion)
-                if prev_adds[p].get("baseRowId") is not None:
-                    rm["baseRowId"] = prev_adds[p]["baseRowId"]
-                    if prev_adds[p].get("defaultRowCommitVersion") is not None:
-                        rm["defaultRowCommitVersion"] = prev_adds[p][
-                            "defaultRowCommitVersion"
-                        ]
-                removes.append(rm)
+        # marks both sides so CDF readers and streams skip the commit. The
+        # tombstones come from the operation's snapshot entry (an append
+        # never replays the live files) and carry each file's DV and
+        # row-tracking identity (:meth:`_dv_removes`).
+        removes = (
+            self._dv_removes(
+                ix, [{"path": p, "dataChange": data_change} for p in sorted(ix.adds)]
+            )
+            if mode == "overwrite"
+            else []
+        )
         version = self._commit_moved(
-            path,
+            snap,
             moved,
             adds,
             removes,
@@ -5852,11 +5859,11 @@ class Engine:
             # — no change files needed, per the Delta CDF read protocol
             cdf_handled=True,
             # overwrite removes above carry the DV identities they tombstone
-            dv_write=self._dv_protocol(path),
+            dv_write=snap.deletion_vectors,
         )
         # table property overrides the engine default (delta.checkpointInterval)
         interval = self.config.checkpoint_interval
-        prop = deltalog.table_configuration_no_spark(path).get("delta.checkpointInterval")
+        prop = snap.configuration.get("delta.checkpointInterval")
         if prop is not None and str(prop).isdigit():
             interval = int(prop)
         if interval > 0 and version > 0 and version % interval == 0:
@@ -5872,26 +5879,16 @@ class Engine:
             )
             if start < version:
                 deltalog.write_log_compaction(path, start, version)
-        self._snapshot_cache.invalidate()  # table state changed
         return version
 
-    def _collations(self, path: str) -> dict[str, str]:
-        """Memoized ``column -> collation id`` from the logged schema
-        (Delta ``collations`` writer feature); empty for ordinary tables."""
-        return self._snapshot_cache.get_or_compute(
-            ("collations", path), lambda: deltalog.collated_columns(path)
-        )
-
-    def _apply_collations(self, path: str, df: DataFrame) -> DataFrame:
+    def _apply_collations(self, snap: deltalog.Snapshot, df: DataFrame) -> DataFrame:
         """Re-type declared collated string columns to Spark's native
         collated ``StringType`` (``F.collate``) so comparisons, sorts, and
         groupings downstream honor the logged collation — the whole point
         of the ``collations`` feature (byte layout is identical, only
         comparison semantics change). Pure codegen, no shuffle, identity
-        for tables without collations (the overwhelmingly common case:
-        one memoized dict probe)."""
-        colls = self._collations(path)
-        todo = {c: v for c, v in colls.items() if c in df.columns}
+        for tables without collations (the overwhelmingly common case)."""
+        todo = {c: v for c, v in snap.collations.items() if c in df.columns}
         if not todo:
             return df
         return df.withColumns(
@@ -5905,7 +5902,7 @@ class Engine:
     _ICEBERG_DIR_PREFIX = "__icdir__"
 
     def _prepare_iceberg_write(
-        self, path: str, df: DataFrame, parts_phys: list[str]
+        self, snap: deltalog.Snapshot, df: DataFrame, parts_phys: list[str]
     ) -> tuple[DataFrame, list[str]]:
         """Make the staged files Iceberg-readable (``icebergCompatV1/V2``
         writer features, active via ``delta.enableIcebergCompatVn``):
@@ -5926,15 +5923,15 @@ class Engine:
 
         ``df`` arrives already renamed to PHYSICAL columns. Returns the
         prepared frame and the directory-partition column list."""
-        l2p = self._column_mapping(path)
+        path = snap.path
+        l2p = snap.column_mapping
         if not l2p:
             raise UnsupportedProtocolError(
                 path,
                 "delta.enableIcebergCompat is set but column mapping is off "
                 "— the feature requires mapped (field-id-bearing) schemas",
             )
-        conf = deltalog.table_configuration_no_spark(path)
-        if str(conf.get("delta.enableDeletionVectors", "")).lower() == "true":
+        if snap.flag("delta.enableDeletionVectors"):
             raise UnsupportedProtocolError(
                 path,
                 "delta.enableIcebergCompat forbids active deletion vectors "
@@ -5946,14 +5943,14 @@ class Engine:
             )
         except Exception:
             pass
-        if deltalog.mapping_has_struct(path):
+        if snap.mapping_has_struct:
             raise UnsupportedProtocolError(
                 path,
                 "icebergCompat on a schema with struct columns needs NESTED "
                 "parquet field-id stamping, which this writer does not do — "
                 "flatten the schema or disable delta.enableIcebergCompat",
             )
-        l2id = deltalog.column_field_ids_any_mode(path)
+        l2id = snap.field_ids_any_mode
         phys2id = {l2p[k]: v for k, v in l2id.items() if k in l2p}
         missing = [c for c in df.columns if c not in phys2id]
         if missing:
@@ -5975,7 +5972,7 @@ class Engine:
 
     def _stage_physical(
         self,
-        path: str,
+        snap: deltalog.Snapshot,
         df: DataFrame,
         parts: list[str],
         dest: str | None = None,
@@ -5991,14 +5988,15 @@ class Engine:
         DV DML shapes, and CDC change files — so the mapped/iceberg
         obligations hold on each. Returns
         ``(moved relative paths, physical partition columns)``."""
-        l2p = self._column_mapping(path)
+        path = snap.path
+        l2p = snap.column_mapping
         parts_phys = [l2p.get(p, p) for p in parts] if l2p else list(parts)
         if l2p:
             # columns outside the mapped schema cannot be translated —
             # `_change_type` (CDC files, spec-named as-is) passes through;
             # struct-bearing columns rename their NESTED fields too
             # (positional cast to the physical type)
-            schema = self._table_schema(path)
+            schema = snap.schema
             by_name = {f.name: f for f in schema.fields} if schema is not None else {}
             sel = []
             for c in df.columns:
@@ -6013,10 +6011,10 @@ class Engine:
             df = df.select(sel)
         # CDC change files opt out (`apply_iceberg=False`): Iceberg clients
         # never read Delta CDF, and `_change_type` has no field id
-        ic = deltalog.iceberg_compat_version(path) if apply_iceberg else None
+        ic = snap.iceberg_compat if apply_iceberg else None
         dir_parts = parts_phys
         if ic:
-            df, dir_parts = self._prepare_iceberg_write(path, df, parts_phys)
+            df, dir_parts = self._prepare_iceberg_write(snap, df, parts_phys)
         staging = os.path.join(
             os.path.dirname(path.rstrip("/")) or ".",
             f".stage-{uuid.uuid4().hex}",
@@ -6045,7 +6043,7 @@ class Engine:
                     dirs[i] = nd
 
     def _apply_generated_columns(
-        self, path: str, df: DataFrame
+        self, snap: deltalog.Snapshot, df: DataFrame
     ) -> tuple[DataFrame, bool]:
         """Honor Delta writer-protocol-4 generated columns
         (``delta.generationExpression`` field metadata): a column the caller
@@ -6055,7 +6053,7 @@ class Engine:
         generated column, like CHECK constraints) and rejected on the first
         mismatch — Delta's semantics: the stored value must always equal
         the expression. Returns (df, proof-for-the-commit-gate)."""
-        gens = deltalog.generated_columns(path)
+        gens = snap.generated
         for name, expr in sorted(gens.items()):
             col = F.expr(expr)
             if name in df.columns:
@@ -6070,40 +6068,22 @@ class Engine:
                 df = df.withColumn(name, col)
         return df, bool(gens)
 
-    def _apply_column_defaults(self, path: str, df: DataFrame) -> DataFrame:
+    def _apply_column_defaults(self, snap: deltalog.Snapshot, df: DataFrame) -> DataFrame:
         """Honor Delta default columns (``CURRENT_DEFAULT`` field metadata,
         writer feature ``allowColumnDefaults``): a column the caller omitted
         is filled with its default expression, cast to the declared type —
         one projected codegen column, like generated columns. Provided
         columns pass through untouched (defaults apply only to omission)."""
-        defaults = deltalog.column_defaults(path)
-        if not defaults:
+        if not snap.defaults:
             return df
-        from pyspark.sql import types as T
-
-        fields = {
-            f["name"]: f
-            for f in json.loads(
-                (deltalog.table_metadata_no_spark(path) or {}).get("schemaString")
-                or "{}"
-            ).get("fields", [])
-        }
-        for name, expr in sorted(defaults.items()):
-            if name in df.columns:
-                continue
-            col = F.expr(expr)
-            fld = fields.get(name)
-            if fld is not None:
-                col = col.cast(
-                    T.StructType.fromJson({"type": "struct", "fields": [fld]})[
-                        name
-                    ].dataType
-                )
-            df = df.withColumn(name, col)
+        types = {f.name: f.dataType for f in snap.schema.fields}
+        for name, expr in sorted(snap.defaults.items()):
+            if name not in df.columns:
+                df = df.withColumn(name, F.expr(expr).cast(types[name]))
         return df
 
     def _apply_identity_columns(
-        self, path: str, df: DataFrame
+        self, snap: deltalog.Snapshot, df: DataFrame
     ) -> "tuple[DataFrame, DataFrame | None]":
         """Honor Delta identity columns (writer version 6 / feature
         ``identityColumns``) on insert-producing writes. An OMITTED identity
@@ -6121,7 +6101,7 @@ class Engine:
         files' footer stats (``deltalog.advance_identity_hwm`` in
         ``_commit_moved``). Returns ``(df, pinned-batch-or-None)`` — the
         caller unpersists the pin once the batch is written."""
-        idents = deltalog.identity_columns(path)
+        idents = snap.identity
         gen_specs: list[tuple[str, int, int]] = []
         for name, spec in sorted(idents.items()):
             if name in df.columns:
@@ -6180,29 +6160,20 @@ class Engine:
 
         return with_pid.mapInPandas(assign, out_schema), pinned
 
-    def _cdf_enabled(self, path: str) -> bool:
-        """Whether the table demands change-data files
-        (``delta.enableChangeDataFeed=true``)."""
-        return (
-            str(
-                deltalog.table_configuration_no_spark(path).get(
-                    "delta.enableChangeDataFeed", ""
-                )
-            ).lower()
-            == "true"
-        )
-
     CDC_DIR = "_change_data"
 
-    def _write_cdc(self, path: str, cdc_df: DataFrame, parts: list[str]) -> list[dict]:
+    def _write_cdc(
+        self, snap: deltalog.Snapshot, cdc_df: DataFrame, parts: list[str]
+    ) -> list[dict]:
         """Write change rows (table columns + ``_change_type``) as Delta CDF
         change files under ``_change_data/`` and return their ``cdc``
         actions. Partitioned like the table; the files never enter the
         table state (``dataChange=false``) — only :meth:`table_changes`
         reads them. Underscore-prefixed, so directory listings and plain
         readers skip them, exactly like ``_delta_log``."""
+        path = snap.path
         moved, parts_phys = self._stage_physical(
-            path,
+            snap,
             cdc_df,
             list(parts),
             dest=os.path.join(path, self.CDC_DIR),
@@ -6222,19 +6193,7 @@ class Engine:
             )
         return out
 
-    def _dv_writes_enabled(self, path: str) -> bool:
-        """Whether DELETEs should write deletion vectors instead of
-        rewriting files (``delta.enableDeletionVectors=true``)."""
-        return (
-            str(
-                deltalog.table_configuration_no_spark(path).get(
-                    "delta.enableDeletionVectors", ""
-                )
-            ).lower()
-            == "true"
-        )
-
-    def _dv_dml_eligible(self, path: str) -> bool:
+    def _dv_dml_eligible(self, path: str, ix: _FileIndex | None = None) -> bool:
         """DML takes the DV-writing path only when the table asks for it
         AND its protocol actually DECLARES the deletionVectors feature
         (the property alone is not authority to emit DV actions — a
@@ -6245,36 +6204,21 @@ class Engine:
         the DV paths write row-exact change files from the marked
         positions (the same ``_write_cdc`` machinery as copy-on-write),
         so CDF no longer forces a full file rewrite just to feed the
-        change stream."""
+        change stream. ``ix`` is the operation's entry (default: the tip)."""
+        ix = ix or self._file_index(path)
+        snap = ix.snapshot
         return (
-            self._dv_writes_enabled(path)
-            and self._dv_protocol(path)
-            and not deltalog.generated_columns(path)
+            snap.flag("delta.enableDeletionVectors")
+            and snap.deletion_vectors
+            and not snap.generated
             # shallow clones reference foreign files: the DV-marking group
             # key and new-bin placement assume in-root files, so clone DML
             # takes the copy-on-write path (which handles absolute refs and
             # carries DV identity on removes)
-            and not self._has_foreign_adds(path)
+            and not ix.foreign(self.large_listing_threshold)
         )
 
-    def _has_foreign_adds(self, path: str) -> bool:
-        """Whether the live snapshot references any file OUTSIDE the table
-        root (shallow clone). Memoized off the shared driver replay; an
-        over-threshold snapshot answers False — the broad DML paths refuse
-        foreign references on their own (:meth:`_read_data_listing_join`)."""
-
-        def compute():
-            if (
-                deltalog.estimate_snapshot_actions(path)
-                > self.large_listing_threshold
-            ):
-                return False
-            live = self._file_index(path).adds
-            return any(_is_foreign_path(r) for r in live)
-
-        return self._snapshot_cache.get_or_compute(("foreign", path), compute)
-
-    def _dv_removes(self, path: str, removes: list[dict]) -> list[dict]:
+    def _dv_removes(self, ix: _FileIndex, removes: list[dict]) -> list[dict]:
         """Attach each removed file's CURRENT logical identity to its
         remove action. Two independent carries, each gated on ITS OWN
         protocol feature:
@@ -6289,12 +6233,11 @@ class Engine:
         Every remove-producing path routes through this (DML via the
         copy-on-write removes, overwrite/compaction via
         :meth:`write_table`, RESTORE inline)."""
-        has_rt = deltalog.has_row_tracking(path)
-        has_dv = self._dv_protocol(path)
-        if not (has_rt or has_dv):
+        has_rt = "rowTracking" in ix.snapshot.writer_features
+        if not (has_rt or ix.snapshot.deletion_vectors):
             return removes
-        dv_map = self._dv_map(path) if has_dv else {}
-        live = self._file_index(path).adds
+        dv_map = ix.dv_map
+        live = ix.adds
         out = []
         for r in removes:
             d = dv_map.get(r["path"])
@@ -6326,26 +6269,27 @@ class Engine:
         (enable_deletion_vectors does for changeDataFeed); anything active
         and not enumerated refuses (the explicit feature-list guard alone
         let writer-3-6 tables through — ADVICE r11 #1)."""
-        proto = deltalog.table_protocol_no_spark(path) or {}
+        snap = self._snapshot(path)
+        proto = snap.protocol or {}
         writer = int(proto.get("minWriterVersion") or 1)
         if writer >= 7:
             return  # explicit lists — the no-clobber guard owns this case
         active: set[str] = set()
         if writer >= 2:
-            if deltalog.check_append_only(path):
+            if snap.append_only:
                 active.add("appendOnly")
-            if deltalog._schema_has_invariants(path) is not None:
+            if bool(snap.invariants):
                 active.add("invariants")
-        if writer >= 3 and deltalog.declared_constraints(path):
+        if writer >= 3 and snap.constraints:
             active.add("checkConstraints")
         if writer >= 4:
-            if self._cdf_enabled(path):
+            if snap.flag("delta.enableChangeDataFeed"):
                 active.add("changeDataFeed")
-            if deltalog.generated_columns(path):
+            if snap.generated:
                 active.add("generatedColumns")
-        if writer >= 5 and self._column_mapping(path):
+        if writer >= 5 and snap.column_mapping:
             active.add("columnMapping")
-        if writer >= 6 and deltalog.identity_columns(path):
+        if writer >= 6 and snap.identity:
             active.add("identityColumns")
         dropped = sorted(active - set(enumerated))
         if dropped:
@@ -6370,10 +6314,11 @@ class Engine:
         if self.config.read_only:
             raise ReadOnlyError(alias)
         path = self.resolve(alias)
+        snap = self._snapshot(path)
         if (
-            self._column_mapping(path)
-            or deltalog.declared_constraints(path)
-            or deltalog.generated_columns(path)
+            snap.column_mapping
+            or snap.constraints
+            or snap.generated
         ):
             raise UnsupportedProtocolError(
                 path,
@@ -6381,10 +6326,10 @@ class Engine:
                 "(column mapping / constraints / generated columns would "
                 "need their writer features enumerated in the upgrade)",
             )
-        conf = deltalog.table_configuration_no_spark(path)
+        conf = snap.configuration
         conf["delta.enableDeletionVectors"] = "true"
-        meta = deltalog.table_metadata_no_spark(path) or {}
-        proto = deltalog.table_protocol_no_spark(path) or {}
+        meta = snap.metadata or {}
+        proto = snap.protocol or {}
         existing_r = set(proto.get("readerFeatures") or [])
         existing_w = set(proto.get("writerFeatures") or [])
         protocol_action = None
@@ -6402,7 +6347,7 @@ class Engine:
                 path, "enable_deletion_vectors", enumerated=("changeDataFeed",)
             )
             wfeats = ["deletionVectors"]
-            if self._cdf_enabled(path):
+            if snap.flag("delta.enableChangeDataFeed"):
                 # the table's existing writer-4 CDF demand must survive the
                 # writer-7 upgrade as its feature form — dropping it would
                 # let conforming writers commit change-less DML
@@ -6413,7 +6358,7 @@ class Engine:
                 "readerFeatures": ["deletionVectors"],
                 "writerFeatures": wfeats,
             }
-        version = deltalog.write_commit_streamed(
+        version = self._commit(
             path,
             lambda: iter(()),
             None,
@@ -6428,7 +6373,6 @@ class Engine:
             cdf_handled=True,
             protocol_action=protocol_action,
         )
-        self._snapshot_cache.invalidate()
         return version
 
     def enable_v2_checkpoints(self, alias: str) -> int:
@@ -6442,11 +6386,12 @@ class Engine:
         if self.config.read_only:
             raise ReadOnlyError(alias)
         path = self.resolve(alias)
-        proto = deltalog.table_protocol_no_spark(path) or {}
+        snap = self._snapshot(path)
+        proto = snap.protocol or {}
         existing_r = set(proto.get("readerFeatures") or [])
         existing_w = set(proto.get("writerFeatures") or [])
         if "v2Checkpoint" in existing_r:
-            return deltalog.latest_version(path)  # already enabled
+            return snap.version  # already enabled
         if existing_r or existing_w:
             raise UnsupportedProtocolError(
                 path,
@@ -6455,8 +6400,8 @@ class Engine:
                 "its feature lists",
             )
         self._refuse_legacy_writer_capabilities(path, "enable_v2_checkpoints")
-        meta = deltalog.table_metadata_no_spark(path) or {}
-        version = deltalog.write_commit_streamed(
+        meta = snap.metadata or {}
+        version = self._commit(
             path,
             lambda: iter(()),
             None,
@@ -6475,7 +6420,6 @@ class Engine:
                 "writerFeatures": ["v2Checkpoint"],
             },
         )
-        self._snapshot_cache.invalidate()
         return version
 
     def enable_checkpoint_protection(
@@ -6497,11 +6441,12 @@ class Engine:
         if self.config.read_only:
             raise ReadOnlyError(alias)
         path = self.resolve(alias)
-        proto = deltalog.table_protocol_no_spark(path) or {}
+        snap = self._snapshot(path)
+        proto = snap.protocol or {}
         existing_r = set(proto.get("readerFeatures") or [])
         existing_w = set(proto.get("writerFeatures") or [])
         if "checkpointProtection" in existing_r:
-            return deltalog.latest_version(path)  # already enabled
+            return snap.version  # already enabled
         if existing_r or existing_w:
             raise UnsupportedProtocolError(
                 path,
@@ -6512,7 +6457,7 @@ class Engine:
         self._refuse_legacy_writer_capabilities(
             path, "enable_checkpoint_protection"
         )
-        enabling = deltalog.latest_version(path) + 1
+        enabling = snap.version + 1
         if before_version is None:
             before_version = enabling
         if not (0 <= int(before_version) <= enabling):
@@ -6520,8 +6465,8 @@ class Engine:
                 f"before_version={before_version} outside the table's "
                 f"history [0, {enabling}]"
             )
-        conf = deltalog.table_configuration_no_spark(path)
-        meta = deltalog.table_metadata_no_spark(path) or {}
+        conf = snap.configuration
+        meta = snap.metadata or {}
 
         def conf_fn(version: int, ict: int) -> dict:
             c = dict(conf)
@@ -6530,7 +6475,7 @@ class Engine:
             )
             return c
 
-        version = deltalog.write_commit_streamed(
+        version = self._commit(
             path,
             lambda: iter(()),
             None,
@@ -6550,7 +6495,6 @@ class Engine:
             },
             configuration_fn=conf_fn,
         )
-        self._snapshot_cache.invalidate()
         return version
 
     def enable_iceberg_compat(self, alias: str, version: int = 2) -> int:
@@ -6573,10 +6517,11 @@ class Engine:
         path = self.resolve(alias)
         feature = f"icebergCompatV{version}"
         prop = f"delta.enableIcebergCompatV{version}"
-        conf = deltalog.table_configuration_no_spark(path)
+        snap = self._snapshot(path)
+        conf = snap.configuration
         if str(conf.get(prop, "")).lower() == "true":
-            return deltalog.latest_version(path)  # already enabled
-        if not self._column_mapping(path):
+            return snap.version  # already enabled
+        if not snap.column_mapping:
             raise UnsupportedProtocolError(
                 path,
                 "icebergCompat requires column mapping (field-id-bearing "
@@ -6589,11 +6534,11 @@ class Engine:
                 "readers cannot apply them)",
             )
         if (
-            deltalog.declared_constraints(path)
-            or deltalog.generated_columns(path)
-            or deltalog.identity_columns(path)
-            or deltalog.column_defaults(path)
-            or self._cdf_enabled(path)
+            snap.constraints
+            or snap.generated
+            or snap.identity
+            or snap.defaults
+            or snap.flag("delta.enableChangeDataFeed")
         ):
             raise UnsupportedProtocolError(
                 path,
@@ -6601,7 +6546,7 @@ class Engine:
                 "(constraints / generated / identity / default columns / "
                 "CDF would need their writer features enumerated)",
             )
-        proto = deltalog.table_protocol_no_spark(path) or {}
+        proto = snap.protocol or {}
         existing_r = set(proto.get("readerFeatures") or [])
         existing_w = set(proto.get("writerFeatures") or [])
         if existing_w - {"columnMapping"} or existing_r - {"columnMapping"}:
@@ -6621,10 +6566,10 @@ class Engine:
             protocol_action["readerFeatures"] = sorted(
                 existing_r | {"columnMapping"}
             )
-        meta = deltalog.table_metadata_no_spark(path) or {}
+        meta = snap.metadata or {}
         new_conf = dict(conf)
         new_conf[prop] = "true"
-        version_out = deltalog.write_commit_streamed(
+        version_out = self._commit(
             path,
             lambda: iter(()),
             None,
@@ -6644,7 +6589,6 @@ class Engine:
             protocol_action=protocol_action,
             configuration=new_conf,
         )
-        self._snapshot_cache.invalidate()
         return version_out
 
     def enable_in_commit_timestamps(self, alias: str) -> int:
@@ -6664,10 +6608,11 @@ class Engine:
         if self.config.read_only:
             raise ReadOnlyError(alias)
         path = self.resolve(alias)
-        conf = deltalog.table_configuration_no_spark(path)
+        snap = self._snapshot(path)
+        conf = snap.configuration
         if str(conf.get("delta.enableInCommitTimestamps", "")).lower() == "true":
-            return deltalog.latest_version(path)  # already enabled
-        proto = deltalog.table_protocol_no_spark(path) or {}
+            return snap.version  # already enabled
+        proto = snap.protocol or {}
         existing_r = set(proto.get("readerFeatures") or [])
         existing_w = set(proto.get("writerFeatures") or [])
         protocol_action = None
@@ -6687,7 +6632,7 @@ class Engine:
                 "minWriterVersion": 7,
                 "writerFeatures": ["inCommitTimestamp"],
             }
-        meta = deltalog.table_metadata_no_spark(path) or {}
+        meta = snap.metadata or {}
 
         def conf_fn(version: int, ict: int) -> dict:
             c = dict(conf)
@@ -6696,7 +6641,7 @@ class Engine:
             c["delta.inCommitTimestampEnablementTimestamp"] = str(ict)
             return c
 
-        version = deltalog.write_commit_streamed(
+        version = self._commit(
             path,
             lambda: iter(()),
             None,
@@ -6711,7 +6656,6 @@ class Engine:
             protocol_action=protocol_action,
             configuration_fn=conf_fn,
         )
-        self._snapshot_cache.invalidate()
         return version
 
     def enable_clustering(self, alias: str, columns: list[str]) -> int:
@@ -6730,8 +6674,9 @@ class Engine:
         if self.config.read_only:
             raise ReadOnlyError(alias)
         path = self.resolve(alias)
-        meta = deltalog.table_metadata_no_spark(path) or {}
-        schema = self._table_schema(path)
+        snap = self._snapshot(path)
+        meta = snap.metadata or {}
+        schema = snap.schema
         known = {f.name for f in schema.fields} if schema is not None else set()
         missing = [c for c in columns if c not in known]
         if not columns or missing:
@@ -6744,7 +6689,7 @@ class Engine:
                 f"clustering columns {overlap} are partition columns — Delta "
                 "forbids clustering on partition columns"
             )
-        proto = deltalog.table_protocol_no_spark(path) or {}
+        proto = snap.protocol or {}
         existing_r = set(proto.get("readerFeatures") or [])
         existing_w = set(proto.get("writerFeatures") or [])
         protocol_action = None
@@ -6762,7 +6707,7 @@ class Engine:
                 "minWriterVersion": 7,
                 "writerFeatures": ["clusteredTable", "domainMetadata"],
             }
-        version = deltalog.write_commit_streamed(
+        version = self._commit(
             path,
             lambda: iter(()),
             None,
@@ -6774,7 +6719,7 @@ class Engine:
             identity_handled=True,
             defaults_handled=True,
             cdf_handled=True,
-            dv_write=self._dv_protocol(path),
+            dv_write=snap.deletion_vectors,
             protocol_action=protocol_action,
             domain_actions=[
                 {
@@ -6787,7 +6732,6 @@ class Engine:
             ],
             row_tracking_assign=True,
         )
-        self._snapshot_cache.invalidate()
         return version
 
     def enable_row_tracking(self, alias: str, enabled: bool = True) -> int:
@@ -6817,10 +6761,11 @@ class Engine:
         if self.config.read_only:
             raise ReadOnlyError(alias)
         path = self.resolve(alias)
-        proto = deltalog.table_protocol_no_spark(path) or {}
+        snap = self._snapshot(path)
+        proto = snap.protocol or {}
         existing_r = set(proto.get("readerFeatures") or [])
         existing_w = set(proto.get("writerFeatures") or [])
-        meta = deltalog.table_metadata_no_spark(path) or {}
+        meta = snap.metadata or {}
         if "rowTracking" not in existing_w:
             if existing_r or existing_w:
                 # never CLOBBER a feature list this engine didn't write
@@ -6831,7 +6776,7 @@ class Engine:
                     "its feature lists",
                 )
             self._refuse_legacy_writer_capabilities(path, "enable_row_tracking")
-            deltalog.write_commit_streamed(
+            self._commit(
                 path,
                 lambda: iter(()),
                 None,
@@ -6852,8 +6797,9 @@ class Engine:
         # Backfill: re-add each live file WITHOUT a baseRowId so the commit
         # assigns fresh ids above the (empty) high-water mark; files that
         # already carry one (re-running enablement) pass through untouched.
-        live = deltalog._live_adds_no_spark(path)
-        conf = deltalog.table_configuration_no_spark(path)
+        ix = self._file_index(path)  # after the protocol upgrade above
+        live = ix.adds
+        conf = ix.snapshot.configuration
         if enabled:
             conf["delta.enableRowTracking"] = "true"
 
@@ -6878,7 +6824,7 @@ class Engine:
                     add["deletionVector"] = a["deletionVector"]
                 yield add
 
-        version = deltalog.write_commit_streamed(
+        version = self._commit(
             path,
             backfill,
             None,
@@ -6891,13 +6837,12 @@ class Engine:
             identity_handled=True,
             defaults_handled=True,
             cdf_handled=True,
-            dv_write=self._dv_protocol(path),
+            dv_write=ix.snapshot.deletion_vectors,
             row_tracking_assign=True,
         )
-        self._snapshot_cache.invalidate()
         return version
 
-    def _delete_with_dvs(self, path: str, condition: Column) -> int | None:
+    def _delete_with_dvs(self, ix: _FileIndex, condition: Column) -> int | None:
         """DELETE by WRITING deletion vectors — no data rewrite: each
         touched file's matching row positions merge with its existing DV
         and serialize to a fresh ``deletion_vector_<uuid>.bin``
@@ -6910,9 +6855,10 @@ class Engine:
         ALSO written as ``delete`` change files — exactly the rows whose
         liveness the DVs flip, so the change stream stays row-exact
         without any data-file rewrite."""
+        path, snap = ix.path, ix.snapshot
         try:
             target = self._apply_collations(
-                path, self._read_data(path, keep_file_col=True, keep_pos=True)
+                snap, self._read_data(path, keep_file_col=True, keep_pos=True, ix=ix)
             )
         except _NeedsEnumeratedScan:
             return None
@@ -6920,22 +6866,21 @@ class Engine:
         matched = matched_rows.select(
             uri_rel_col(F.col("_file"), path).alias("_rel"), "_pos"
         )
-        descs, dv_rels = self._dv_mark_positions(path, matched)
+        descs, dv_rels = self._dv_mark_positions(ix, matched)
         if not descs:
-            return deltalog.latest_version(path)  # nothing matched: no-op
+            return ix.version  # nothing matched: no-op
         cdc_actions = None
-        if self._cdf_enabled(path):
-            meta = deltalog.table_metadata_no_spark(path) or {}
+        if snap.flag("delta.enableChangeDataFeed"):
             cdc_actions = self._write_cdc(
-                path,
+                snap,
                 matched_rows.drop("_file", "_pos").withColumn(
                     "_change_type", F.lit("delete")
                 ),
-                list(meta.get("partitionColumns") or []),
+                snap.partition_columns,
             )
-        adds, removes = self._dv_actions_for(path, descs)
+        adds, removes = self._dv_actions_for(ix, descs)
         version = self._commit_moved(
-            path,
+            snap,
             dv_rels,  # failed commits clean the freshly written DV files
             adds,
             removes,
@@ -6948,17 +6893,16 @@ class Engine:
             cdf_handled=True,
             dv_write=True,
         )
-        self._snapshot_cache.invalidate()
         return version
 
-    def _dv_mark_positions(self, path: str, matched_pos: DataFrame):
+    def _dv_mark_positions(self, ix: _FileIndex, matched_pos: DataFrame):
         """Shared DV-writing core: (rel, pos) rows -> per-file merged
         deletion vectors written EXECUTOR-side; returns
         ``(descriptor rows, dv-file rel names)``."""
         import pandas as pd
 
-        dv_map = self._dv_map(path)
-        table_path = path
+        dv_map = ix.dv_map
+        path = table_path = ix.path
         out_schema = (
             "rel string, storageType string, pathOrInlineDv string, "
             "offset long, sizeInBytes long, cardinality long"
@@ -7007,11 +6951,11 @@ class Engine:
         ]
         return descs, rels
 
-    def _dv_actions_for(self, path: str, descs) -> tuple[list[dict], list[dict]]:
+    def _dv_actions_for(self, ix: _FileIndex, descs) -> tuple[list[dict], list[dict]]:
         """Build the (adds, removes) action pair for freshly written DVs:
         remove the old (path, dv) identity, re-add with the new descriptor;
         fully-dead files (cardinality == numRecords) get a plain remove."""
-        live = self._file_index(path).adds
+        live = ix.adds
         adds, removes = [], []
         for d in descs:
             a = live[d["rel"]]
@@ -7054,16 +6998,21 @@ class Engine:
         return adds, removes
 
     def _update_with_dvs(
-        self, path: str, condition: Column, assignments: dict[str, Column], parts: list[str]
+        self,
+        ix: _FileIndex,
+        condition: Column,
+        assignments: dict[str, Column],
+        parts: list[str],
     ) -> int | None:
         """UPDATE as Delta's DV shape: deletion-vector the matched positions
         in place and APPEND a new file carrying the updated rows — touched
         files are never rewritten, so a point update on a 100 TB table
         costs O(matched rows), not O(touched files). Returns None past the
         enumerable threshold (caller falls back to copy-on-write)."""
+        path, snap = ix.path, ix.snapshot
         try:
             target = self._apply_collations(
-                path, self._read_data(path, keep_file_col=True, keep_pos=True)
+                snap, self._read_data(path, keep_file_col=True, keep_pos=True, ix=ix)
             )
         except _NeedsEnumeratedScan:
             return None
@@ -7071,39 +7020,39 @@ class Engine:
         pos = matched.select(
             uri_rel_col(F.col("_file"), path).alias("_rel"), "_pos"
         )
-        descs, dv_rels = self._dv_mark_positions(path, pos)
+        descs, dv_rels = self._dv_mark_positions(ix, pos)
         if not descs:
-            return deltalog.latest_version(path)  # nothing matched: no-op
+            return ix.version  # nothing matched: no-op
         updated = matched.drop("_file", "_pos").withColumns(
             {
                 c: expr.cast(dict(target.drop("_file", "_pos").dtypes)[c])
                 for c, expr in assignments.items()
             }
         )
-        moved, parts_phys = self._stage_physical(path, updated, list(parts))
+        moved, parts_phys = self._stage_physical(snap, updated, list(parts))
         cdc_actions = None
-        if self._cdf_enabled(path):
+        if snap.flag("delta.enableChangeDataFeed"):
             # row-exact CDF from the DV shape: the marked rows are the
             # preimages, the appended rows their postimages
             pre = matched.drop("_file", "_pos").withColumn(
                 "_change_type", F.lit("update_preimage")
             )
             post = updated.withColumn("_change_type", F.lit("update_postimage"))
-            cdc_actions = self._write_cdc(path, pre.unionByName(post), parts)
-        dv_adds, removes = self._dv_actions_for(path, descs)
-        _scols = deltalog.stats_columns(path)
+            cdc_actions = self._write_cdc(snap, pre.unionByName(post), parts)
+        dv_adds, removes = self._dv_actions_for(ix, descs)
+        _scols = snap.stats_columns()
         new_adds = [
             deltalog.add_action_for(path, rel, parts_phys, stats_cols=_scols)
             for rel in moved
         ]
         version = self._commit_moved(
-            path,
+            snap,
             dv_rels + moved,
             dv_adds + new_adds,
             removes,
             partition_cols=list(parts),
             operation="UPDATE",
-            enforced_constraints=self._enforce_check_constraints(path, updated),
+            enforced_constraints=self._enforce_check_constraints(snap, updated),
             enforced_generated=True,
             identity_handled=True,
             defaults_handled=True,
@@ -7111,11 +7060,10 @@ class Engine:
             cdf_handled=True,
             dv_write=True,
         )
-        self._snapshot_cache.invalidate()
         return version
 
     def _merge_with_dvs(
-        self, path: str, source: DataFrame, on: list[str], parts: list[str]
+        self, ix: _FileIndex, source: DataFrame, on: list[str], parts: list[str]
     ) -> int | None:
         """MERGE as the DV shape: deletion-vector every matched target row
         in place, append ALL source rows (replacements and inserts) as new
@@ -7128,7 +7076,8 @@ class Engine:
         # missing a table column would commit nonconforming files that read
         # back as nulls. Same contract: extras and missing columns reject,
         # conforming columns cast to the logged types.
-        schema = self._table_schema(path)
+        path, snap = ix.path, ix.snapshot
+        schema = snap.schema
         if schema is not None:
             src_cols = set(source.columns)
             tbl_cols = [f.name for f in schema.fields]
@@ -7159,7 +7108,7 @@ class Engine:
             )
         try:
             target = self._apply_collations(
-                path, self._read_data(path, keep_file_col=True, keep_pos=True)
+                snap, self._read_data(path, keep_file_col=True, keep_pos=True, ix=ix)
             )
         except _NeedsEnumeratedScan:
             return None
@@ -7168,14 +7117,14 @@ class Engine:
         pos = matched.select(
             uri_rel_col(F.col("_file"), path).alias("_rel"), "_pos"
         )
-        descs, dv_rels = self._dv_mark_positions(path, pos)
+        descs, dv_rels = self._dv_mark_positions(ix, pos)
         dv_adds, removes = (
-            self._dv_actions_for(path, descs) if descs else ([], [])
+            self._dv_actions_for(ix, descs) if descs else ([], [])
         )
-        enforced = self._enforce_check_constraints(path, source)
-        moved, parts_phys = self._stage_physical(path, source, list(parts))
+        enforced = self._enforce_check_constraints(snap, source)
+        moved, parts_phys = self._stage_physical(snap, source, list(parts))
         cdc_actions = None
-        if self._cdf_enabled(path):
+        if snap.flag("delta.enableChangeDataFeed"):
             # same change taxonomy as the copy-on-write MERGE: DV'd target
             # rows as update_preimage, their source replacements as
             # update_postimage, unmatched source rows as insert
@@ -7190,15 +7139,15 @@ class Engine:
                 "_change_type", F.lit("insert")
             )
             cdc_actions = self._write_cdc(
-                path, pre.unionByName(post).unionByName(ins), parts
+                snap, pre.unionByName(post).unionByName(ins), parts
             )
-        _scols = deltalog.stats_columns(path)
+        _scols = snap.stats_columns()
         new_adds = [
             deltalog.add_action_for(path, rel, parts_phys, stats_cols=_scols)
             for rel in moved
         ]
         version = self._commit_moved(
-            path,
+            snap,
             dv_rels + moved,
             dv_adds + new_adds,
             removes,
@@ -7212,11 +7161,10 @@ class Engine:
             cdf_handled=True,
             dv_write=True,
         )
-        self._snapshot_cache.invalidate()
         return version
 
     def _enforce_check_constraints(
-        self, path: str, df: DataFrame, schema_json: str | None = None
+        self, snap: deltalog.Snapshot, df: DataFrame, schema_json: str | None = None
     ) -> bool:
         """Validate ``df`` (the rows about to be written) against the
         table's declared CHECK constraints (``delta.constraints.<name>``
@@ -7229,14 +7177,14 @@ class Engine:
         nulls for it). One ``limit(1)`` probe job per predicate, run only
         when any are declared. Returns True — the ``enforced_constraints``
         proof the commit gate requires for writer-2/3 tables."""
-        for name, sql in sorted(deltalog.declared_constraints(path).items()):
+        for name, sql in sorted(snap.constraints.items()):
             violating = ~F.coalesce(F.expr(sql).cast("boolean"), F.lit(True))
             if df.filter(violating).limit(1).count() > 0:
                 raise ValueError(
                     f"CHECK constraint {name!r} ({sql}) violated by written "
                     f"row(s) — write rejected (Delta constraint semantics)"
                 )
-        for col, sql in sorted(deltalog.declared_invariants(path).items()):
+        for col, sql in sorted(snap.invariants.items()):
             if col not in df.columns:
                 continue
             violating = ~F.coalesce(F.expr(sql).cast("boolean"), F.lit(True))
@@ -7270,7 +7218,7 @@ class Engine:
             # would be far worse than the loud error (review r13 #4)
             schema = T.StructType.fromJson(json.loads(schema_json))
         else:
-            schema = self._table_schema(path)
+            schema = snap.schema
         for f in schema.fields if schema is not None else []:
             if f.nullable:
                 continue
@@ -7289,14 +7237,14 @@ class Engine:
                 )
         return True
 
-    def _rel_touched(self, touched_uris: list[str], path: str) -> list[str]:
+    def _rel_touched(self, touched_uris: list[str], ix: _FileIndex) -> list[str]:
         """Decode touched-file URIs to table-relative paths, validated against
         the live snapshot — a path that fails to relativize into the live set
         would emit a remove action that never tombstones anything (silently
         resurrecting deleted rows), so fail loudly instead. Shallow-clone
         snapshots reference foreign files by ABSOLUTE path; those match the
         live set by their decoded absolute form."""
-        live = set(deltalog._live_paths_no_spark(path))
+        path, live = ix.path, ix.adds
         rels: list[str] = []
         bogus: list[str] = []
         for u in touched_uris:
@@ -7321,7 +7269,7 @@ class Engine:
             )
         return rels
 
-    def _dml_touched(self, path: str, matched: DataFrame):
+    def _dml_touched(self, ix: _FileIndex, matched: DataFrame):
         """Touched-file set of a DML predicate, overflow-guarded.
 
         ``matched`` is the target restricted to matching rows (carrying the
@@ -7339,12 +7287,13 @@ class Engine:
           distributed anti-join — driver memory stays O(1) in the touched
           count.
         """
+        path = ix.path
         touched_df = matched.select("_file").distinct()
         limit = self.large_listing_threshold
         rows = touched_df.limit(limit + 1).collect()
         if len(rows) <= limit:
             uris = [r["_file"] for r in rows]
-            removes = [{"path": p} for p in sorted(self._rel_touched(uris, path))]
+            removes = [{"path": p} for p in sorted(self._rel_touched(uris, ix))]
             return uris, touched_df, removes
         # PIN the touched set: the anti-join below validates it and
         # removes_fn later re-executes the plan (twice on OCC retry) — on
@@ -7355,8 +7304,8 @@ class Engine:
         # unpersist after the commit lands.
         touched_df = touched_df.persist()
         rel_df = touched_df.select(uri_rel_col(F.col("_file"), path).alias("path"))
-        snap = deltalog.snapshot_files(self.spark, path).select("path")
-        if rel_df.join(snap, "path", "left_anti").limit(1).count() > 0:
+        live = deltalog.snapshot_files(self.spark, path).select("path")
+        if rel_df.join(live, "path", "left_anti").limit(1).count() > 0:
             touched_df.unpersist()
             raise RuntimeError(
                 f"touched files not in live snapshot of {path} — "
@@ -7387,7 +7336,7 @@ class Engine:
         files_df = local_df(self.spark, [(u,) for u in touched_uris], "_file string")
         return target.join(F.broadcast(files_df), on="_file", how="left_semi")
 
-    def _require_row_id_stability(self, path: str, op: str) -> None:
+    def _require_row_id_stability(self, snap: deltalog.Snapshot, op: str) -> None:
         """``delta.enableRowTracking=true`` promises STABLE row ids across
         operations that do not logically change rows — rewriting surviving
         rows into new files breaks that promise unless the writer
@@ -7395,11 +7344,9 @@ class Engine:
         loudly instead of silently renumbering (DV-shaped DELETE, appends,
         overwrites, restore and clone all remain allowed: they never
         renumber surviving rows)."""
-        if deltalog.has_row_tracking(path) and deltalog.row_tracking_enabled(
-            path
-        ):
+        if "rowTracking" in snap.writer_features and snap.flag("delta.enableRowTracking"):
             raise UnsupportedProtocolError(
-                path,
+                snap.path,
                 f"{op} on a delta.enableRowTracking=true table would "
                 "renumber preserved row ids (this engine does not write "
                 "materialized row-id columns) — disable row tracking or "
@@ -7419,15 +7366,17 @@ class Engine:
         if self.config.read_only:
             raise ReadOnlyError(alias)
         path = self.resolve(alias)
+        ix = self._file_index(path)
+        snap = ix.snapshot
         # replaced rows are LOGICAL updates: preservation would demand
         # materialized ids even on the DV shape
-        self._require_row_id_stability(path, "MERGE")
+        self._require_row_id_stability(snap, "MERGE")
         # MERGE replaces matched rows with SOURCE rows and inserts the rest,
         # so the source must carry every column — including identity
         # columns, making every merged value an EXPLICIT insert: legal only
         # for GENERATED BY DEFAULT identity (the mark still advances from
         # the written stats in _commit_moved)
-        for _icol, _ispec in sorted(deltalog.identity_columns(path).items()):
+        for _icol, _ispec in sorted(snap.identity.items()):
             if not _ispec["allowExplicitInsert"]:
                 raise ValueError(
                     f"column {_icol!r} is GENERATED ALWAYS AS IDENTITY — "
@@ -7435,21 +7384,22 @@ class Engine:
                     "write_table append (which generates values) or declare "
                     "the column GENERATED BY DEFAULT"
                 )
-        meta = deltalog.table_metadata_no_spark(path) or {}
-        parts = meta.get("partitionColumns") or []
-        if self._dv_dml_eligible(path):
+        parts = snap.partition_columns
+        if self._dv_dml_eligible(path, ix):
             # MERGE as the DV shape: mark matched positions, append source
-            v = self._merge_with_dvs(path, source, list(on), list(parts))
+            v = self._merge_with_dvs(ix, source, list(on), parts)
             if v is not None:
                 return v
         keys = source.select(*on).dropDuplicates()
-        target = self._apply_collations(path, self._read_data(path, keep_file_col=True))
+        target = self._apply_collations(
+            snap, self._read_data(path, keep_file_col=True, ix=ix)
+        )
         touched_uris, touched_df, removes = self._dml_touched(
-            path, target.join(keys, on=on, how="left_semi")
+            ix, target.join(keys, on=on, how="left_semi")
         )
         if not callable(removes):
-            removes = self._dv_removes(path, removes)
-        elif self._dv_protocol(path):
+            removes = self._dv_removes(ix, removes)
+        elif snap.deletion_vectors:
             raise UnsupportedProtocolError(
                 path,
                 "broad MERGE on a deletion-vector table cannot stream "
@@ -7467,7 +7417,7 @@ class Engine:
             else:
                 rewrite = source  # pure insert
             cdc_actions = None
-            if self._cdf_enabled(path):
+            if snap.flag("delta.enableChangeDataFeed"):
                 # Delta CDF for MERGE: replaced target rows as
                 # update_preimage, their source replacements as
                 # update_postimage, unmatched source rows as insert
@@ -7487,30 +7437,29 @@ class Engine:
                     "_change_type", F.lit("insert")
                 )
                 cdc_actions = self._write_cdc(
-                    path, pre.unionByName(post).unionByName(ins), parts
+                    snap, pre.unionByName(post).unionByName(ins), parts
                 )
-            enforced = self._enforce_check_constraints(path, rewrite)
-            moved, parts_phys = self._stage_physical(path, rewrite, list(parts))
-            _scols = deltalog.stats_columns(path)
+            enforced = self._enforce_check_constraints(snap, rewrite)
+            moved, parts_phys = self._stage_physical(snap, rewrite, parts)
+            _scols = snap.stats_columns()
             adds = [
                 deltalog.add_action_for(path, rel, parts_phys, stats_cols=_scols)
                 for rel in moved
             ]
             version = self._commit_moved(
-                path,
+                snap,
                 moved,
                 adds,
                 removes if (touched_uris is None or touched_uris) else [],
-                partition_cols=list(parts),
+                partition_cols=parts,
                 operation="MERGE",
                 enforced_constraints=enforced,
                 cdc_adds=cdc_actions,
                 cdf_handled=True,
-                dv_write=self._dv_protocol(path),
+                dv_write=snap.deletion_vectors,
             )
         finally:
             touched_df.unpersist()  # no-op unless the broad path pinned it
-        self._snapshot_cache.invalidate()
         return version
 
     def delete(
@@ -7542,21 +7491,24 @@ class Engine:
         if match is not None and not on:
             raise ValueError("the match form needs join key columns via on=[...]")
         path = self.resolve(alias)
-        meta = deltalog.table_metadata_no_spark(path) or {}
-        parts = meta.get("partitionColumns") or []
-        if match is None and self._dv_dml_eligible(path):
+        ix = self._file_index(path)
+        snap = ix.snapshot
+        parts = snap.partition_columns
+        if match is None and self._dv_dml_eligible(path, ix):
             # DELETE as a deletion-vector commit — no data rewrite. (CDF
             # tables included since round 10: the DV path writes the
             # marked rows as 'delete' change files itself.)
-            v = self._delete_with_dvs(path, condition)
+            v = self._delete_with_dvs(ix, condition)
             if v is not None:
                 return v
         # the DV shape above preserves row ids (files untouched); the
         # copy-on-write fallback rewrites survivors and cannot
-        self._require_row_id_stability(path, "copy-on-write DELETE")
+        self._require_row_id_stability(snap, "copy-on-write DELETE")
         # collated columns re-typed so the DELETE condition compares under
         # the declared collation, exactly like read_table
-        target = self._apply_collations(path, self._read_data(path, keep_file_col=True))
+        target = self._apply_collations(
+            snap, self._read_data(path, keep_file_col=True, ix=ix)
+        )
         if match is not None:
             # deduped so the survivor-side LEFT join cannot fan rows out
             keys = match.select(*[F.col(c) for c in on]).dropDuplicates(list(on))
@@ -7585,13 +7537,13 @@ class Engine:
                 return df.filter(~condition)
 
         touched_uris, touched_df, removes = self._dml_touched(
-            path, _is_matched(target)
+            ix, _is_matched(target)
         )
         if touched_uris is not None and not touched_uris:
-            return deltalog.latest_version(path)  # nothing to delete: no-op
+            return ix.version  # nothing to delete: no-op
         if not callable(removes):
-            removes = self._dv_removes(path, removes)
-        elif self._dv_protocol(path):
+            removes = self._dv_removes(ix, removes)
+        elif snap.deletion_vectors:
             raise UnsupportedProtocolError(
                 path,
                 "broad-predicate DELETE on a deletion-vector table cannot "
@@ -7603,7 +7555,7 @@ class Engine:
                 self._rows_in_files(target, touched_uris, touched_df)
             ).drop("_file")
             cdc_actions = None
-            if self._cdf_enabled(path):
+            if snap.flag("delta.enableChangeDataFeed"):
                 # Delta CDF: a partial-file DELETE must record the deleted
                 # ROWS as change files (file-granularity derivation would
                 # wrongly re-feed the survivors)
@@ -7612,29 +7564,28 @@ class Engine:
                     .drop("_file")
                     .withColumn("_change_type", F.lit("delete"))
                 )
-                cdc_actions = self._write_cdc(path, deleted, parts)
-            enforced = self._enforce_check_constraints(path, survivors)
-            moved, parts_phys = self._stage_physical(path, survivors, list(parts))
-            _scols = deltalog.stats_columns(path)
+                cdc_actions = self._write_cdc(snap, deleted, parts)
+            enforced = self._enforce_check_constraints(snap, survivors)
+            moved, parts_phys = self._stage_physical(snap, survivors, parts)
+            _scols = snap.stats_columns()
             adds = [
                 deltalog.add_action_for(path, rel, parts_phys, stats_cols=_scols)
                 for rel in moved
             ]
             version = self._commit_moved(
-                path,
+                snap,
                 moved,
                 adds,
                 removes,
-                partition_cols=list(parts),
+                partition_cols=parts,
                 operation="DELETE",
                 enforced_constraints=enforced,
                 cdc_adds=cdc_actions,
                 cdf_handled=True,
-                dv_write=self._dv_protocol(path),
+                dv_write=snap.deletion_vectors,
             )
         finally:
             touched_df.unpersist()  # no-op unless the broad path pinned it
-        self._snapshot_cache.invalidate()
         return version
 
     def update(
@@ -7654,15 +7605,16 @@ class Engine:
         if self.config.read_only:
             raise ReadOnlyError(alias)
         path = self.resolve(alias)
+        ix = self._file_index(path)
+        snap = ix.snapshot
         # updated rows are logical updates: their ids must survive, which
         # needs materialized row-id columns even on the DV shape
-        self._require_row_id_stability(path, "UPDATE")
-        meta = deltalog.table_metadata_no_spark(path) or {}
-        parts = meta.get("partitionColumns") or []
+        self._require_row_id_stability(snap, "UPDATE")
+        parts = snap.partition_columns
         bad = sorted(set(assignments) & set(parts))
         if bad:
             raise ValueError(f"cannot UPDATE partition column(s) {bad}; use merge()")
-        idents = deltalog.identity_columns(path)
+        idents = snap.identity
         bad_id = sorted(
             c for c in set(assignments) & set(idents)
             if not idents[c]["allowExplicitInsert"]
@@ -7672,25 +7624,27 @@ class Engine:
                 f"cannot UPDATE GENERATED ALWAYS AS IDENTITY column(s) "
                 f"{bad_id} — identity values are engine-generated"
             )
-        target = self._apply_collations(path, self._read_data(path, keep_file_col=True))
+        target = self._apply_collations(
+            snap, self._read_data(path, keep_file_col=True, ix=ix)
+        )
         unknown = sorted(set(assignments) - set(target.columns))
         if unknown:
             raise ValueError(f"UPDATE of non-existent column(s) {unknown}")
-        if self._dv_dml_eligible(path):
+        if self._dv_dml_eligible(path, ix):
             # UPDATE as Delta's DV shape: mark old positions, append the
             # updated rows — no touched-file rewrite. (CDF tables included
             # since round 10: the DV path writes pre/post change files.)
-            v = self._update_with_dvs(path, condition, assignments, list(parts))
+            v = self._update_with_dvs(ix, condition, assignments, parts)
             if v is not None:
                 return v
         touched_uris, touched_df, removes = self._dml_touched(
-            path, target.filter(condition)
+            ix, target.filter(condition)
         )
         if touched_uris is not None and not touched_uris:
-            return deltalog.latest_version(path)  # nothing matches: no-op
+            return ix.version  # nothing matches: no-op
         if not callable(removes):
-            removes = self._dv_removes(path, removes)
-        elif self._dv_protocol(path):
+            removes = self._dv_removes(ix, removes)
+        elif snap.deletion_vectors:
             raise UnsupportedProtocolError(
                 path,
                 "broad-predicate UPDATE on a deletion-vector table cannot "
@@ -7707,7 +7661,7 @@ class Engine:
                 }
             ).drop("_file")
             cdc_actions = None
-            if self._cdf_enabled(path):
+            if snap.flag("delta.enableChangeDataFeed"):
                 # Delta CDF: preimage + postimage rows of every matched row
                 matched = (
                     self._rows_in_files(target, touched_uris, touched_df)
@@ -7721,29 +7675,28 @@ class Engine:
                         for c, expr in assignments.items()
                     }
                 ).withColumn("_change_type", F.lit("update_postimage"))
-                cdc_actions = self._write_cdc(path, pre.unionByName(post), parts)
-            enforced = self._enforce_check_constraints(path, rewritten)
-            moved, parts_phys = self._stage_physical(path, rewritten, list(parts))
-            _scols = deltalog.stats_columns(path)
+                cdc_actions = self._write_cdc(snap, pre.unionByName(post), parts)
+            enforced = self._enforce_check_constraints(snap, rewritten)
+            moved, parts_phys = self._stage_physical(snap, rewritten, parts)
+            _scols = snap.stats_columns()
             adds = [
                 deltalog.add_action_for(path, rel, parts_phys, stats_cols=_scols)
                 for rel in moved
             ]
             version = self._commit_moved(
-                path,
+                snap,
                 moved,
                 adds,
                 removes,
-                partition_cols=list(parts),
+                partition_cols=parts,
                 operation="UPDATE",
                 enforced_constraints=enforced,
                 cdc_adds=cdc_actions,
                 cdf_handled=True,
-                dv_write=self._dv_protocol(path),
+                dv_write=snap.deletion_vectors,
             )
         finally:
             touched_df.unpersist()  # no-op unless the broad path pinned it
-        self._snapshot_cache.invalidate()
         return version
 
     def write_table_stream(
@@ -7848,10 +7801,10 @@ class Engine:
         # OPTIMIZE does not logically change rows, so row ids MUST be
         # preserved — impossible through bin-packing without materialized
         # row-id columns
-        self._require_row_id_stability(path, "compaction (OPTIMIZE)")
-        meta = deltalog.table_metadata_no_spark(path) or {}
-        parts = meta.get("partitionColumns") or []
-        df = self._read_data(path)
+        ix = self._file_index(path)
+        self._require_row_id_stability(ix.snapshot, "compaction (OPTIMIZE)")
+        parts = ix.snapshot.partition_columns
+        df = self._read_data(path, ix=ix)
         if sort_by is None and zorder_by is None:
             cluster_cols = self._clustering_columns(path)
             cluster_cols = [c for c in cluster_cols if c in df.columns]
@@ -7973,11 +7926,12 @@ class Engine:
         if self.config.read_only:
             raise ReadOnlyError(alias)
         path = self.resolve(alias)
+        snap = self._snapshot(path)
         if retention_hours is None:
             # Delta semantics: the table's own deletedFileRetentionDuration
             # property governs when unset by the caller; 7 days otherwise
-            prop = deltalog.retention_hours_property(
-                path, "delta.deletedFileRetentionDuration"
+            prop = deltalog.parse_interval_hours(
+                snap.configuration.get("delta.deletedFileRetentionDuration")
             )
             retention_hours = prop if prop is not None else 168.0
         cutoff = time.time() - retention_hours * 3600.0
@@ -7995,8 +7949,8 @@ class Engine:
         # directories (`<col>=...` — physical names on mapped tables) or
         # CDC directories (`_change_data`, reclaimable past retention like
         # any unreferenced file, upstream semantics).
-        meta_v = deltalog.table_metadata_no_spark(path) or {}
-        l2p_v = self._column_mapping(path) or {}
+        meta_v = snap.metadata or {}
+        l2p_v = snap.column_mapping or {}
         part_prefixes = tuple(
             f"{l2p_v.get(c, c)}=" for c in (meta_v.get("partitionColumns") or [])
         )
@@ -8051,7 +8005,7 @@ class Engine:
         )
         snapshot = deltalog.snapshot_files(self.spark, path)
         live = snapshot.select("path")
-        if self._dv_protocol(path):
+        if snap.deletion_vectors:
             # referenced DV bins are LIVE: resolve each live descriptor to
             # its table-relative file name (executor-side, metadata-sized)
             dv_flat = snapshot.filter(
@@ -8106,7 +8060,6 @@ class Engine:
             if root != path and not os.listdir(root):
                 os.rmdir(root)
         # stale cached file lists must not survive a reclamation
-        self._snapshot_cache.invalidate()
         return deleted
 
     def write_version_checksum(self, alias: str) -> dict:
@@ -8139,14 +8092,11 @@ class Engine:
         if retention_hours is None:
             # table property first (delta.logRetentionDuration), else the
             # Delta default order of magnitude (7 days here; Delta's is 30)
-            prop = deltalog.retention_hours_property(
-                path, "delta.logRetentionDuration"
+            prop = deltalog.parse_interval_hours(
+                self._snapshot(path).configuration.get("delta.logRetentionDuration")
             )
             retention_hours = prop if prop is not None else 168.0
-        removed = deltalog.cleanup_log(path, retention_hours=retention_hours)
-        if removed:
-            self._snapshot_cache.invalidate()
-        return removed
+        return deltalog.cleanup_log(path, retention_hours=retention_hours)
 
     def compact_log(
         self, alias: str, start: int | None = None, end: int | None = None
@@ -8172,7 +8122,6 @@ class Engine:
         if start >= end:
             return None
         name = deltalog.write_log_compaction(path, start, end)
-        self._snapshot_cache.invalidate()
         return name
 
     def _with_zorder(
@@ -8301,10 +8250,28 @@ class Engine:
                 )
         return T.StructType(merged).json()
 
+    def _commit(self, path: str, adds_fn, removes_fn=None, **kwargs: Any) -> int:
+        """Every engine commit: one :func:`deltalog.write_commit_streamed`,
+        after which the table's snapshot-cache entry is dropped — the one
+        place the engine invalidates it (GET trusts the cached entry, every
+        other operation tip-checks it)."""
+        try:
+            return deltalog.write_commit_streamed(path, adds_fn, removes_fn, **kwargs)
+        finally:
+            self._snapshot_cache.discard(path)
+
     def _commit_moved(
-        self, path: str, moved: list[str], adds: list, removes: Any, **kwargs: Any
+        self,
+        snap: deltalog.Snapshot,
+        moved: list[str],
+        adds: list,
+        removes: Any,
+        **kwargs: Any,
     ) -> int:
-        """``deltalog.write_commit`` with failure cleanup: if the commit loses
+        """:meth:`_commit` against the operation's snapshot ``snap`` (the
+        attempt begins at ``snap.version + 1``, so a commit that landed after
+        the operation read its files meets the conflict check) with failure
+        cleanup: if the commit loses
         (e.g. :class:`ConcurrentWriteError`), the already-moved data files are
         removed from the table root so the directory only ever holds committed
         files — otherwise a failed write would permanently expose uncommitted
@@ -8341,30 +8308,25 @@ class Engine:
         # icebergCompat file obligations — so Engine commits prove both
         # (raw deltalog.write_commit callers still refuse on such tables);
         # the logged schema likewise stays authoritative for collations
-        kwargs.setdefault("mapped_write", bool(self._column_mapping(path)))
+        kwargs.setdefault("mapped_write", bool(snap.column_mapping))
         kwargs.setdefault("iceberg_handled", True)
         kwargs.setdefault("collations_handled", True)
-        if deltalog.identity_columns(path):
+        if snap.identity:
             sj, hwm_changed = deltalog.advance_identity_hwm(
-                path,
-                kwargs.get("schema_json"),
-                adds,
-                l2p=self._column_mapping(path),
+                snap, kwargs.get("schema_json"), adds, l2p=snap.column_mapping
             )
             if hwm_changed:
                 kwargs["schema_json"] = sj
+        path = snap.path
         cleanup = list(moved) + [c["path"] for c in (cdc_adds or [])]
         try:
-            if callable(removes):
-                return deltalog.write_commit_streamed(
-                    path,
-                    lambda: iter(adds),
-                    removes,
-                    cdc_adds_fn=(lambda: iter(cdc_adds)) if cdc_adds else None,
-                    **kwargs,
-                )
-            return deltalog.write_commit(
-                path, adds, removes, cdc_adds=cdc_adds, **kwargs
+            return self._commit(
+                path,
+                lambda: iter(adds),
+                removes if callable(removes) else (lambda: iter(removes)) if removes else None,
+                cdc_adds_fn=(lambda: iter(cdc_adds)) if cdc_adds else None,
+                snapshot=snap,
+                **kwargs,
             )
         except BaseException:
             for rel in cleanup:

@@ -296,9 +296,10 @@ class GovernedReader(DataSourceReader):
         self._pruning: list[Filter] = []
         # NAME-mode column mapping: DNF keys / pushed filters arrive with
         # LOGICAL names; files, partitionValues, and stats carry PHYSICAL
-        self.l2p: dict[str, str] = deltalog.column_mapping(self.path)
-        self.l2id: dict[str, int] = deltalog.column_mapping_field_ids(self.path)
-        if self.l2p and deltalog.mapping_has_struct(self.path):
+        snap = deltalog.load_snapshot(self.path)
+        self.l2p: dict[str, str] = snap.column_mapping
+        self.l2id: dict[str, int] = snap.field_ids
+        if snap.mapping_has_struct:
             from ..errors import UnsupportedProtocolError
 
             raise UnsupportedProtocolError(
@@ -510,9 +511,10 @@ class GovernedStreamReader(DataSourceStreamReader):
         self.path = options["path"]
         self.dnf: acl.PartitionDNF = json.loads(options.get("dnf", "null")) or []
         self.target_task_bytes = int(options.get("target_task_bytes", 128 << 20))
-        self.l2p: dict[str, str] = deltalog.column_mapping(self.path)
-        self.l2id: dict[str, int] = deltalog.column_mapping_field_ids(self.path)
-        if self.l2p and deltalog.mapping_has_struct(self.path):
+        snap = deltalog.load_snapshot(self.path)
+        self.l2p: dict[str, str] = snap.column_mapping
+        self.l2id: dict[str, int] = snap.field_ids
+        if snap.mapping_has_struct:
             from ..errors import UnsupportedProtocolError
 
             raise UnsupportedProtocolError(
@@ -593,13 +595,9 @@ class GovernedStreamReader(DataSourceStreamReader):
         restart to pick up the new schema). Historical schemas that are a
         type-equal SUBSET of the reader's fields pass — old files simply
         null-fill the columns appended since."""
-        raw = meta.get("schemaString")
-        if not raw or raw == "{}":
-            return
-        try:
-            logged = T.StructType.fromJson(json.loads(raw))
-        except Exception:
-            return  # non-Spark schema JSON (raw fixture logs): not a change
+        logged = deltalog.Snapshot(self.path, version, None, meta).schema
+        if logged is None:
+            return  # no declared columns (raw fixture logs): not a change
         reader_fields = {f.name: f.dataType for f in self._schema.fields}
         for f in logged.fields:
             if reader_fields.get(f.name) != f.dataType:

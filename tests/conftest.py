@@ -64,6 +64,38 @@ def count_jobs(spark):
     return count
 
 
+@pytest.fixture
+def count_tip_resolutions():
+    """``count_tip_resolutions(fn, table_path) -> (fn(), tips, listings)``:
+    how often ``fn`` resolved a log tip (``deltalog.latest_version``) and
+    listed ``table_path``'s ``_delta_log/`` directory."""
+    from unittest import mock
+
+    from delta_lake_proxy_spark import deltalog
+
+    def count(fn, table_path):
+        log_dir = os.path.abspath(deltalog.log_path(table_path))
+        real_latest, real_listdir = deltalog.latest_version, os.listdir
+        n = {"tips": 0, "listings": 0}
+
+        def latest(p):
+            n["tips"] += 1
+            return real_latest(p)
+
+        def listdir(p="."):
+            if os.path.abspath(p) == log_dir:
+                n["listings"] += 1
+            return real_listdir(p)
+
+        with mock.patch.object(deltalog, "latest_version", latest), mock.patch.object(
+            os, "listdir", listdir
+        ):
+            out = fn()
+        return out, n["tips"], n["listings"]
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def lineitem(spark):
     from delta_lake_proxy_spark.io import load_table

@@ -1,0 +1,254 @@
+"""One parsed ``deltalog.Snapshot`` per operation.
+
+- Every engine operation resolves the log tip exactly once, at its start,
+  and a warm GET touches no file at all (``count_tip_resolutions``).
+- A DML commit starts at its snapshot's ``version + 1``, so a commit that
+  lands between the DML's scan and its commit reaches the conflict check
+  instead of being overwritten (lost update).
+- Corrupt metadata fails closed with ``UnsupportedProtocolError``: a
+  schemaString that is not JSON or whose ``fields`` is not a list of named
+  objects, a ``delta.invariants`` value that is JSON but not the spec's
+  wrapper, and an unknown writer feature.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+
+import pyspark.sql.functions as F
+import pytest
+
+from delta_lake_proxy_spark import Engine, EngineConfig, deltalog
+from delta_lake_proxy_spark.engine import write_governed_table
+from delta_lake_proxy_spark.errors import NoSuchKeyError, UnsupportedProtocolError
+
+
+def _table(spark, root: str, rows: int = 100, files: int = 2) -> str:
+    path = os.path.join(root, "t")
+    df = spark.range(0, rows).withColumn("p", (F.col("id") % files).cast("string"))
+    write_governed_table(spark, df.repartition(1), path, ["p"])
+    return path
+
+
+def _engine(spark, path: str) -> Engine:
+    return Engine(spark, EngineConfig(table_mapping={"t": path}, read_only=False))
+
+
+# ---------------------------------------------------------------------------
+# one tip resolution per operation
+# ---------------------------------------------------------------------------
+
+
+def test_one_tip_resolution_per_operation(spark, tmp_path, count_tip_resolutions):
+    """Below the checkpoint interval every operation lists ``_delta_log/``
+    for the tip once; the rest of its listings are the log replays it
+    needs. Counts are (tip resolutions, ``_delta_log/`` listings)."""
+    path = _table(spark, str(tmp_path))
+    count = lambda fn: count_tip_resolutions(fn, path)[1:]  # noqa: E731
+
+    eng = _engine(spark, path)
+    # cold: tip + live-file replay + the scan's action-count estimate
+    assert count(lambda: eng.read_table("t").count()) == (1, 3)
+    assert count(lambda: eng.read_table("t").count()) == (1, 1)
+    # append: the tip crc serves protocol and metaData; no replay
+    more = spark.range(100, 110).withColumn("p", F.lit("0"))
+    assert count(lambda: _engine(spark, path).write_table("t", more)) == (1, 1)
+    # DML on a cold engine: tip + replay + estimate, plus the checksum's
+    # pre-commit replay (sizeless copy-on-write tombstones)
+    assert count(lambda: _engine(spark, path).delete("t", F.col("id") == 3)) == (1, 4)
+    src = spark.range(0, 5).withColumn("p", (F.col("id") % 2).cast("string"))
+    assert count(lambda: _engine(spark, path).merge("t", src, on=["id", "p"])) == (1, 4)
+    eng = _engine(spark, path)
+    assert count(lambda: eng.list_files("t").collect()) == (1, 2)
+    rel = sorted(eng._file_index(path).adds)[0]
+    assert count(lambda: eng.authorize_file("t", "anyone", rel)) == (0, 0)
+    assert deltalog.latest_version(path) < EngineConfig().checkpoint_interval
+    # 100 + 10 appended - 1 deleted - 4 matched + 5 merged
+    assert eng.read_table("t").count() == 110
+
+
+def test_get_trusts_the_cached_entry_until_an_operation_refreshes_it(spark, tmp_path):
+    """GET does not tip-check; a read (like LIST) refreshes the one entry,
+    and an engine commit drops it."""
+    path = _table(spark, str(tmp_path))
+    eng = _engine(spark, path)
+    eng.read_table("t").count()
+    only = sorted(eng._file_index(path).adds)
+    deltalog.write_commit(path, [], removes=[{"path": only[0]}])
+    assert eng.authorize_file("t", "anyone", only[0])  # stale entry, by contract
+    eng.read_table("t")  # tip-checked: rebuilds the entry
+    with pytest.raises(NoSuchKeyError):
+        eng.authorize_file("t", "anyone", only[0])
+    v = eng.write_table("t", spark.range(5).withColumn("p", F.lit("1")))
+    assert eng._file_index(path, tip_check=False).version == v
+
+
+# ---------------------------------------------------------------------------
+# lost update
+# ---------------------------------------------------------------------------
+
+
+def test_delete_conflicts_with_a_commit_after_its_snapshot(spark, tmp_path):
+    """A raw commit removes the table's only file between ``Engine.delete``'s
+    scan and its commit. The delete computed its removes from the older
+    snapshot, so it must conflict — not commit its 90 survivors over the
+    winner and resurrect the rows the winner deleted."""
+    path = _table(spark, str(tmp_path), rows=100, files=1)
+    eng = _engine(spark, path)
+    (only,) = eng._file_index(path).adds
+    real_commit = eng._commit_moved
+
+    def racing_commit(snap, moved, adds, removes, **kw):
+        deltalog.write_commit(path, [], removes=[{"path": only}])  # the winner
+        return real_commit(snap, moved, adds, removes, **kw)
+
+    eng._commit_moved = racing_commit
+    with pytest.raises(deltalog.ConcurrentWriteError):
+        eng.delete("t", F.col("id") < 10)
+    eng._commit_moved = real_commit
+    assert eng.read_table("t").count() == 0  # nothing resurrected
+    assert deltalog._live_adds_no_spark(path) == {}
+    # the loser's staged files were cleaned up: only the original remains
+    on_disk = [
+        os.path.relpath(os.path.join(r, f), path)
+        for r, _d, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert on_disk == [only]
+
+
+def test_append_retries_past_a_commit_after_its_snapshot(spark, tmp_path):
+    """Blind appends stay non-conflicting: an append whose snapshot went
+    stale retries at the next version and both commits survive."""
+    path = _table(spark, str(tmp_path), rows=10, files=1)
+    eng = _engine(spark, path)
+    real_commit = eng._commit_moved
+
+    def racing_commit(snap, moved, adds, removes, **kw):
+        deltalog.write_commit(path, [])  # an empty winner at snap.version + 1
+        return real_commit(snap, moved, adds, removes, **kw)
+
+    eng._commit_moved = racing_commit
+    v = eng.write_table("t", spark.range(10, 15).withColumn("p", F.lit("0")))
+    eng._commit_moved = real_commit
+    assert v == 2
+    assert eng.read_table("t").count() == 15
+
+
+# ---------------------------------------------------------------------------
+# fail closed on corrupt metadata
+# ---------------------------------------------------------------------------
+
+
+def _raw_table(root: str, schema_string: str, protocol: dict | None = None) -> str:
+    """A foreign table with one data file and the given schemaString."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rel = "part=A/part-00000.parquet"
+    os.makedirs(os.path.join(root, "part=A"))
+    pq.write_table(pa.table({"id": pa.array([1, 2, 3], type=pa.int64())}), os.path.join(root, rel))
+    os.makedirs(deltalog.log_path(root))
+    actions = [
+        {"commitInfo": {"timestamp": 1700000000000, "operation": "WRITE"}},
+        {"protocol": protocol or {"minReaderVersion": 1, "minWriterVersion": 2}},
+        {
+            "metaData": {
+                "id": "corrupt",
+                "format": {"provider": "parquet"},
+                "schemaString": schema_string,
+                "partitionColumns": ["part"],
+                "configuration": {},
+                "createdTime": 1700000000000,
+            }
+        },
+        {
+            "add": {
+                "path": rel,
+                "partitionValues": {"part": "A"},
+                "size": os.path.getsize(os.path.join(root, rel)),
+                "modificationTime": 1700000000000,
+                "dataChange": True,
+            }
+        },
+    ]
+    with open(os.path.join(deltalog.log_path(root), f"{0:020d}.json"), "w") as f:
+        f.write("\n".join(json.dumps(a) for a in actions) + "\n")
+    return root
+
+
+def _schema(invariant: str | None = None) -> str:
+    md = {} if invariant is None else {"delta.invariants": invariant}
+    return json.dumps(
+        {
+            "type": "struct",
+            "fields": [
+                {"name": "id", "type": "long", "nullable": True, "metadata": md},
+                {"name": "part", "type": "string", "nullable": True, "metadata": {}},
+            ],
+        }
+    )
+
+
+def _rows(spark):
+    return spark.createDataFrame([(7, "A")], "id long, part string")
+
+
+CORRUPT_SCHEMAS = {
+    "not_json": '{"type": "struct", "fields": [',
+    "fields_not_a_list": '{"type": "struct", "fields": {"id": "long"}}',
+    "field_without_name": '{"type": "struct", "fields": [{"type": "long"}]}',
+    "field_not_an_object": '{"type": "struct", "fields": ["id"]}',
+}
+
+
+@pytest.mark.parametrize("kind", sorted(CORRUPT_SCHEMAS))
+def test_corrupt_schema_string_refuses_commit_and_read(spark, tmp_path, kind):
+    path = _raw_table(str(tmp_path / "t"), CORRUPT_SCHEMAS[kind])
+    with pytest.raises(UnsupportedProtocolError, match="corrupt metadata"):
+        deltalog.write_commit(path, [])
+    eng = _engine(spark, path)
+    with pytest.raises(UnsupportedProtocolError, match="corrupt metadata"):
+        eng.write_table("t", _rows(spark))
+    with pytest.raises(UnsupportedProtocolError, match="corrupt metadata"):
+        eng.read_table("t")
+    assert deltalog.latest_version(path) == 0  # nothing committed
+
+
+@pytest.mark.parametrize(
+    "invariant",
+    ['{"expression": "id > 0"}', '["id > 0"]', '{"expression": {"sql": "id > 0"}}', "42"],
+)
+def test_malformed_invariants_refuse_the_commit(spark, tmp_path, invariant):
+    """JSON that is not ``{"expression": {"expression": "<sql>"}}`` is not
+    evaluated as SQL text: the commit refuses."""
+    path = _raw_table(str(tmp_path / "t"), _schema(invariant))
+    with pytest.raises(UnsupportedProtocolError, match="delta.invariants"):
+        deltalog.declared_invariants(path)
+    with pytest.raises(UnsupportedProtocolError, match="delta.invariants"):
+        _engine(spark, path).write_table("t", _rows(spark))
+    with pytest.raises(UnsupportedProtocolError, match="delta.invariants"):
+        deltalog.write_commit(path, [], enforced_constraints=True)
+    assert deltalog.latest_version(path) == 0
+
+
+def test_unknown_writer_feature_refuses_the_commit(spark, tmp_path):
+    proto = {"minReaderVersion": 1, "minWriterVersion": 7, "writerFeatures": ["futureFeature"]}
+    path = _raw_table(str(tmp_path / "t"), _schema(), protocol=proto)
+    with pytest.raises(UnsupportedProtocolError, match="futureFeature"):
+        deltalog.write_commit(path, [])
+    with pytest.raises(UnsupportedProtocolError, match="futureFeature"):
+        _engine(spark, path).write_table("t", _rows(spark))
+    assert deltalog.latest_version(path) == 0
+    assert _engine(spark, path).read_table("t").count() == 3  # reads are fine
+
+
+@pytest.mark.parametrize("schema_string", ["{}", '{"v":1}', ""])
+def test_schema_without_fields_declares_no_columns(tmp_path, schema_string):
+    path = _raw_table(str(tmp_path / "t"), schema_string)
+    snap = deltalog.load_snapshot(path)
+    assert snap.fields == () and snap.schema is None
+    assert snap.invariants == {} and snap.generated == {} and snap.identity == {}
+    assert deltalog.write_commit(path, []) == 1
