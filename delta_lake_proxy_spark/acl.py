@@ -31,6 +31,8 @@ from typing import Any, Callable, Hashable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .errors import ForbiddenByPolicyError
+
 PartitionDNF = list[dict[str, str]]
 
 # SigV4: Authorization: AWS4-HMAC-SHA256 Credential=<access-key>/<date>/... —
@@ -196,35 +198,67 @@ def union_dnf(static: PartitionDNF | None, dynamic: PartitionDNF | None) -> Part
 PERMISSIONS_COLUMNS = ("id", "user_id", "table_name", "partition_filters")
 
 
-def permissions_for(perms_df: DataFrame | None, user: str, table: str) -> PartitionDNF:
-    """Resolve dynamic permission rows for ``(user, table)``.
+class Permissions:
+    """Driver-side snapshot of the permissions table: the raw
+    ``partition_filters`` values grouped by ``(user_id, table_name)`` in
+    collect order. The reference answers a cache miss with one indexed
+    SQLite lookup (ref ``src/database.rs:38-43``); here a miss is a dict
+    lookup against this snapshot, with no Spark job.
 
-    The permissions table mirrors the reference's SQLite entity
-    ``(id, user_id, table_name, partition_filters JSON)`` (ref
-    ``src/permission.rs:6-12``; lookup keyed on the two equality predicates,
-    ``src/database.rs:38-43``; JSON map decode ``src/database.rs:45-51``).
-    The table is tiny (ACL metadata), so collecting the filtered rows on the
-    driver is the scale-correct plan — the compiled predicate is then pushed
-    into every scan rather than joined per-row.
-    """
+    Values are parsed per lookup, so a malformed row denies only its own
+    ``(user, table)`` pair and never the snapshot load or other users."""
+
+    def __init__(self, rows: dict[tuple[str, str], list[Any]]):
+        self._rows = rows
+
+    def lookup(self, user: str, table: str) -> PartitionDNF:
+        """The DNF granted to ``user`` on ``table`` (JSON map decode ref
+        ``src/database.rs:45-51``). A null or empty value is skipped; a
+        ``{}`` row is KEPT: the row exists, so the ACL is configured, and
+        compile_dnf turns an all-empty DNF into deny-all, matching the
+        reference's empty-allowed-file-set outcome (src/main.rs:389-415).
+        A value that is not a JSON object raises 403 (fail closed)."""
+        out: PartitionDNF = []
+        for raw in self._rows.get((user, table), ()):
+            if not raw:
+                continue
+            try:
+                parsed = json.loads(raw) if isinstance(raw, str) else dict(raw)
+            except (TypeError, ValueError) as e:
+                raise ForbiddenByPolicyError(
+                    user, table, f"malformed partition_filters: {e}"
+                ) from e
+            if not isinstance(parsed, dict):
+                raise ForbiddenByPolicyError(
+                    user, table, "partition_filters is not a JSON object"
+                )
+            out.append({str(k): str(v) for k, v in parsed.items()})
+        return out
+
+
+def load_permissions(perms_df: DataFrame | None) -> Permissions:
+    """One column-pruned collect of the permissions table (ref entity
+    ``(id, user_id, table_name, partition_filters JSON)``,
+    ``src/permission.rs:6-12``). The table is ACL metadata, small enough to
+    hold on the driver, so every lookup is served from the snapshot."""
+    rows: dict[tuple[str, str], list[Any]] = {}
+    if perms_df is not None:
+        for r in perms_df.select("user_id", "table_name", "partition_filters").collect():
+            rows.setdefault((r["user_id"], r["table_name"]), []).append(
+                r["partition_filters"]
+            )
+    return Permissions(rows)
+
+
+def permissions_for(perms_df: DataFrame | None, user: str, table: str) -> PartitionDNF:
+    """Resolve dynamic permission rows for ``(user, table)``: the rows of
+    that one pair, filtered in Spark (one job), parsed by
+    :meth:`Permissions.lookup`. The engine does not call this per request;
+    it looks pairs up in one :func:`load_permissions` snapshot per TTL."""
     if perms_df is None:
         return []
-    rows = (
-        perms_df.filter((F.col("user_id") == user) & (F.col("table_name") == table))
-        .select("partition_filters")
-        .collect()
-    )
-    out: PartitionDNF = []
-    for r in rows:
-        raw = r["partition_filters"]
-        if not raw:
-            continue
-        parsed = json.loads(raw) if isinstance(raw, str) else dict(raw)
-        # Keep an empty parsed map: the ROW exists, so the ACL is configured —
-        # compile_dnf turns an all-empty DNF into deny-all, matching the
-        # reference's empty-allowed-file-set outcome (src/main.rs:389-415).
-        out.append({str(k): str(v) for k, v in parsed.items()})
-    return out
+    pair = perms_df.filter((F.col("user_id") == user) & (F.col("table_name") == table))
+    return load_permissions(pair).lookup(user, table)
 
 
 class TTLCache:

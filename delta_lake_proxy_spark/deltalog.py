@@ -3259,7 +3259,7 @@ def write_checkpoint_v2(
 
         _shutil.rmtree(tmp_dir, ignore_errors=True)
     proto = snap.protocol or {"minReaderVersion": 1, "minWriterVersion": 2}
-    meta = snap.metadata
+    meta = snap.metadata_action
     txns = all_txn_versions(table_path)
     domains = live_domain_metadata(table_path)
     n_rows = (
@@ -3329,7 +3329,6 @@ def write_checkpoint_v2(
     i += 1
     meta_rows = []
     if meta:
-        conf = meta.get("configuration") or {}
         meta_rows.append(
             (
                 i,
@@ -3338,9 +3337,7 @@ def write_checkpoint_v2(
                     "format": {"provider": "parquet"},
                     "schemaString": meta.get("schemaString"),
                     "partitionColumns": list(meta.get("partitionColumns") or []),
-                    "configuration": list(conf.items())
-                    if isinstance(conf, dict)
-                    else conf,
+                    "configuration": list(snap.configuration.items()),
                     "createdTime": meta.get("createdTime"),
                 },
             )

@@ -402,6 +402,9 @@ class Engine:
         self.config = config
         self.permissions_df = permissions_df
         self._acl_cache = acl.TTLCache(config.acl_cache_size, config.acl_cache_ttl_s)
+        # the permissions table, collected at most once per TTL; every
+        # _acl_cache miss is a driver-side lookup in it (resolved_dnf)
+        self._permissions_cache = acl.TTLCache(1, config.acl_cache_ttl_s)
         # one _FileIndex per table path — the reference's Delta snapshot
         # cache (20 entries x 120 s, src/main.rs:82-85); tip-checked by every
         # operation but GET, dropped by every engine commit (_commit)
@@ -448,22 +451,36 @@ class Engine:
     # -- ACL ---------------------------------------------------------------
 
     def resolved_dnf(self, alias: str, user: str) -> acl.PartitionDNF:
-        """static config ∪ dynamic DB filters, cached per user:alias
-        (cache key shape ref src/main.rs:377)."""
-        key = f"{user}:{alias}"
-        return self._acl_cache.get_or_compute(
-            key,
-            lambda: acl.union_dnf(
-                self.config.allowed_partitions.get(alias),
-                acl.permissions_for(self.permissions_df, user, alias),
-            ),
+        """static config ∪ dynamic DB filters, memoized per ``(user, alias)``
+        (the reference's per-user:table cache, src/main.rs:377).
+
+        The dynamic filters come from one driver-side snapshot of the
+        permissions table (:func:`acl.load_permissions`), collected at most
+        once per ``acl_cache_ttl_s``, so a memo miss runs no Spark job. A
+        memo entry is valid only while the snapshot it was built from is
+        current, so a grant change shows within one TTL. A malformed grant
+        row raises 403 for its own ``(user, alias)`` only."""
+        perms = self._permissions_cache.get_or_compute(
+            None, lambda: acl.load_permissions(self.permissions_df)
         )
+        return self._acl_cache.get_or_compute(
+            (user, alias),
+            lambda: (
+                perms,
+                acl.union_dnf(
+                    self.config.allowed_partitions.get(alias),
+                    perms.lookup(user, alias),
+                ),
+            ),
+            lambda hit: hit[0] is perms,
+        )[1]
 
     def acl_predicate(self, alias: str, user: str) -> Column | None:
         return acl.compile_dnf(self.resolved_dnf(alias, user))
 
     def invalidate_caches(self) -> None:
         self._acl_cache.invalidate()
+        self._permissions_cache.invalidate()
         self._snapshot_cache.invalidate()
 
     def extension_confs(self, user: str = acl.ANONYMOUS) -> dict[str, str]:
@@ -688,8 +705,9 @@ class Engine:
         DataFrame`` function for ``foreachBatch`` sinks that re-resolves the
         DNF on every micro-batch through the engine's TTL ACL cache, so
         permission changes propagate within ``acl_cache_ttl_s`` (120 s by
-        default — the reference's cache-bounded staleness, src/main.rs:90-93)
-        without restarting the stream::
+        default — the reference's cache-bounded staleness, src/main.rs:90-93):
+        the permissions snapshot is re-collected once per TTL and no memo
+        entry outlives the snapshot it came from. No restart is needed::
 
             gate = engine.governed_batch_filter("trades", user)
             stream.writeStream.foreachBatch(

@@ -1077,6 +1077,35 @@ def test_enable_v2_checkpoints_engine_roundtrip(spark, tmp_path):
         deltalog.snapshot_files(spark, root, version=0).collect()
 
 
+def test_v2_checkpoint_keeps_table_properties(spark, tmp_path):
+    """The v2 checkpoint's metaData row carries the full action:
+    properties and createdTime survive once cleanup_log retires the JSON
+    commit that set them (and without any version checksum to fall back
+    on)."""
+    from delta_lake_proxy_spark.engine import write_governed_table
+
+    root = str(tmp_path / "t")
+    df = spark.createDataFrame([(i, "AB"[i % 2]) for i in range(6)], "id long, part string")
+    write_governed_table(spark, df.repartition(1), root, ["part"])  # v0
+    eng = Engine(spark, EngineConfig(table_mapping={"t": root}, read_only=False))
+    eng.enable_v2_checkpoints("t")  # v1
+    eng.set_table_properties("t", {"graft.owner": "ops"})  # v2
+    created = deltalog.load_snapshot(root).metadata_action.get("createdTime")
+    assert deltalog.write_checkpoint(spark, root) == 2
+    assert deltalog.cleanup_log(root, retention_hours=0) >= 3
+    logd = os.path.join(root, "_delta_log")
+    for name in os.listdir(logd):
+        assert not name.endswith(".json")
+        if name.endswith(".crc"):
+            os.remove(os.path.join(logd, name))
+    snap = deltalog.load_snapshot(root)
+    assert snap.version == 2
+    assert snap.configuration["graft.owner"] == "ops"
+    assert snap.metadata_action.get("createdTime") == created
+    eng.invalidate_caches()
+    assert eng.read_table("t").count() == 6
+
+
 # -- variantType reader feature (round 7) -----------------------------------
 
 
