@@ -934,9 +934,7 @@ def _live_adds_no_spark(
     # (path, ""), reproducing plain-table behavior exactly.
     state: dict[tuple[str, str], dict | None] = {}
     min_version = -1
-    ck = last_checkpoint(table_path)
-    if ck is not None and max_version is not None and int(ck["version"]) > max_version:
-        ck = None  # checkpoint is past the requested version: replay JSON only
+    ck = _checkpoint_at_or_below(table_path, max_version)
     if ck is not None:
         import pyarrow.parquet as pq
 
@@ -1314,13 +1312,17 @@ class Snapshot:
         self.path = path
         self.version = version
         self._protocol = protocol
-        # latest full metaData action, or None before the first commit
-        self.metadata_action = metadata
         conf = (metadata or {}).get("configuration")
         # pyarrow renders a checkpoint's map column as [(k, v), ...]
         self._configuration: dict[str, str] = (
             dict(conf) if isinstance(conf, dict) else dict(conf or [])
         )
+        if conf is not None and not isinstance(conf, dict):
+            # one shape for every consumer: crc JSON and checkpoint rows
+            # written from this action carry a map, not pairs
+            metadata = {**metadata, "configuration": dict(self._configuration)}
+        # latest full metaData action, or None before the first commit
+        self.metadata_action = metadata
         parsed = _parse_fields(path, (metadata or {}).get("schemaString"))
         self.declares_schema = parsed is not None
         self.fields: tuple[dict, ...] = parsed or ()
@@ -2311,9 +2313,9 @@ def check_protocol_action(table_path: str, proto: dict[str, Any]) -> None:
 # Checkpoints (Delta protocol: {version:020d}.checkpoint.parquet + _last_checkpoint)
 # ---------------------------------------------------------------------------
 
-# One checkpoint part file per this many actions: bounds both the write
-# task's output and any single footer read. A 10^7-file table checkpoints as
-# ~10 parallel parts instead of one multi-GB single-task file.
+# One checkpoint part (or v2 sidecar) file per this many actions: bounds the
+# size of each file and of any single footer read. A 10^7-file table
+# checkpoints as ~10 parts instead of one multi-GB file.
 CHECKPOINT_PART_ACTIONS = 1_000_000
 
 
@@ -2322,20 +2324,21 @@ def _last_checkpoint_file(table_path: str) -> str:
 
 
 def live_domain_metadata(
-    table_path: str, use_checksum: bool = True
+    table_path: str, use_checksum: bool = True, version: int | None = None
 ) -> dict[str, dict]:
-    """Live ``domainMetadata`` actions, ``domain -> action`` (Delta writer
-    feature ``domainMetadata``; liquid clustering's ``delta.clustering``
-    domain lives here). A tip version checksum CARRYING the optional
-    ``domainMetadata`` list serves the live set from one file (a crc
-    without the key proves nothing — fall through to replay). Otherwise
-    CHECKPOINT-FIRST like every replay: the checkpoint's carried rows seed
-    the map, JSON commits after it apply on top; ``removed=true``
-    tombstones a domain. Writers that do not understand a domain must
-    PRESERVE it — this resolver feeds the checkpoint writers so routine
-    maintenance never strips a foreign table's domains."""
+    """Live ``domainMetadata`` actions at ``version`` (default: the tip),
+    ``domain -> action`` (Delta writer feature ``domainMetadata``; liquid
+    clustering's ``delta.clustering`` domain lives here). A version
+    checksum at that version CARRYING the optional ``domainMetadata`` list
+    serves the live set from one file (a crc without the key proves
+    nothing — fall through to replay). Otherwise CHECKPOINT-FIRST like
+    every replay: the checkpoint's carried rows seed the map, JSON commits
+    after it apply on top; ``removed=true`` tombstones a domain. Writers
+    that do not understand a domain must PRESERVE it — this resolver feeds
+    the checkpoint writer so routine maintenance never strips a foreign
+    table's domains."""
     if use_checksum:
-        crc = _tip_checksum(table_path)
+        crc = _checksum_at(table_path, version)
         if crc is not None and "domainMetadata" in crc:
             return {
                 str(dm["domain"]): {
@@ -2361,7 +2364,7 @@ def live_domain_metadata(
             }
 
     min_version = -1
-    ck = last_checkpoint(table_path)
+    ck = _checkpoint_at_or_below(table_path, version)
     if ck is not None:
         import pyarrow.parquet as pq
 
@@ -2376,7 +2379,7 @@ def live_domain_metadata(
             ):
                 apply(dm)
         min_version = int(ck["version"])
-    for _s, _e, fp in log_segments(table_path, min_version):
+    for _s, _e, fp in log_segments(table_path, min_version, version):
         with open(fp, "r", encoding="utf-8") as f:
             for line in f:
                 if '"domainMetadata"' not in line[:64]:
@@ -2411,8 +2414,11 @@ def row_id_high_water_mark(table_path: str) -> int:
         return -1
 
 
-def all_txn_versions(table_path: str, use_checksum: bool = True) -> dict[str, int]:
-    """Latest ``txn.version`` per appId — CHECKPOINT-FIRST, like snapshot
+def all_txn_versions(
+    table_path: str, use_checksum: bool = True, version: int | None = None
+) -> dict[str, int]:
+    """Latest ``txn.version`` per appId at ``version`` (default: the tip)
+    — CHECKPOINT-FIRST, like snapshot
     replay: the checkpoint's carried ``txn`` rows seed the map, then only
     JSON commits after it apply on top. Delta checkpoints txn actions for
     exactly this reason: app watermarks must outlive log-retention cleanup,
@@ -2428,10 +2434,11 @@ def all_txn_versions(table_path: str, use_checksum: bool = True) -> dict[str, in
     last-wins action and the old max() disagreed on non-monotonic
     histories.)
 
-    A tip version checksum CARRYING the optional ``setTransactions`` list
-    serves the map from one file (absent key = unknown, fall through)."""
+    A version checksum at that version CARRYING the optional
+    ``setTransactions`` list serves the map from one file (absent key =
+    unknown, fall through)."""
     if use_checksum:
-        crc = _tip_checksum(table_path)
+        crc = _checksum_at(table_path, version)
         if crc is not None and "setTransactions" in crc:
             return {
                 str(t["appId"]): int(t.get("version", -1))
@@ -2440,7 +2447,7 @@ def all_txn_versions(table_path: str, use_checksum: bool = True) -> dict[str, in
             }
     out: dict[str, int] = {}
     min_version = -1
-    ck = last_checkpoint(table_path)
+    ck = _checkpoint_at_or_below(table_path, version)
     if ck is not None:
         import pyarrow.parquet as pq
 
@@ -2452,10 +2459,12 @@ def all_txn_versions(table_path: str, use_checksum: bool = True) -> dict[str, in
                 if t is not None and t.get("appId") is not None:
                     out[t["appId"]] = int(t.get("version", -1))
         min_version = int(ck["version"])
-    for _s, _e, fp in log_segments(table_path, min_version):
+    for _s, _e, fp in log_segments(table_path, min_version, version):
         with open(fp, "r", encoding="utf-8") as f:
             for line in f:
-                if not line.strip():
+                # action objects are single-key: a txn line names its key
+                # in its first bytes (the load_snapshot probe)
+                if '"txn"' not in line[:64]:
                     continue
                 t = json.loads(line).get("txn")
                 if t and t.get("appId") is not None:
@@ -2523,7 +2532,12 @@ def read_version_checksum(table_path: str, version: int) -> dict[str, Any] | Non
 def _tip_checksum(table_path: str) -> dict[str, Any] | None:
     """The crc of the CURRENT tip version, else None: a crc below the tip
     describes an older snapshot and must never serve a resolver."""
-    v = latest_version(table_path)
+    return _checksum_at(table_path, None)
+
+
+def _checksum_at(table_path: str, version: int | None) -> dict[str, Any] | None:
+    """The crc of ``version`` (None: the current tip), else None."""
+    v = latest_version(table_path) if version is None else version
     return read_version_checksum(table_path, v) if v >= 0 else None
 
 
@@ -2665,48 +2679,48 @@ def write_version_checksum(table_path: str, version: int | None = None) -> dict[
     self-heal path when the incremental chain has a gap (foreign table, a
     skipped streamed commit, a crashed writer). Replays the snapshot
     DRIVER-side through the same resolvers the engine serves metadata from
-    (bypassing any existing crc), so use it where a driver replay is already
-    acceptable — e.g. right after a checkpoint, which walked the same state.
-    Returns the written crc dict."""
+    (bypassing any existing crc). Returns the written crc dict."""
     v = latest_version(table_path) if version is None else int(version)
     if v < 0:
         raise ValueError(f"{table_path} has no committed versions")
     if version is not None and v != latest_version(table_path):
-        # historical crc: compute against the bounded replay; protocol /
-        # metadata / txns / domains resolvers are tip-only, so bound them
-        # by replaying raw segments here instead
         raise ValueError(
             "write_version_checksum backfills the TIP version only "
             f"(requested {v}, tip {latest_version(table_path)})"
         )
-    live = _live_adds_no_spark(table_path)
-    sizes = [a.get("size") for a in live.values()]
-    if any(s is None for s in sizes):
+    snap = load_snapshot(table_path, v, use_checksum=False)
+    crc = _compose_checksum(
+        snap,
+        _live_adds_no_spark(table_path, max_version=v, snapshot=snap),
+        all_txn_versions(table_path, use_checksum=False, version=v),
+        live_domain_metadata(table_path, use_checksum=False, version=v),
+    )
+    if crc is None:
         raise ValueError(
-            f"{table_path} has live add actions without size — cannot checksum"
+            f"{table_path} resolves no metaData/protocol, or has live add "
+            "actions without size — cannot checksum"
         )
-    crc = _compose_checksum(table_path, v, len(live), int(sum(sizes)))
     _write_crc_atomic(table_path, v, crc)
     return crc
 
 
 def _compose_checksum(
-    table_path: str, version: int, num_files: int, size_bytes: int
-) -> dict[str, Any]:
-    """A full crc dict from the replay resolvers (crc fast paths bypassed)
-    plus externally-computed file counters — shared by the driver-side
-    backfill and the checkpoint writers' distributed self-heal."""
-    replayed = load_snapshot(table_path, use_checksum=False)
-    metadata, protocol = replayed.metadata_action, replayed.protocol
-    if metadata is None or protocol is None:
-        raise ValueError(
-            f"{table_path} resolves no metaData/protocol — cannot checksum"
-        )
-    txns = all_txn_versions(table_path, use_checksum=False)
-    domains = live_domain_metadata(table_path, use_checksum=False)
+    snap: Snapshot,
+    live: dict[str, dict],
+    txns: dict[str, int],
+    domains: dict[str, dict],
+) -> dict[str, Any] | None:
+    """The crc of ``snap.version`` from its resolved pieces: the live adds,
+    txn watermarks and live domains at that version. None when they cannot
+    make one — no metaData/protocol, or a live add without size. Shared by
+    the backfill and the checkpoint writer's self-heal."""
+    metadata, protocol = snap.metadata_action, snap.protocol
+    sizes = [a.get("size") for a in live.values()]
+    if metadata is None or protocol is None or None in sizes:
+        return None
     crc: dict[str, Any] = {
-        "tableSizeBytes": int(size_bytes),
-        "numFiles": int(num_files),
+        "tableSizeBytes": int(sum(sizes)),
+        "numFiles": len(live),
         "numMetadata": 1,
         "numProtocol": 1,
         "metadata": metadata,
@@ -2716,32 +2730,10 @@ def _compose_checksum(
         ],
         "domainMetadata": [domains[k] for k in sorted(domains)],
     }
-    ict = _commit_ict(table_path, version)
-    if ict and _ict_enabled_conf(dict(metadata.get("configuration") or {})):
+    ict = _commit_ict(snap.path, snap.version)
+    if ict and _ict_enabled_conf(snap.configuration):
         crc["inCommitTimestampOpt"] = int(ict)
     return crc
-
-
-def _heal_checksum_from_live(table_path: str, version: int, live_df) -> None:
-    """Checkpoint-time self-heal: when the tip crc is missing (foreign
-    commits, a paused chain), recompute numFiles/tableSizeBytes with ONE
-    aggregate over the already-materialized live-file DataFrame (distributed
-    — no driver replay) and restart the chain. Best-effort like every crc
-    write."""
-    try:
-        if read_version_checksum(table_path, version) is not None:
-            return
-        row = live_df.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("size").alias("b")
-        ).collect()[0]
-        n = int(row["n"])
-        b = row["b"]
-        if n > 0 and b is None:
-            return  # live adds without sizes: cannot checksum
-        crc = _compose_checksum(table_path, version, n, int(b or 0))
-        _write_crc_atomic(table_path, version, crc)
-    except Exception:
-        pass
 
 
 def _ict_enabled_conf(conf: dict) -> bool:
@@ -2995,6 +2987,18 @@ def last_checkpoint(table_path: str) -> dict[str, Any] | None:
         return json.loads(f.read())
 
 
+def _checkpoint_at_or_below(
+    table_path: str, version: int | None
+) -> dict[str, Any] | None:
+    """``_last_checkpoint`` when it may seed a replay bounded at ``version``
+    (None: the tip); None when there is none or it is past the bound (the
+    replay then reads the JSON commits alone)."""
+    ck = last_checkpoint(table_path)
+    if ck is not None and version is not None and int(ck["version"]) > version:
+        return None
+    return ck
+
+
 def write_checkpoint(
     spark: SparkSession,
     table_path: str,
@@ -3005,186 +3009,17 @@ def write_checkpoint(
 
     Readers then load the checkpoint columnar file(s) plus only the JSON
     commits AFTER them — snapshot reconstruction cost stops growing with
-    table history. One parquet action-row per live file, plus the latest
-    protocol/metaData. Snapshots above ``max_actions_per_part`` actions write
-    the MULTI-PART form ``{v:020d}.checkpoint.{part:010d}.{parts:010d}
-    .parquet`` (parts recorded in ``_last_checkpoint``): the write
-    parallelizes across tasks and no single file grows with the table.
+    table history. One parquet action row per live file, plus the
+    protocol, metaData, app ``txn`` watermarks and live domains of the same
+    version. Snapshots above ``max_actions_per_part`` actions write the
+    MULTI-PART form ``{v:020d}.checkpoint.{part:010d}.{parts:010d}.parquet``
+    (parts recorded in ``_last_checkpoint``), so no single file or footer
+    grows with the table. A table with the ``v2Checkpoint`` reader feature
+    gets the v2 form instead (:func:`write_checkpoint_v2`). Built on the
+    driver without a Spark job (:func:`_write_checkpoint`); ``spark`` is
+    not used.
     """
-    snap = load_snapshot(table_path)
-    version = snap.version
-    if version < 0:
-        raise ValueError(f"no commits to checkpoint at {table_path}")
-    if "v2Checkpoint" in snap.reader_features:
-        # the v2Checkpoint feature FORBIDS classic checkpoints (readers of
-        # the table may rely on v2 resolution) — write the v2 form instead
-        return write_checkpoint_v2(spark, table_path, max_actions_per_part)
-    # Checkpoint-AWARE replay (prior checkpoint + JSON tail): after a
-    # cleanup_log, pre-checkpoint JSON commits are gone, so a full-JSON
-    # replay would silently rebuild a partial snapshot.
-    live = snapshot_files(spark, table_path, version=version)
-    proto_t = LOG_SCHEMA["protocol"].dataType
-    txn_t = LOG_SCHEMA["txn"].dataType
-    adds = live.select(
-        F.struct(
-            F.col("path"),
-            F.col("partitionValues"),
-            F.col("size"),
-            F.col("modificationTime"),
-            F.lit(False).alias("dataChange"),
-            F.col("stats"),
-            # carried for foreign DV tables: a checkpoint that dropped the
-            # descriptor would resurrect the deleted rows
-            F.col("deletionVector"),
-            # row-tracking identity survives checkpointing too
-            F.col("baseRowId"),
-            F.col("defaultRowCommitVersion"),
-        ).alias("add"),
-        F.lit(None).cast(REMOVE_SCHEMA).alias("remove"),
-        F.lit(None).cast(METADATA_SCHEMA).alias("metaData"),
-        F.lit(None).cast(proto_t).alias("protocol"),
-        F.lit(None).cast(txn_t).alias("txn"),
-    )
-    log = read_log(spark, table_path)
-    empty_cols = [
-        F.lit(None).cast(ADD_SCHEMA).alias("add"),
-        F.lit(None).cast(REMOVE_SCHEMA).alias("remove"),
-    ]
-    latest_meta = (
-        log.filter(F.col("metaData").isNotNull())
-        .orderBy(F.col("version").desc())
-        .limit(1)
-        .select(*empty_cols, F.col("metaData"), F.lit(None).cast(proto_t).alias("protocol"), F.lit(None).cast(txn_t).alias("txn"))
-    )
-    if not latest_meta.take(1):
-        # pre-checkpoint metaData was cleaned up: carry the prior
-        # checkpoint's forward (same fallback as table_metadata).
-        meta = table_metadata(spark, table_path)
-        if meta is not None:
-            latest_meta = spark.createDataFrame(
-                [
-                    (
-                        None,
-                        None,
-                        {
-                            "id": meta["id"],
-                            "format": {"provider": "parquet"},
-                            "schemaString": meta["schemaString"],
-                            "partitionColumns": meta["partitionColumns"],
-                            "configuration": snap.configuration,
-                            "createdTime": None,
-                        },
-                        None,
-                        None,
-                    )
-                ],
-                T.StructType(
-                    [
-                        T.StructField("add", ADD_SCHEMA),
-                        T.StructField("remove", REMOVE_SCHEMA),
-                        T.StructField("metaData", METADATA_SCHEMA),
-                        T.StructField("protocol", proto_t),
-                        T.StructField("txn", txn_t),
-                    ]
-                ),
-            )
-    latest_proto = (
-        log.filter(F.col("protocol").isNotNull())
-        .orderBy(F.col("version").desc())
-        .limit(1)
-        .select(*empty_cols, F.lit(None).cast(METADATA_SCHEMA).alias("metaData"), F.col("protocol"), F.lit(None).cast(txn_t).alias("txn"))
-    )
-    if not latest_proto.take(1):
-        latest_proto = spark.createDataFrame(
-            [(None, None, None, {"minReaderVersion": 1, "minWriterVersion": 2}, None)],
-            T.StructType(
-                [
-                    T.StructField("add", ADD_SCHEMA),
-                    T.StructField("remove", REMOVE_SCHEMA),
-                    T.StructField("metaData", METADATA_SCHEMA),
-                    T.StructField("protocol", proto_t),
-                    T.StructField("txn", txn_t),
-                ]
-            ),
-        )
-    meta_proto = latest_meta.unionByName(latest_proto)
-    # txn actions: app watermarks checkpoint alongside the file set (Delta
-    # protocol) so exactly-once sinks survive log cleanup.
-    txns = all_txn_versions(table_path)
-    n_actions = live.count()
-    parts = max(1, -(-(n_actions + 2 + len(txns)) // max_actions_per_part))
-    all_actions = adds.unionByName(meta_proto)
-    if txns:
-        txn_df = spark.createDataFrame(
-            [(None, None, None, None, {"appId": k, "version": v}) for k, v in sorted(txns.items())],
-            T.StructType(
-                [
-                    T.StructField("add", ADD_SCHEMA),
-                    T.StructField("remove", REMOVE_SCHEMA),
-                    T.StructField("metaData", METADATA_SCHEMA),
-                    T.StructField("protocol", proto_t),
-                    T.StructField("txn", txn_t),
-                ]
-            ),
-        )
-        all_actions = all_actions.unionByName(txn_df)
-    # domain metadata (clusteredTable et al.) checkpoints alongside the file
-    # set: a checkpoint that dropped it would strip a foreign table's
-    # domains the moment log cleanup prunes the JSON history
-    domains = live_domain_metadata(table_path)
-    if domains:
-        dm_t = LOG_SCHEMA["domainMetadata"].dataType
-        all_actions = all_actions.withColumn(
-            "domainMetadata", F.lit(None).cast(dm_t)
-        ).unionByName(
-            spark.createDataFrame(
-                [
-                    (None, None, None, None, None, dm)
-                    for dm in sorted(domains.values(), key=lambda d: d["domain"])
-                ],
-                T.StructType(
-                    [
-                        T.StructField("add", ADD_SCHEMA),
-                        T.StructField("remove", REMOVE_SCHEMA),
-                        T.StructField("metaData", METADATA_SCHEMA),
-                        T.StructField("protocol", proto_t),
-                        T.StructField("txn", txn_t),
-                        T.StructField("domainMetadata", dm_t),
-                    ]
-                ),
-            )
-        )
-    tmp_dir = os.path.join(
-        log_path(table_path), f"{version:020d}.checkpoint.parquet.tmp"
-    )
-    (
-        all_actions.coalesce(1)
-        if parts == 1
-        else all_actions.repartition(parts)
-    ).write.mode("overwrite").parquet(tmp_dir)
-    written = sorted(
-        p for p in os.listdir(tmp_dir) if p.endswith(".parquet") and not p.startswith(".")
-    )
-    ck_meta: dict[str, Any] = {"version": version, "size": n_actions}
-    if parts == 1:
-        targets = [os.path.join(log_path(table_path), f"{version:020d}.checkpoint.parquet")]
-    else:
-        parts = len(written)  # repartition may emit fewer non-empty files
-        targets = checkpoint_data_files(
-            table_path, {"version": version, "parts": parts}
-        )
-        ck_meta["parts"] = parts
-    for src, dst in zip(written, targets):
-        os.replace(os.path.join(tmp_dir, src), dst)
-    import shutil as _shutil
-
-    _shutil.rmtree(tmp_dir, ignore_errors=True)
-    with open(_last_checkpoint_file(table_path), "w", encoding="utf-8") as f:
-        f.write(json.dumps(ck_meta))
-    # routine maintenance restarts a paused checksum chain for free: the
-    # live set is already materialized, the counters are one aggregate
-    _heal_checksum_from_live(table_path, version, live)
-    return version
+    return _write_checkpoint(table_path, max_actions_per_part, v2=False)
 
 
 def write_checkpoint_v2(
@@ -3193,189 +3028,168 @@ def write_checkpoint_v2(
     max_actions_per_part: int = CHECKPOINT_PART_ACTIONS,
 ) -> int:
     """Materialize the snapshot as a V2 CHECKPOINT (Delta reader feature
-    ``v2Checkpoint``): file actions stream to uuid-named SIDECAR parquet
-    files under ``_delta_log/_sidecars/`` (written distributed, one task
-    per sidecar — no single file grows with the table), and a uuid-named
-    main file ``{v:020d}.checkpoint.<uuid>.parquet`` carries only the
-    metadata-sized actions: ``checkpointMetadata``, one ``sidecar``
-    reference per part, the latest ``protocol``/``metaData``, and app
-    ``txn`` watermarks. Complements the round-7 v2 READ support
-    (:func:`checkpoint_data_files` resolves main + sidecars); this is the
-    produce side the round-7 notes listed as the remaining gap.
+    ``v2Checkpoint``): file actions go to uuid-named SIDECAR parquet files
+    under ``_delta_log/_sidecars/``, one per ``max_actions_per_part`` adds,
+    so no single file grows with the table. A uuid-named main file
+    ``{v:020d}.checkpoint.<uuid>.parquet`` carries only the metadata-sized
+    actions: ``checkpointMetadata``, one ``sidecar`` reference per sidecar
+    file, the ``protocol``/``metaData``, app ``txn`` watermarks and live
+    domains. :func:`checkpoint_data_files` resolves main + sidecars. Built
+    on the driver like :func:`write_checkpoint`; ``spark`` is not used.
     """
-    import uuid as _uuid
+    return _write_checkpoint(table_path, max_actions_per_part, v2=True)
 
+
+# Checkpoint action columns. The Arrow types of the written files derive
+# from these Spark types; the v2 form adds its two action kinds.
+CHECKPOINT_SCHEMA = T.StructType(
+    [
+        LOG_SCHEMA[k]
+        for k in ("add", "remove", "metaData", "protocol", "txn", "domainMetadata")
+    ]
+    + [
+        T.StructField(
+            "checkpointMetadata", T.StructType([T.StructField("version", T.LongType())])
+        ),
+        T.StructField(
+            "sidecar",
+            T.StructType(
+                [
+                    T.StructField("path", T.StringType()),
+                    T.StructField("sizeInBytes", T.LongType()),
+                    T.StructField("modificationTime", T.LongType()),
+                ]
+            ),
+        ),
+    ]
+)
+_CHECKPOINT_FILE_COLUMNS = ("add", "remove")
+_CHECKPOINT_STATE_COLUMNS = ("metaData", "protocol", "txn", "domainMetadata")
+
+
+def _checkpoint_arrow_schema(*columns: str):
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(T.StructType([CHECKPOINT_SCHEMA[c] for c in columns]))
+
+
+def _checkpoint_rows(
+    snap: Snapshot,
+    live: dict[str, dict],
+    txns: dict[str, int],
+    domains: dict[str, dict],
+):
+    """Every action of the checkpoint at ``snap.version`` as one row of an
+    Arrow table, one action kind per row: protocol, metaData, the txn
+    watermarks and the live domains first, then the live adds with
+    ``dataChange=false``. Keys outside :data:`CHECKPOINT_SCHEMA` (add
+    ``tags``, ``format.options``) are not carried."""
     import pyarrow as pa
+
+    proto = snap.protocol or {"minReaderVersion": 1, "minWriterVersion": 2}
+    rows: list[dict[str, Any]] = [{"protocol": proto}]
+    if snap.metadata_action is not None:
+        rows.append({"metaData": snap.metadata_action})
+    rows += [{"txn": {"appId": app, "version": v}} for app, v in sorted(txns.items())]
+    rows += [{"domainMetadata": domains[k]} for k in sorted(domains)]
+    rows += [{"add": {**a, "dataChange": False}} for a in live.values()]
+    return pa.Table.from_pylist(
+        rows,
+        schema=_checkpoint_arrow_schema(
+            *_CHECKPOINT_FILE_COLUMNS, *_CHECKPOINT_STATE_COLUMNS
+        ),
+    )
+
+
+def _write_parquet_atomic(table, target: str) -> None:
     import pyarrow.parquet as pq
 
-    snap = load_snapshot(table_path)
-    version = snap.version
-    if version < 0:
-        raise ValueError(f"no commits to checkpoint at {table_path}")
-    live = snapshot_files(spark, table_path, version=version)
-    adds = live.select(
-        F.struct(
-            F.col("path"),
-            F.col("partitionValues"),
-            F.col("size"),
-            F.col("modificationTime"),
-            F.lit(False).alias("dataChange"),
-            F.col("stats"),
-            F.col("deletionVector"),
-            F.col("baseRowId"),
-            F.col("defaultRowCommitVersion"),
-        ).alias("add"),
-        F.lit(None).cast(REMOVE_SCHEMA).alias("remove"),
+    tmp = os.path.join(
+        os.path.dirname(target), f".{os.path.basename(target)}.{uuid.uuid4().hex}.tmp"
     )
-    n_actions = live.count()
-    parts = max(1, -(-n_actions // max_actions_per_part))
+    pq.write_table(table, tmp)
+    os.replace(tmp, target)
+
+
+def _write_checkpoint(table_path: str, max_actions_per_part: int, v2: bool) -> int:
+    """The one checkpoint writer behind :func:`write_checkpoint` and
+    :func:`write_checkpoint_v2`. It resolves one version ``v`` once: the
+    snapshot's protocol and metaData, the live adds, the txn watermarks and
+    the live domains all come from ``v``, so a commit landing mid-checkpoint
+    cannot leak into it. :func:`_checkpoint_rows` turns them into one Arrow
+    table, which the classic or the v2 layout writes with pyarrow. A missing
+    crc at ``v`` is composed from the same pieces. Driver memory is
+    O(live files), like the live-file index GET and LIST serve from."""
+    import pyarrow as pa
+
+    snap = load_snapshot(table_path)
+    v = snap.version
+    if v < 0:
+        raise ValueError(f"no commits to checkpoint at {table_path}")
+    # a tail with commits missing below v would checkpoint a partial state
+    assert_version_reproducible(table_path, v)
+    live = _live_adds_no_spark(table_path, max_version=v, snapshot=snap)
+    txns = all_txn_versions(table_path, version=v)
+    domains = live_domain_metadata(table_path, version=v)
+    rows = _checkpoint_rows(snap, live, txns, domains)
+    n_state = rows.num_rows - len(live)  # the non-file rows lead
+    chunk = max_actions_per_part
     logd = log_path(table_path)
-    side_dir = os.path.join(logd, "_sidecars")
-    os.makedirs(side_dir, exist_ok=True)
-    tmp_dir = os.path.join(logd, f"{version:020d}.checkpoint.v2.tmp")
-    (
-        adds.coalesce(1) if parts == 1 else adds.repartition(parts)
-    ).write.mode("overwrite").parquet(tmp_dir)
-    sidecar_actions: list[dict[str, Any]] = []
-    try:
-        for src in sorted(
-            p
-            for p in os.listdir(tmp_dir)
-            if p.endswith(".parquet") and not p.startswith(".")
-        ):
-            name = f"{_uuid.uuid4().hex}.parquet"
-            dst = os.path.join(side_dir, name)
-            os.replace(os.path.join(tmp_dir, src), dst)
+    ck_meta: dict[str, Any] = {"version": v, "size": rows.num_rows}
+    if v2 or "v2Checkpoint" in snap.reader_features:
+        # the v2Checkpoint feature FORBIDS classic checkpoints (readers of
+        # the table may rely on v2 resolution)
+        os.makedirs(os.path.join(logd, "_sidecars"), exist_ok=True)
+        refs: list[dict[str, Any]] = [{"checkpointMetadata": {"version": v}}]
+        for i in range(n_state, rows.num_rows, chunk):
+            name = f"{uuid.uuid4().hex}.parquet"
+            dst = os.path.join(logd, "_sidecars", name)
+            _write_parquet_atomic(
+                rows.slice(i, chunk).select(_CHECKPOINT_FILE_COLUMNS), dst
+            )
             st = os.stat(dst)
-            sidecar_actions.append(
+            refs.append(
                 {
-                    "path": name,
-                    "sizeInBytes": st.st_size,
-                    "modificationTime": int(st.st_mtime * 1000),
+                    "sidecar": {
+                        "path": name,
+                        "sizeInBytes": st.st_size,
+                        "modificationTime": int(st.st_mtime * 1000),
+                    }
                 }
             )
-    finally:
-        import shutil as _shutil
-
-        _shutil.rmtree(tmp_dir, ignore_errors=True)
-    proto = snap.protocol or {"minReaderVersion": 1, "minWriterVersion": 2}
-    meta = snap.metadata_action
-    txns = all_txn_versions(table_path)
-    domains = live_domain_metadata(table_path)
-    n_rows = (
-        1
-        + len(sidecar_actions)
-        + 1
-        + (1 if meta else 0)
-        + len(txns)
-        + len(domains)
-    )
-
-    def col(vals, typ):
-        return pa.array(vals, type=typ)
-
-    ckmeta_t = pa.struct([("version", pa.int64())])
-    side_t = pa.struct(
-        [
-            ("path", pa.string()),
-            ("sizeInBytes", pa.int64()),
-            ("modificationTime", pa.int64()),
-        ]
-    )
-    proto_t = pa.struct(
-        [
-            ("minReaderVersion", pa.int32()),
-            ("minWriterVersion", pa.int32()),
-            ("readerFeatures", pa.list_(pa.string())),
-            ("writerFeatures", pa.list_(pa.string())),
-        ]
-    )
-    meta_t = pa.struct(
-        [
-            ("id", pa.string()),
-            ("format", pa.struct([("provider", pa.string())])),
-            ("schemaString", pa.string()),
-            ("partitionColumns", pa.list_(pa.string())),
-            ("configuration", pa.map_(pa.string(), pa.string())),
-            ("createdTime", pa.int64()),
-        ]
-    )
-    txn_t = pa.struct([("appId", pa.string()), ("version", pa.int64())])
-
-    def one_hot(idx_vals, typ):
-        vals: list[Any] = [None] * n_rows
-        for i, v in idx_vals:
-            vals[i] = v
-        return col(vals, typ)
-
-    i = 0
-    ck_rows = [(i, {"version": version})]
-    i += 1
-    side_rows = []
-    for sc in sidecar_actions:
-        side_rows.append((i, sc))
-        i += 1
-    proto_rows = [
-        (
-            i,
-            {
-                "minReaderVersion": int(proto.get("minReaderVersion") or 1),
-                "minWriterVersion": int(proto.get("minWriterVersion") or 2),
-                "readerFeatures": proto.get("readerFeatures"),
-                "writerFeatures": proto.get("writerFeatures"),
-            },
+        main = pa.concat_tables(
+            [
+                pa.Table.from_pylist(
+                    refs,
+                    schema=_checkpoint_arrow_schema("checkpointMetadata", "sidecar"),
+                ),
+                rows.slice(0, n_state).select(_CHECKPOINT_STATE_COLUMNS),
+            ],
+            promote_options="default",
         )
-    ]
-    i += 1
-    meta_rows = []
-    if meta:
-        meta_rows.append(
-            (
-                i,
-                {
-                    "id": meta.get("id"),
-                    "format": {"provider": "parquet"},
-                    "schemaString": meta.get("schemaString"),
-                    "partitionColumns": list(meta.get("partitionColumns") or []),
-                    "configuration": list(snap.configuration.items()),
-                    "createdTime": meta.get("createdTime"),
-                },
-            )
+        _write_parquet_atomic(
+            main, os.path.join(logd, f"{v:020d}.checkpoint.{uuid.uuid4().hex}.parquet")
         )
-        i += 1
-    txn_rows = []
-    for app, v in sorted(txns.items()):
-        txn_rows.append((i, {"appId": app, "version": v}))
-        i += 1
-    dm_t = pa.struct(
-        [
-            ("domain", pa.string()),
-            ("configuration", pa.string()),
-            ("removed", pa.bool_()),
-        ]
-    )
-    dm_rows = []
-    for dm in sorted(domains.values(), key=lambda d: d["domain"]):
-        dm_rows.append((i, dm))
-        i += 1
-    cols = {
-        "checkpointMetadata": one_hot(ck_rows, ckmeta_t),
-        "sidecar": one_hot(side_rows, side_t),
-        "protocol": one_hot(proto_rows, proto_t),
-        "metaData": one_hot(meta_rows, meta_t),
-        "txn": one_hot(txn_rows, txn_t),
-    }
-    if dm_rows:
-        cols["domainMetadata"] = one_hot(dm_rows, dm_t)
-    table = pa.table(cols)
-    main_name = f"{version:020d}.checkpoint.{_uuid.uuid4().hex}.parquet"
-    tmp_main = os.path.join(logd, f".{main_name}.tmp")
-    pq.write_table(table, tmp_main)
-    os.replace(tmp_main, os.path.join(logd, main_name))
+    else:
+        parts = -(-rows.num_rows // chunk)
+        if parts == 1:
+            targets = [os.path.join(logd, f"{v:020d}.checkpoint.parquet")]
+        else:
+            ck_meta["parts"] = parts
+            targets = checkpoint_data_files(table_path, ck_meta)
+        for i, dst in enumerate(targets):
+            _write_parquet_atomic(rows.slice(i * chunk, chunk), dst)
     with open(_last_checkpoint_file(table_path), "w", encoding="utf-8") as f:
-        f.write(json.dumps({"version": version, "size": n_actions}))
-    _heal_checksum_from_live(table_path, version, live)
-    return version
+        f.write(json.dumps(ck_meta))
+    # routine maintenance restarts a paused checksum chain for free
+    if read_version_checksum(table_path, v) is None:
+        crc = _compose_checksum(snap, live, txns, domains)
+        if crc is not None:
+            try:
+                _write_crc_atomic(table_path, v, crc)
+            except OSError:
+                pass  # the crc is optional; the checkpoint stands
+    return v
 
 
 # ---------------------------------------------------------------------------
@@ -3558,39 +3372,8 @@ def snapshot_files(
 
 
 def table_metadata(spark: SparkSession, table_path: str) -> dict[str, Any] | None:
-    """Latest ``metaData`` action (schema + partition columns), or None.
-
-    JSON commits first (any post-checkpoint metaData is strictly newer);
-    falls back to the checkpoint's carried metaData when log cleanup has
-    pruned the pre-checkpoint commits that held it."""
-    rows = (
-        read_log(spark, table_path)
-        .filter(F.col("metaData").isNotNull())
-        .orderBy(F.col("version").desc())
-        .select("metaData.schemaString", "metaData.partitionColumns", "metaData.id")
-        .limit(1)
-        .collect()
-    )
-    if not rows:
-        ck = last_checkpoint(table_path)
-        if ck is None:
-            return None
-        ck_schema = T.StructType([T.StructField("metaData", METADATA_SCHEMA)])
-        rows = (
-            spark.read.schema(ck_schema)
-            .parquet(*checkpoint_data_files(table_path, ck))
-            .filter(F.col("metaData").isNotNull())
-            .select(
-                "metaData.schemaString", "metaData.partitionColumns", "metaData.id"
-            )
-            .limit(1)
-            .collect()
-        )
-        if not rows:
-            return None
-    r = rows[0]
-    return {
-        "schemaString": r["schemaString"],
-        "partitionColumns": list(r["partitionColumns"] or []),
-        "id": r["id"],
-    }
+    """Latest ``metaData``'s ``schemaString`` / ``partitionColumns`` / ``id``,
+    or None: :attr:`Snapshot.metadata` at the tip, which falls back to the
+    checkpoint's carried metaData once log cleanup pruned the commit that
+    held it. No Spark job; ``spark`` is not used."""
+    return load_snapshot(table_path).metadata

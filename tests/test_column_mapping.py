@@ -401,6 +401,33 @@ def test_id_mode_engine_read_with_acl(spark, id_mapped):
     assert {r["id"] for r in eng.read_table("t", user="u").collect()} == {1, 2, 3}
 
 
+def test_id_mode_checkpoint_and_cleanup(spark, id_mapped):
+    """An id-mapped table checkpoints, and once cleanup_log retired its
+    commits (and no crc serves the metadata) the checkpoint alone serves
+    the same rows through the engine and the same live file set."""
+
+    def state():
+        eng = Engine(spark, EngineConfig(table_mapping={"t": id_mapped}))
+        rows = sorted(eng.read_table("t").collect(), key=lambda r: r["id"])
+        files = sorted(
+            deltalog.snapshot_files(spark, id_mapped).collect(), key=lambda r: r["path"]
+        )
+        return rows, files
+
+    before = state()
+    assert len(before[0]) == 5 and len(before[1]) == 2
+    v = deltalog.write_checkpoint(spark, id_mapped)
+    assert deltalog.cleanup_log(id_mapped, retention_hours=0) >= 1
+    logd = os.path.join(id_mapped, "_delta_log")
+    for name in os.listdir(logd):
+        assert not name.endswith(".json")
+        if name.endswith(".crc"):
+            os.remove(os.path.join(logd, name))
+    snap = deltalog.load_snapshot(id_mapped)
+    assert snap.version == v and snap.mapping_mode == "id"
+    assert state() == before
+
+
 def test_id_mode_governed_source(spark, id_mapped):
     from delta_lake_proxy_spark.sources.governed import GovernedDataSource
 

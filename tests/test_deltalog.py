@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from delta_lake_proxy_spark import deltalog
@@ -585,6 +586,108 @@ def test_multipart_checkpoint_carries_txn(spark, tmp_path):
     deltalog.cleanup_log(t, retention_hours=0.0)
     assert deltalog.last_txn_version(t, "mp-app") == 9
     assert len(deltalog._live_adds_no_spark(t)) == 30
+
+
+_XP_SCHEMA = (
+    '{"type":"struct","fields":['
+    '{"name":"x","type":"long","nullable":true,"metadata":{}},'
+    '{"name":"p","type":"string","nullable":true,"metadata":{}}]}'
+)
+
+
+@pytest.mark.parametrize("layout", ["single", "multipart", "v2"])
+def test_checkpoint_write_runs_no_spark_job(spark, tmp_path, count_jobs, layout):
+    """Checkpoints are built on the driver: no Spark job in any layout
+    (one file, multi-part, v2 main + sidecars), and the files alone replay
+    the live set, the txn watermark and the metaData once the JSON history
+    and the crcs are gone."""
+    from delta_lake_proxy_spark import Engine, EngineConfig
+
+    t = str(tmp_path / layout)
+    os.makedirs(t)
+    for i in range(3):
+        deltalog.write_commit(
+            t,
+            [
+                {
+                    "path": f"p={i % 2}/f{i}-{j}.parquet",
+                    "partitionValues": {"p": str(i % 2)},
+                    "size": j + 1,
+                    "modificationTime": 0,
+                    "stats": '{"numRecords":1}',
+                }
+                for j in range(8)
+            ],
+            schema_json=_XP_SCHEMA if i == 0 else None,
+            partition_cols=["p"] if i == 0 else None,
+            txn={"appId": "app", "version": i},
+        )
+    if layout == "v2":
+        eng = Engine(spark, EngineConfig(table_mapping={"t": t}, read_only=False))
+        eng.enable_v2_checkpoints("t")
+    want = deltalog._live_adds_no_spark(t)
+    per_part = 10 if layout != "single" else deltalog.CHECKPOINT_PART_ACTIONS
+    v, jobs = count_jobs(lambda: deltalog.write_checkpoint(spark, t, per_part))
+    assert jobs == 0
+    ck = deltalog.last_checkpoint(t)
+    # 24 adds + protocol/metaData/txn: 3 parts of 10, or 3 sidecars + main
+    n_files = {"single": 1, "multipart": 3, "v2": 4}[layout]
+    assert len(deltalog.checkpoint_data_files(t, ck)) == n_files
+    deltalog.cleanup_log(t, retention_hours=0.0)
+    logd = deltalog.log_path(t)
+    for name in os.listdir(logd):
+        assert not name.endswith(".json")
+        if name.endswith(".crc"):
+            os.remove(os.path.join(logd, name))
+    got = deltalog._live_adds_no_spark(t)
+    assert set(got) == set(want)
+    assert all(a["dataChange"] is False for a in got.values())
+    assert {p: (a["size"], a["stats"]) for p, a in got.items()} == {
+        p: (a["size"], a["stats"]) for p, a in want.items()
+    }
+    assert deltalog.all_txn_versions(t) == {"app": 2}
+    assert deltalog.table_metadata(spark, t)["partitionColumns"] == ["p"]
+
+
+def test_checkpoint_is_built_from_one_version(spark, tmp_path):
+    """A commit that lands while version v is checkpointed must not leak
+    into the checkpoint: its metaData, txn rows, adds and the healed crc
+    all come from v — time travel to v must not read v+1's properties."""
+    from unittest import mock
+
+    import pyarrow.parquet as pq
+
+    t = str(tmp_path / "one_version")
+    os.makedirs(t)
+
+    def add(p):
+        return {"path": p, "partitionValues": {}, "size": 1, "modificationTime": 0}
+
+    v = deltalog.write_commit(
+        t, [add("a")], schema_json='{"v":1}', txn={"appId": "app", "version": 1}
+    )
+    deltalog.write_commit(
+        t,
+        [add("b")],
+        schema_json='{"v":1}',
+        configuration={"graft.late": "yes"},
+        txn={"appId": "app", "version": 2},
+    )
+    logd = deltalog.log_path(t)
+    for name in os.listdir(logd):
+        if name.endswith(".crc"):
+            os.remove(os.path.join(logd, name))  # every piece replays the log
+    with mock.patch.object(deltalog, "latest_version", lambda p: v):
+        assert deltalog.write_checkpoint(spark, t) == v
+    rows = pq.read_table(os.path.join(logd, f"{v:020d}.checkpoint.parquet")).to_pylist()
+    meta = [r["metaData"] for r in rows if r["metaData"]]
+    assert len(meta) == 1 and "graft.late" not in dict(meta[0]["configuration"] or [])
+    assert [r["txn"] for r in rows if r["txn"]] == [{"appId": "app", "version": 1}]
+    assert [r["add"]["path"] for r in rows if r["add"]] == ["a"]
+    crc = deltalog.read_version_checksum(t, v)
+    assert "graft.late" not in crc["metadata"]["configuration"]
+    assert crc["setTransactions"] == [{"appId": "app", "version": 1}]
+    assert crc["numFiles"] == 1
 
 
 def test_time_travel_below_cleanup_fails_loudly(spark, tmp_path):

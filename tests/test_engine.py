@@ -1370,7 +1370,6 @@ def test_shallow_clone_through_governed_source(spark, tmp_path, lineitem):
     assert spark.read.parquet(out).count() == want.count()
 
 
-@pytest.mark.full
 def test_clone_maintenance_leaves_source_byte_identical(spark, tmp_path, lineitem):
     """Round-10 pin (r9 advice): vacuum, compaction, checkpoint and log
     cleanup of a SHALLOW CLONE must leave the source directory tree
