@@ -1,4 +1,4 @@
-"""Minimal Delta-Lake transaction log: writer + pure-DataFrame log replay.
+"""Minimal Delta-Lake transaction log: writer + driver-side and DataFrame replay.
 
 The reference delegates snapshot construction to the ``deltalake`` crate
 (reference ``src/main.rs:357``, dep ``Cargo.toml:13``) and passes raw
@@ -11,9 +11,14 @@ so this module implements the subset of the Delta protocol the engine needs
   ``protocol`` / ``metaData`` / ``add`` / ``remove`` / ``commitInfo`` actions,
   with Hive-style ``partitionValues`` (strings — matching the protocol and the
   reference's string-typed partition ACLs);
-- replay: reconstruct the live file set at a version with DataFrame ops only —
-  per path, the action with the highest version wins; a file is live iff that
-  action is an ``add`` (the adds-minus-removes reconciliation of SURVEY §2 S6/U2).
+- replay: reconstruct the live file set at a version — per path, the action
+  with the highest version wins; a file is live iff that action is an ``add``
+  (the adds-minus-removes reconciliation of SURVEY §2 S6/U2). The driver-side
+  replay (:func:`load_snapshot`, :func:`_live_adds_no_spark`) serves the tip,
+  pinned versions and checkpoints; :func:`commit_actions` reads single commits
+  (conflict checks, timestamps, change windows); the DataFrame replay
+  (:func:`snapshot_files`, :func:`read_log`) serves tables past the engine's
+  ``large_listing_threshold`` and the public log surfaces.
 
 File IO uses the local filesystem; on a cluster the log directory would live on
 the object store and the same JSON shapes apply (the replay path already reads
@@ -30,7 +35,7 @@ import re
 import time
 import urllib.parse
 import uuid
-from typing import Any
+from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -215,6 +220,24 @@ def log_path(table_path: str) -> str:
 
 def _commit_file(table_path: str, version: int) -> str:
     return os.path.join(log_path(table_path), f"{version:020d}.json")
+
+
+def commit_actions(table_path: str, version: int) -> Iterator[dict] | None:
+    """The parsed actions of retained commit ``version`` in file order, read
+    lazily (a caller may stop at the action it needs); None when the commit
+    file is gone (log cleanup) — each caller raises its own error for that."""
+    try:
+        f = open(_commit_file(table_path, version), "r", encoding="utf-8")
+    except FileNotFoundError:
+        return None
+    return _parsed_lines(f)
+
+
+def _parsed_lines(f) -> Iterator[dict]:
+    with f:
+        for line in f:
+            if line.strip():
+                yield json.loads(line)
 
 
 def latest_version(table_path: str) -> int:
@@ -596,13 +619,16 @@ def write_commit_streamed(
             f.write(json.dumps({"protocol": proto0}) + "\n")
             tally["protocol"] = proto0
         if version == 0 or schema_json is not None:
+            # the table's identity is fixed for its life: a re-emitted
+            # metaData keeps the id and creation time it already has
+            prev = snap.metadata_action or {}
             md = {
-                "id": str(uuid.uuid4()),
+                "id": prev.get("id") or str(uuid.uuid4()),
                 "format": {"provider": "parquet"},
                 "schemaString": schema_json or "{}",
                 "partitionColumns": partition_cols or [],
                 "configuration": conf_v or {},
-                "createdTime": now_ms,
+                "createdTime": prev.get("createdTime") or now_ms,
             }
             f.write(json.dumps({"metaData": md}) + "\n")
             tally["metadata"] = md
@@ -761,6 +787,21 @@ def write_commit_streamed(
     raise ConcurrentWriteError(table_path, version)
 
 
+def _commit_timestamp(table_path: str, version: int) -> int | None:
+    """Commit ``version``'s time from its first ``commitInfo``: the
+    inCommitTimestamp when present (authoritative, monotonic by
+    construction), else the wall-clock ``timestamp``; None when the commit
+    is gone or records neither."""
+    for a in commit_actions(table_path, version) or ():
+        ci = a.get("commitInfo")
+        if ci is not None:
+            ts = ci.get("inCommitTimestamp")
+            if ts is None:
+                ts = ci.get("timestamp")
+            return None if ts is None else int(ts)
+    return None
+
+
 def _commit_ict(table_path: str, version: int) -> int:
     """The inCommitTimestamp of commit ``version`` — the monotonicity floor
     for the NEXT commit's ICT. Falls back to the commit's wall-clock
@@ -771,19 +812,7 @@ def _commit_ict(table_path: str, version: int) -> int:
     in any realistic clock)."""
     if version < 0:
         return 0
-    p = os.path.join(log_path(table_path), f"{version:020d}.json")
-    if not os.path.exists(p):
-        return 0
-    with open(p, "r", encoding="utf-8") as f:
-        for line in f:
-            if not line.strip():
-                continue
-            a = json.loads(line)
-            ci = a.get("commitInfo")
-            if ci is not None:
-                v = ci.get("inCommitTimestamp", ci.get("timestamp"))
-                return int(v) if v is not None else 0
-    return 0
+    return _commit_timestamp(table_path, version) or 0
 
 
 def _winners_changed_rules(
@@ -795,23 +824,18 @@ def _winners_changed_rules(
     re-emissions (every engine append carries one) do not conflict."""
     if to_version < from_version:
         return True
-    d = log_path(table_path)
     for v in range(from_version, to_version + 1):
-        p = os.path.join(d, f"{v:020d}.json")
-        if not os.path.exists(p):
+        actions = commit_actions(table_path, v)
+        if actions is None:
             return True  # cleaned up mid-race: cannot verify
-        with open(p, "r", encoding="utf-8") as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if "protocol" in a:
-                    return True
-                m = a.get("metaData")
-                if m is not None and dict(m.get("configuration") or {}) != dict(
-                    expected_conf or {}
-                ):
-                    return True
+        for a in actions:
+            if "protocol" in a:
+                return True
+            m = a.get("metaData")
+            if m is not None and dict(m.get("configuration") or {}) != dict(
+                expected_conf or {}
+            ):
+                return True
     return False
 
 
@@ -832,23 +856,18 @@ def _conflicts_with_winners(
         # the listing hasn't even caught up with the commit that beat us:
         # cannot prove disjointness — conservative conflict
         return True
-    d = log_path(table_path)
     touched: set[str] = set()
     for v in range(from_version, to_version + 1):
-        p = os.path.join(d, f"{v:020d}.json")
-        if not os.path.exists(p):
+        actions = commit_actions(table_path, v)
+        if actions is None:
             return True
-        with open(p, "r", encoding="utf-8") as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if "metaData" in a or "protocol" in a:
-                    return True
-                if "add" in a:
-                    touched.add(a["add"]["path"])
-                elif "remove" in a:
-                    touched.add(a["remove"]["path"])
+        for a in actions:
+            if "metaData" in a or "protocol" in a:
+                return True
+            if "add" in a:
+                touched.add(a["add"]["path"])
+            elif "remove" in a:
+                touched.add(a["remove"]["path"])
     return any(rm["path"] in touched for rm in removes_fn())
 
 
@@ -1103,64 +1122,57 @@ def write_log_compaction(table_path: str, start: int, end: int) -> str:
             f"invalid log-compaction range [{start}, {end}] — need 0 <= start < end"
         )
     d = log_path(table_path)
-    files = []
-    for v in range(start, end + 1):
-        fp = os.path.join(d, f"{v:020d}.json")
-        if not os.path.isfile(fp):
-            raise ValueError(
-                f"cannot compact [{start}, {end}] of {table_path}: commit {v} "
-                "is not retained"
-            )
-        files.append(fp)
     proto: dict | None = None
     meta: dict | None = None
     txns: dict[str, dict] = {}
     domains: dict[str, dict] = {}
     state: dict[tuple[str, str], tuple[str, dict]] = {}
     last_ci: dict | None = None
-    for fp in files:
-        with open(fp, "r", encoding="utf-8") as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                unknown = set(action) - _KNOWN_ACTION_KEYS
-                if unknown:
-                    raise UnsupportedProtocolError(
-                        table_path,
-                        f"commit carries unrecognized action(s) {sorted(unknown)} — "
-                        "compacting would drop state a future reader needs",
-                    )
-                if action.get("protocol") is not None:
-                    proto = action["protocol"]
-                elif action.get("metaData") is not None:
-                    meta = action["metaData"]
-                elif action.get("txn") is not None:
-                    t = action["txn"]
-                    if t.get("appId") is not None:
-                        txns[str(t["appId"])] = t
-                elif action.get("domainMetadata") is not None:
-                    dm = action["domainMetadata"]
-                    if dm.get("domain") is not None:
-                        domains[str(dm["domain"])] = dm
-                elif action.get("add") is not None:
-                    a = action["add"]
-                    state[(a["path"], dv_unique_id(a.get("deletionVector")))] = (
-                        "add",
-                        a,
-                    )
-                elif action.get("remove") is not None:
-                    r = action["remove"]
-                    state[(r["path"], dv_unique_id(r.get("deletionVector")))] = (
-                        "remove",
-                        r,
-                    )
-                elif action.get("commitInfo") is not None:
-                    # files iterate in version order: this ends up the
-                    # RANGE'S LAST commitInfo (kept only under ICT, below)
-                    last_ci = action["commitInfo"]
-                # cdc / (checkpointMetadata, sidecar — never in commits)
-                # carry no snapshot state: dropped
+    for v in range(start, end + 1):
+        actions = commit_actions(table_path, v)
+        if actions is None:
+            raise ValueError(
+                f"cannot compact [{start}, {end}] of {table_path}: commit {v} "
+                "is not retained"
+            )
+        for action in actions:
+            unknown = set(action) - _KNOWN_ACTION_KEYS
+            if unknown:
+                raise UnsupportedProtocolError(
+                    table_path,
+                    f"commit carries unrecognized action(s) {sorted(unknown)} — "
+                    "compacting would drop state a future reader needs",
+                )
+            if action.get("protocol") is not None:
+                proto = action["protocol"]
+            elif action.get("metaData") is not None:
+                meta = action["metaData"]
+            elif action.get("txn") is not None:
+                t = action["txn"]
+                if t.get("appId") is not None:
+                    txns[str(t["appId"])] = t
+            elif action.get("domainMetadata") is not None:
+                dm = action["domainMetadata"]
+                if dm.get("domain") is not None:
+                    domains[str(dm["domain"])] = dm
+            elif action.get("add") is not None:
+                a = action["add"]
+                state[(a["path"], dv_unique_id(a.get("deletionVector")))] = (
+                    "add",
+                    a,
+                )
+            elif action.get("remove") is not None:
+                r = action["remove"]
+                state[(r["path"], dv_unique_id(r.get("deletionVector")))] = (
+                    "remove",
+                    r,
+                )
+            elif action.get("commitInfo") is not None:
+                # commits iterate in version order: this ends up the
+                # RANGE'S LAST commitInfo (kept only under ICT, below)
+                last_ci = action["commitInfo"]
+            # cdc / (checkpointMetadata, sidecar — never in commits)
+            # carry no snapshot state: dropped
     lines: list[str] = []
     # commitInfo is replay-irrelevant EXCEPT under In-Commit Timestamps:
     # the compaction stands in for commit `end` when a reader replays the
@@ -1206,14 +1218,15 @@ def write_log_compaction(table_path: str, start: int, end: int) -> str:
 _BYTES_PER_ACTION_ESTIMATE = 64
 
 
-def estimate_snapshot_actions(table_path: str) -> int:
-    """Cheap upper-bound estimate of snapshot action count WITHOUT replaying:
-    checkpoint parquet row counts (footer metadata only, no column reads)
-    plus tail-JSON bytes / 64. O(#log files) driver work — used to decide
-    whether a driver-side replay is safe or the distributed path is needed."""
+def estimate_snapshot_actions(table_path: str, max_version: int | None = None) -> int:
+    """Cheap upper-bound estimate of the action count of the snapshot at
+    ``max_version`` (None: the tip) WITHOUT replaying: checkpoint parquet
+    row counts (footer metadata only, no column reads) plus tail-JSON
+    bytes / 64. O(#log files) driver work — used to decide whether a
+    driver-side replay is safe or the distributed path is needed."""
     total = 0
     min_version = -1
-    ck = last_checkpoint(table_path)
+    ck = _checkpoint_at_or_below(table_path, max_version)
     if ck is not None:
         import pyarrow.parquet as pq
 
@@ -1222,7 +1235,7 @@ def estimate_snapshot_actions(table_path: str) -> int:
         min_version = int(ck["version"])
     # size the files a replay would actually read: a compacted tail counts
     # its (reconciled, much smaller) compaction files, not the raw commits
-    for _s, _e, fp in log_segments(table_path, min_version):
+    for _s, _e, fp in log_segments(table_path, min_version, max_version):
         total += max(1, os.path.getsize(fp) // _BYTES_PER_ACTION_ESTIMATE)
     return total
 
@@ -2791,11 +2804,26 @@ def validate_version_checksum(table_path: str) -> dict[str, Any]:
     return {"version": v, "ok": not mismatches, "mismatches": mismatches}
 
 
+def _commit_timestamps(table_path: str) -> list[tuple[int, int]]:
+    """``(version, timestamp)`` of every retained JSON commit that records a
+    time (:func:`_commit_timestamp`), in version order — a driver-side walk
+    of the commits' ``commitInfo``; commits without one are skipped."""
+    d = log_path(table_path)
+    names = os.listdir(d) if os.path.isdir(d) else []
+    out = []
+    for v in sorted(int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()):
+        ts = _commit_timestamp(table_path, v)
+        if ts is not None:
+            out.append((v, ts))
+    return out
+
+
 def version_at_timestamp(
     spark: SparkSession, table_path: str, ts_millis: int
 ) -> int:
     """Largest version whose commit timestamp is <= ``ts_millis`` (the Delta
-    ``timestampAsOf`` resolution rule), from ``commitInfo.timestamp``.
+    ``timestampAsOf`` resolution rule): the inCommitTimestamp when present,
+    else ``commitInfo.timestamp``. No Spark job; ``spark`` is not used.
 
     Resolves within RETAINED history: commits pruned by ``cleanup_log`` no
     longer carry timestamps, so a timestamp older than the oldest retained
@@ -2804,34 +2832,22 @@ def version_at_timestamp(
     mirroring Delta's out-of-range ``timestampAsOf`` error — resolving it
     silently to "latest" would hide that the table has no state at that
     time yet."""
-    # inCommitTimestamp (Delta ICT feature) is authoritative when present —
-    # monotonic across commits by construction, unlike wall-clock timestamps
-    ts_col = F.coalesce(
-        F.col("commitInfo.inCommitTimestamp"), F.col("commitInfo.timestamp")
-    )
-    row = (
-        read_log(spark, table_path)
-        .filter(ts_col.isNotNull())
-        .agg(
-            F.max(
-                F.when(ts_col <= F.lit(int(ts_millis)), F.col("version"))
-            ).alias("v"),
-            F.max(ts_col).alias("max_ts"),
-        )
-        .collect()[0]
-    )
-    if row["max_ts"] is not None and int(ts_millis) > int(row["max_ts"]):
+    stamped = _commit_timestamps(table_path)
+    t = int(ts_millis)
+    max_ts = max((ts for _v, ts in stamped), default=None)
+    if max_ts is not None and t > max_ts:
         raise ValueError(
             f"timestamp {ts_millis} is after the latest commit "
-            f"({row['max_ts']}) of {table_path} — out of range for "
+            f"({max_ts}) of {table_path} — out of range for "
             "timestampAsOf (Delta semantics)"
         )
-    if row["v"] is None:
+    v = max((v for v, ts in stamped if ts <= t), default=None)
+    if v is None:
         raise ValueError(
             f"no commit at or before timestamp {ts_millis} in the retained "
             f"log of {table_path} (history may have been cleaned up)"
         )
-    return int(row["v"])
+    return v
 
 
 def version_at_or_after_timestamp(
@@ -2843,30 +2859,19 @@ def version_at_or_after_timestamp(
     at-or-before). A timestamp before the first retained commit resolves to
     that first commit (Delta serves the feed from the start of retained
     history); a timestamp after the newest commit raises, matching Delta's
-    "greater than latest commit" startingTimestamp error."""
-    ts_col = F.coalesce(
-        F.col("commitInfo.inCommitTimestamp"), F.col("commitInfo.timestamp")
-    )
-    row = (
-        read_log(spark, table_path)
-        .filter(ts_col.isNotNull())
-        .agg(
-            F.min(
-                F.when(ts_col >= F.lit(int(ts_millis)), F.col("version"))
-            ).alias("v"),
-            F.min(F.col("version")).alias("min_v"),
-        )
-        .collect()[0]
-    )
-    if row["v"] is not None:
-        return int(row["v"])
-    if row["min_v"] is not None:
+    "greater than latest commit" startingTimestamp error. No Spark job;
+    ``spark`` is not used."""
+    stamped = _commit_timestamps(table_path)
+    if not stamped:
+        raise ValueError(f"no timestamped commits in the retained log of {table_path}")
+    v = min((v for v, ts in stamped if ts >= int(ts_millis)), default=None)
+    if v is None:
         raise ValueError(
             f"timestamp {ts_millis} is after the latest commit of "
             f"{table_path} — out of range for a change-feed starting "
             "timestamp (Delta semantics)"
         )
-    raise ValueError(f"no timestamped commits in the retained log of {table_path}")
+    return v
 
 
 def cleanup_log(table_path: str, retention_hours: float = 0.0) -> int:

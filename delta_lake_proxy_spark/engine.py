@@ -204,7 +204,8 @@ class _FileIndex:
     LIST, the enumerated scan and DML derive from it — the live ``add`` map,
     the deletion-vector map, the scan's file list, the foreign-file flag and
     the sorted alias-namespaced keys — each built on first use, so an append
-    never replays the live files."""
+    never replays the live files. A pinned-version read builds one too, at
+    its version, outside the cache."""
 
     __slots__ = ("snapshot", "_adds", "_dv_map", "_scan", "_foreign", "_keys")
 
@@ -254,7 +255,10 @@ class _FileIndex:
         ``limit`` — guarded by a metadata-only action-count estimate so an
         over-threshold table never materializes on the driver."""
         if self._scan is None:
-            if deltalog.estimate_snapshot_actions(self.path) > limit or len(self.adds) > limit:
+            if (
+                deltalog.estimate_snapshot_actions(self.path, self.version) > limit
+                or len(self.adds) > limit
+            ):
                 self._scan = _TOO_MANY_FILES
             else:
                 self._scan = [os.path.join(self.path, r) for r in sorted(self.adds)]
@@ -533,7 +537,12 @@ class Engine:
         One snapshot per call: the log tip is resolved once, at the start
         (a commit written behind the engine shows here at once), and the
         scan, its schema, column mapping, deletion vectors and collations
-        all come from that one cached entry.
+        all come from that one entry — the cached tip, or for a pinned
+        version a fresh entry replayed on the driver at that version, so a
+        time-travel read returns that version's files AND that version's
+        schema. Below ``large_listing_threshold`` building the DataFrame
+        runs no Spark job either way; the tip's protocol and the pinned
+        version's both gate the read.
         """
         self.counters["queries_served"] += 1
         path = self.resolve(alias)
@@ -552,10 +561,10 @@ class Engine:
             version = deltalog.version_at_timestamp(
                 self.spark, path, _to_epoch_millis(timestamp_as_of)
             )
-        if with_row_ids:
-            df = self._with_row_ids(ix, version=version)
-        else:
-            df = self._read_data(path, version=version, ix=ix)
+        if version is not None:
+            ix.snapshot.check_read()  # the tip's gate; the pinned one's below
+            ix = self._file_index(path, int(version))
+        df = self._with_row_ids(ix) if with_row_ids else self._read_data(path, ix=ix)
         if pred is not None:
             # ACL BEFORE collation re-typing: partition-value comparison is
             # byte-exact directory matching, never collation-aware
@@ -563,14 +572,14 @@ class Engine:
         # no ACL configured => allow everything (src/main.rs:576)
         return self._apply_collations(ix.snapshot, df)
 
-    def _with_row_ids(self, ix: _FileIndex, version: int | None = None) -> DataFrame:
+    def _with_row_ids(self, ix: _FileIndex) -> DataFrame:
         """Scan with materialized ``_row_id`` / ``_row_commit_version``
         (Delta rowTracking, fresh-id form): keep the raw file URI and
         physical row index through the scan (the same plumbing the
         DV-writing DML uses), then broadcast-join the metadata-sized
-        (path -> baseRowId, defaultRowCommitVersion) map from the snapshot
-        replay. Files without a baseRowId yield null ids (spec: row ids
-        unavailable for them)."""
+        (path -> baseRowId, defaultRowCommitVersion) map built from the
+        entry's live adds. Files without a baseRowId yield null ids (spec:
+        row ids unavailable for them)."""
         path = ix.path
         if "rowTracking" not in ix.snapshot.writer_features:
             raise UnsupportedProtocolError(
@@ -579,19 +588,20 @@ class Engine:
                 "the table's protocol",
             )
         try:
-            df = self._read_data(
-                path, version=version, keep_file_col=True, keep_pos=True, ix=ix
-            )
+            df = self._read_data(path, keep_file_col=True, keep_pos=True, ix=ix)
         except _NeedsEnumeratedScan:
             raise ValueError(
                 f"with_row_ids on {path} requires physical row positions, "
                 "which need the enumerable scan — raise "
                 "large_listing_threshold"
             ) from None
-        rt = deltalog.snapshot_files(self.spark, path, version=version).select(
-            F.col("path").alias("_rt_key"),
-            F.col("baseRowId").alias("_rt_base"),
-            F.col("defaultRowCommitVersion").alias("_rt_dcv"),
+        rt = local_df(
+            self.spark,
+            [
+                (rel, a.get("baseRowId"), a.get("defaultRowCommitVersion"))
+                for rel, a in ix.adds.items()
+            ],
+            "_rt_key string, _rt_base long, _rt_dcv long",
         )
         out = df.withColumn("_rt_key", uri_rel_col(F.col("_file"), path)).join(
             F.broadcast(rt), "_rt_key", "left"
@@ -785,54 +795,43 @@ class Engine:
         )
         deltalog.assert_version_reproducible(path, int(from_version))
         deltalog.assert_version_reproducible(path, to_version)
-        log = deltalog.read_log(self.spark, path).filter(
-            (F.col("version") > F.lit(int(from_version)))
-            & (F.col("version") <= F.lit(to_version))
-        )
         snap = self._snapshot(path)
         snap.check_read()
         schema = snap.schema
         limit = self.large_listing_threshold
-        actions = (
-            log.select(
-                "version",
-                F.col("add.path").alias("add_path"),
-                F.col("add.dataChange").alias("add_dc"),
-                F.col("add.deletionVector.storageType").alias("add_dv"),
-                F.col("remove.path").alias("rm_path"),
-                F.col("remove.dataChange").alias("rm_dc"),
-                F.col("remove.deletionVector.storageType").alias("rm_dv"),
-                F.col("cdc.path").alias("cdc_path"),
-            )
-            .filter(
-                F.col("add_path").isNotNull()
-                | F.col("rm_path").isNotNull()
-                | F.col("cdc_path").isNotNull()
-            )
-            .limit(limit + 1)
-            .collect()
-        )
-        if len(actions) > limit:
-            raise ValueError(
-                f"change window ({from_version}, {to_version}] of {alias} "
-                f"touches more than {limit} files — narrow the window "
-                "(consume changes more frequently)"
-            )
-        # group driver-side: commits with cdc actions use ONLY those
+        # the window's add/remove/cdc actions, read on the driver and grouped
+        # per commit: commits with cdc actions use ONLY those
         cdc_by_v: dict[int, list[str]] = {}
         ins_by_v: dict[int, list[str]] = {}
         del_by_v: dict[int, list[str]] = {}
         dv_versions: set[int] = set()
-        for r in actions:
-            v = int(r["version"])
-            if r["add_dv"] is not None or r["rm_dv"] is not None:
-                dv_versions.add(v)
-            if r["cdc_path"] is not None:
-                cdc_by_v.setdefault(v, []).append(r["cdc_path"])
-            if r["add_path"] is not None and r["add_dc"] is not False:
-                ins_by_v.setdefault(v, []).append(r["add_path"])
-            if r["rm_path"] is not None and r["rm_dc"] is not False:
-                del_by_v.setdefault(v, []).append(r["rm_path"])
+        n_actions = 0
+        for v in range(int(from_version) + 1, to_version + 1):
+            actions = deltalog.commit_actions(path, v)
+            if actions is None:
+                raise ValueError(
+                    f"commit {v} of {path} is no longer retained (log cleanup)"
+                )
+            for act in actions:
+                add, rm, cdc = act.get("add"), act.get("remove"), act.get("cdc")
+                if add is None and rm is None and cdc is None:
+                    continue
+                n_actions += 1
+                if n_actions > limit:
+                    raise ValueError(
+                        f"change window ({from_version}, {to_version}] of {alias} "
+                        f"touches more than {limit} files — narrow the window "
+                        "(consume changes more frequently)"
+                    )
+                if cdc is not None:
+                    cdc_by_v.setdefault(v, []).append(cdc["path"])
+                for a, by in ((add, ins_by_v), (rm, del_by_v)):
+                    if a is None:
+                        continue
+                    if (a.get("deletionVector") or {}).get("storageType") is not None:
+                        dv_versions.add(v)
+                    if a.get("dataChange") is not False:
+                        by.setdefault(v, []).append(a["path"])
         underivable = sorted(
             v for v in dv_versions if v not in cdc_by_v
         )
@@ -1446,29 +1445,25 @@ class Engine:
         has_parts = bool(meta.get("partitionColumns"))
         base_adds: dict[str, dict] | None = None  # lazy pv-recovery replay
         for v in range(indexed + 1, cur + 1):
-            p = os.path.join(deltalog.log_path(src_path), f"{v:020d}.json")
-            if not os.path.isfile(p):
+            actions = deltalog.commit_actions(src_path, v)
+            if actions is None:
                 raise ValueError(
                     f"source commit {v} is no longer retained (log cleanup) "
                     "— rebuild the index from scratch"
                 )
             adds_c: dict[str, dict] = {}
             removes_c: dict[str, dict] = {}
-            with open(p, encoding="utf-8") as f:
-                for line in f:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if action.get("add") is not None:
-                        a = action["add"]
-                        if a.get("dataChange") is False:
-                            continue  # compaction re-add: already indexed
-                        adds_c[a["path"]] = a
-                    elif action.get("remove") is not None:
-                        r = action["remove"]
-                        if r.get("dataChange") is False:
-                            continue  # compaction tombstone: no row change
-                        removes_c[r["path"]] = r
+            for action in actions:
+                if action.get("add") is not None:
+                    a = action["add"]
+                    if a.get("dataChange") is False:
+                        continue  # compaction re-add: already indexed
+                    adds_c[a["path"]] = a
+                elif action.get("remove") is not None:
+                    r = action["remove"]
+                    if r.get("dataChange") is False:
+                        continue  # compaction tombstone: no row change
+                    removes_c[r["path"]] = r
             for rp, r in removes_c.items():
                 saw_dml = True
                 if rp not in window_added:
@@ -1596,26 +1591,22 @@ class Engine:
         parquet (whole-file deletes). Pure os.stat over the commit jsons
         already required by the walk — no Spark job."""
         for v in range(indexed + 1, cur + 1):
-            p = os.path.join(deltalog.log_path(src_path), f"{v:020d}.json")
-            if not os.path.isfile(p):
+            actions = deltalog.commit_actions(src_path, v)
+            if actions is None:
                 return False
             cdc_paths: list[str] = []
             data_paths: list[str] = []
-            with open(p, encoding="utf-8") as f:
-                for line in f:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if action.get("cdc") is not None:
-                        cdc_paths.append(action["cdc"]["path"])
-                    elif action.get("add") is not None:
-                        a = action["add"]
-                        if a.get("dataChange") is not False:
-                            data_paths.append(a["path"])
-                    elif action.get("remove") is not None:
-                        r = action["remove"]
-                        if r.get("dataChange") is not False:
-                            data_paths.append(r["path"])
+            for action in actions:
+                if action.get("cdc") is not None:
+                    cdc_paths.append(action["cdc"]["path"])
+                elif action.get("add") is not None:
+                    a = action["add"]
+                    if a.get("dataChange") is not False:
+                        data_paths.append(a["path"])
+                elif action.get("remove") is not None:
+                    r = action["remove"]
+                    if r.get("dataChange") is not False:
+                        data_paths.append(r["path"])
             for rel in cdc_paths or data_paths:
                 if not _is_foreign_path(rel) and not os.path.isfile(
                     os.path.join(src_path, rel)
@@ -4907,91 +4898,56 @@ class Engine:
     def _read_data(
         self,
         path: str,
-        version: int | None = None,
         keep_file_col: bool = False,
         keep_pos: bool = False,
         ix: _FileIndex | None = None,
     ) -> DataFrame:
-        """Log-driven scan: read exactly the LIVE file set from the Delta
-        snapshot (tombstoned files may still exist on disk until vacuum —
-        a raw directory read would resurrect them). Falls back to a plain
-        partition-discovering read for plain-parquet locations without a log.
+        """Log-driven scan: read exactly the LIVE file set of the snapshot
+        entry ``ix`` (default: the tip) — tombstoned files may still exist
+        on disk until vacuum, and a raw directory read would resurrect
+        them. The file list, deletion vectors, schema and column mapping all
+        come from ``ix``, a cached tip or a pinned version alike: its
+        driver-side replay builds the scan with ZERO Spark jobs (the
+        reference's cached-snapshot lookup, src/main.rs:82-85). Past
+        ``large_listing_threshold`` the scan switches to the listing join
+        at ``ix.version``. Falls back to a plain partition-discovering read
+        for plain-parquet locations without a log.
 
         ``keep_file_col`` adds the source-file URI as ``_file`` (DML needs
         it): materialized INSIDE the scan projection, because
         ``input_file_name()`` cannot be applied on top of the listing-join
-        plan (multi-source). ``ix`` is the operation's snapshot entry
-        (default: the tip).
+        plan (multi-source).
         """
         ix = ix or self._file_index(path)
         if ix.version >= 0:
             snap = ix.snapshot
             snap.check_read()
-            limit = self.large_listing_threshold
-
-            def compute_versioned():
-                # time travel replays distributed (rare path; limit+1 bounds
-                # driver memory AND detects overflow in one job)
-                rows = (
-                    deltalog.snapshot_files(self.spark, path, version=version)
-                    .select("path", "deletionVector", "partitionValues")
-                    .limit(limit + 1)
-                    .collect()
-                )
-                if len(rows) > limit:
-                    return _TOO_MANY_FILES
-                return rows
-
-            # only the latest snapshot is memoized; explicit versions are rare
-            if version is None:
-                # the cached entry's driver-side replay — ZERO Spark jobs,
-                # the reference's cached-snapshot lookup (src/main.rs:82-85);
-                # past the limit the scan switches to the listing-join
-                live = ix.scan_files(limit)
-                dv_items = None if live is _TOO_MANY_FILES else list(ix.dv_map.items())
-                pv_of = None  # resolved lazily from the cached live adds
-            else:
-                rows = compute_versioned()
-                if rows is _TOO_MANY_FILES:
-                    live = _TOO_MANY_FILES
-                    dv_items = None
-                    pv_of = None
-                else:
-                    live = [os.path.join(path, r["path"]) for r in rows]
-                    dv_items = [
-                        (r["path"], r["deletionVector"].asDict())
-                        for r in rows
-                        if r["deletionVector"] is not None
-                        and r["deletionVector"]["storageType"] is not None
-                    ]
-                    pv_of = {
-                        r["path"]: dict(r["partitionValues"] or {}) for r in rows
-                    }
+            live = ix.scan_files(self.large_listing_threshold)
             if live is _TOO_MANY_FILES:
                 if keep_pos:
                     # physical row positions require the enumerated scan
                     raise _NeedsEnumeratedScan(path)
                 return self._read_data_listing_join(
-                    path, version, keep_file_col=keep_file_col
+                    path, ix, keep_file_col=keep_file_col
                 )
             if not live:
                 return self._empty_table(snap)
+            dv_items = list(ix.dv_map.items())
             root_prefix = path.rstrip("/") + "/"
             if any(not p.startswith(root_prefix) for p in live):
                 # shallow clone: files live under the SOURCE root, so
                 # basePath partition derivation cannot work — partition
                 # values come from the LOG instead (Delta's own model)
-                if pv_of is None:
-                    pv_of = {
-                        r: dict(a.get("partitionValues") or {})
-                        for r, a in ix.adds.items()
-                    }
+                pv_of = {
+                    r: dict(a.get("partitionValues") or {}) for r, a in ix.adds.items()
+                }
                 return self._read_clone_enumerated(
                     path,
                     pv_of,
                     keep_file_col=keep_file_col,
                     keep_pos=keep_pos,
                     dv_items=dv_items,
+                    snap=snap,
                 )
             reader = self.spark.read.option("basePath", path)
             schema = snap.schema
@@ -5030,6 +4986,7 @@ class Engine:
         keep_file_col: bool = False,
         keep_pos: bool = False,
         dv_items: "list[tuple[str, dict]] | None" = None,
+        snap: deltalog.Snapshot | None = None,
     ) -> DataFrame:
         """Scan of a snapshot that references files OUTSIDE the table root
         (shallow clone): partition values come from the log's
@@ -5041,10 +4998,11 @@ class Engine:
         hold. Column-mapped clones read under the PHYSICAL data schema and
         project back to logical; DV'd files anti-join their deleted
         positions exactly like the in-root scan (the clone's descriptors
-        reference the source's bins by absolute path)."""
+        reference the source's bins by absolute path). ``snap`` is the
+        version read (default: the tip)."""
         from pyspark.sql import types as T
 
-        snap = self._snapshot(path)
+        snap = snap or self._snapshot(path)
         schema = snap.schema
         if schema is None:
             raise ValueError(f"cloned table {path} has no logged schema")
@@ -5101,7 +5059,7 @@ class Engine:
     def _read_data_listing_join(
         self,
         path: str,
-        version: int | None = None,
+        ix: _FileIndex,
         live: DataFrame | None = None,
         keep_file_col: bool = False,
     ) -> DataFrame:
@@ -5118,6 +5076,8 @@ class Engine:
         cheap, no shuffle), past it a shuffle-hash join keeps driver memory
         O(1) at the cost of shuffling the scan's path column.
 
+        ``ix`` is the snapshot entry read: its version bounds the
+        distributed replay and its metadata gives the schema.
         ``live`` overrides the file set: any DataFrame with a relative
         ``path`` column (e.g. the stats-surviving subset from
         :meth:`scan_with_skipping`); defaults to the full snapshot.
@@ -5127,7 +5087,7 @@ class Engine:
         until vacuum; the enumerated path reads live bytes only. Correctness
         is identical — only snapshot files survive the join.
         """
-        snap = self._snapshot(path)
+        snap = ix.snapshot
         snap.check_read()
         reader = self.spark.read.option("basePath", path)
         schema = snap.schema
@@ -5136,7 +5096,7 @@ class Engine:
             reader = reader.schema(phys_schema)
         df = reader.parquet(path)
         if live is None:
-            live = deltalog.snapshot_files(self.spark, path, version=version)
+            live = deltalog.snapshot_files(self.spark, path, version=ix.version)
         # shallow clones reference files by ABSOLUTE path: the directory
         # listing under THIS root cannot see them, so the semi-join would
         # silently DROP their rows — switch to the foreign-aware variant,
@@ -5152,7 +5112,7 @@ class Engine:
             > 0
         ):
             return self._read_clone_listing_join(
-                path, version, live=live, keep_file_col=keep_file_col
+                path, ix, live=live, keep_file_col=keep_file_col
             )
         dv_filter = snap.deletion_vectors
         live = live.select(F.col("path").alias("_live_rel"))
@@ -5176,7 +5136,7 @@ class Engine:
         if dv_filter:
             pos_df = self._dv_positions_df(
                 path,
-                dv_df=deltalog.snapshot_files(self.spark, path, version=version),
+                dv_df=deltalog.snapshot_files(self.spark, path, version=ix.version),
             )
             if pos_df is not None:
                 out = out.join(
@@ -5193,7 +5153,7 @@ class Engine:
     def _read_clone_listing_join(
         self,
         path: str,
-        version: int | None = None,
+        ix: _FileIndex | None = None,
         live: DataFrame | None = None,
         keep_file_col: bool = False,
     ) -> DataFrame:
@@ -5235,12 +5195,13 @@ class Engine:
         """
         from pyspark.sql import types as T
 
-        snap = deltalog.snapshot_files(self.spark, path, version=version)
+        ix = ix or self._file_index(path)
+        snap = deltalog.snapshot_files(self.spark, path, version=ix.version)
         if live is not None:
             snap = snap.join(
                 live.select("path").dropDuplicates(), "path", "left_semi"
             )
-        tsnap = self._snapshot(path)
+        tsnap = ix.snapshot
         tsnap.check_read()
         schema = tsnap.schema
         if schema is None:
@@ -5307,7 +5268,7 @@ class Engine:
         if dv_filter:
             pos_df = self._dv_positions_df(
                 path,
-                dv_df=deltalog.snapshot_files(self.spark, path, version=version),
+                dv_df=deltalog.snapshot_files(self.spark, path, version=ix.version),
             )
             if pos_df is not None:
                 out = out.join(
@@ -5450,13 +5411,21 @@ class Engine:
         metadata, which Spark's reader (with
         ``spark.sql.parquet.fieldId.read.enabled``) resolves against the
         file's parquet field ids — the id-mode contract: the file's column
-        NAMES are not authoritative, the ids are."""
+        NAMES are not authoritative, the ids are. A session that resolves by
+        name instead would read the wrong columns, so id mode refuses there."""
         from pyspark.sql import types as T
 
         l2p = snap.column_mapping
         if not l2p or schema is None:
             return schema, None
         l2id = snap.field_ids
+        by_id = "spark.sql.parquet.fieldId.read.enabled"
+        if l2id and self.spark.conf.get(by_id, "false").lower() != "true":
+            raise UnsupportedProtocolError(
+                snap.path,
+                f"id-mode column mapping needs {by_id}=true, which this "
+                "session does not set",
+            )
         phys = T.StructType(
             [
                 T.StructField(
@@ -5529,13 +5498,24 @@ class Engine:
         pred = compile_dnf_on_partition_values(dnf)
         return files if pred is None else files.filter(pred)
 
-    def _file_index(self, path: str, tip_check: bool = True) -> _FileIndex:
+    def _file_index(
+        self, path: str, version: int | None = None, tip_check: bool = True
+    ) -> _FileIndex:
         """The table's one snapshot-cache entry. Every operation but GET
         calls this once, at its start, and threads the entry down:
         ``tip_check`` resolves the log tip (one ``_delta_log/`` listing) and
         rebuilds the entry when a commit landed since it was cached. GET
         passes False and trusts the cached entry, which engine commits drop
-        and every other operation refreshes."""
+        and every other operation refreshes.
+
+        A ``version`` pins the entry instead: a fresh, uncached entry at
+        that version (the cache holds tips only), refused when log cleanup
+        made the version unreproducible."""
+        if version is not None:
+            if version < 0:
+                raise ValueError(f"version {version} does not exist at {path}")
+            deltalog.assert_version_reproducible(path, version)
+            return _FileIndex(deltalog.load_snapshot(path, version))
         if not tip_check:
             return self._snapshot_cache.get_or_compute(
                 path, lambda: _FileIndex(deltalog.load_snapshot(path))
@@ -5651,7 +5631,7 @@ class Engine:
         limit = self.large_listing_threshold
         rows = survivors.select("path", "deletionVector").limit(limit + 1).collect()
         if len(rows) > limit:
-            df = self._read_data_listing_join(path, live=survivors)
+            df = self._read_data_listing_join(path, ix, live=survivors)
         elif not rows:
             df = self._read_data(path, ix=ix).limit(0)
         else:

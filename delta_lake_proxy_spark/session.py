@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Session-level SQL confs the engine depends on. Applied both at build time and
@@ -65,10 +66,15 @@ def build_session(app_name: str = "delta-lake-proxy-spark", cpus: int | None = N
 
 
 def ensure_engine_confs(spark: SparkSession) -> SparkSession:
-    """Set the engine's required SQL confs on an externally built session."""
+    """Set the engine's required SQL confs on an externally built session.
+    A conf the deployment does not let us modify is left as it is; the
+    reads that depend on one check it at use (id-mode column mapping
+    refuses without ``spark.sql.parquet.fieldId.read.enabled``). Any other
+    failure raises."""
     for k, v in ENGINE_SQL_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable in this deployment; engine degrades gracefully
+        except AnalysisException as e:
+            if e.getCondition() not in ("CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG"):
+                raise
     return spark

@@ -85,22 +85,6 @@ class GovernedFilesPartition(InputPartition):
         self.files = files
 
 
-def _log_actions(table_path: str) -> list[dict]:
-    """Driver-side raw JSON action list (metadata-sized, no SparkSession)."""
-    d = deltalog.log_path(table_path)
-    actions: list[dict] = []
-    if not os.path.isdir(d):
-        return actions
-    for name in sorted(os.listdir(d)):
-        if not (name.endswith(".json") and name[:-5].isdigit()):
-            continue
-        with open(os.path.join(d, name), "r", encoding="utf-8") as f:
-            for line in f:
-                if line.strip():
-                    actions.append(json.loads(line))
-    return actions
-
-
 def _live_adds(table_path: str) -> list[dict]:
     """Replay: latest action per path wins; keep live adds (with their
     partitionValues). Delegates to the CHECKPOINT-AWARE driver-side replay in
@@ -110,31 +94,15 @@ def _live_adds(table_path: str) -> list[dict]:
 
 
 def _logged_schema(table_path: str) -> T.StructType | None:
-    """Latest metaData schemaString: checkpoint first (it carries the
-    metaData action), then any JSON commits on top. Protocol-gated
-    (deltalog.check_read_protocol); for NAME-mode column-mapped tables the
-    schemaString's field names are LOGICAL (physical names live in field
-    metadata and are resolved by the readers via deltalog.column_mapping)."""
-    deltalog.check_read_protocol(table_path)
-    schema_json = None
-    ck = deltalog.last_checkpoint(table_path)
-    if ck is not None:
-        import pyarrow.parquet as pq
-
-        for ck_file in deltalog.checkpoint_data_files(table_path, ck):
-            if "metaData" not in pq.ParquetFile(ck_file).schema_arrow.names:
-                continue  # v2 sidecar files carry only add/remove state
-            for m in (
-                pq.read_table(ck_file, columns=["metaData"]).column("metaData").to_pylist()
-            ):
-                if m and m.get("schemaString"):
-                    schema_json = m["schemaString"]
-    for a in _log_actions(table_path):
-        if "metaData" in a and a["metaData"].get("schemaString"):
-            schema_json = a["metaData"]["schemaString"]
-    if not schema_json or schema_json == "{}":
+    """The tip's logged schema (:class:`deltalog.Snapshot`), read-gated;
+    None when the log declares no columns. For column-mapped tables the
+    field names are LOGICAL (physical names live in field metadata and are
+    resolved by the readers via deltalog.column_mapping)."""
+    snap = deltalog.load_snapshot(table_path)
+    snap.check_read()
+    schema = snap.schema
+    if schema is None:
         return None
-    schema = T.StructType.fromJson(json.loads(schema_json))
     if "variant" in schema.simpleString():
         from ..errors import UnsupportedProtocolError
 
@@ -607,6 +575,18 @@ class GovernedStreamReader(DataSourceStreamReader):
                     "new schema (Delta streaming-source semantics)"
                 )
 
+    def _retained_commit(self, version: int):
+        """The actions of commit ``version``; a commit log cleanup removed
+        fails the stream."""
+        actions = deltalog.commit_actions(self.path, version)
+        if actions is None:
+            raise ValueError(
+                f"stream offset predates log retention at {self.path}: commit "
+                f"{version} was cleaned up — restart the stream from a fresh "
+                "checkpoint"
+            )
+        return actions
+
     def _commit_list(self, version: int) -> list[dict]:
         """Incremental window: the allowed net adds of commit ``version``
         alone. Missing commit JSON (log cleanup), protocol upgrades, and
@@ -622,41 +602,30 @@ class GovernedStreamReader(DataSourceStreamReader):
                 self._commit_cache.pop(next(iter(self._commit_cache)))
             self._commit_cache[version] = out
             return out
-        p = os.path.join(deltalog.log_path(self.path), f"{version:020d}.json")
-        if not os.path.exists(p):
-            raise ValueError(
-                f"stream offset predates log retention at {self.path}: commit "
-                f"{version} was cleaned up — restart the stream from a fresh "
-                "checkpoint"
-            )
         state: dict[str, dict] = {}
-        with open(p, "r", encoding="utf-8") as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "add" in action:
-                    if action["add"].get("dataChange") is False:
-                        continue  # compaction re-add: rows already served
-                    state[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    if action["remove"].get("dataChange") is False:
-                        continue  # compaction tombstone: no row change
-                    if action["remove"]["path"] in state:
-                        del state[action["remove"]["path"]]  # add+remove: never serve
-                    elif not self.ignore_changes:
-                        raise ValueError(
-                            f"commit {version} at {self.path} removes "
-                            f"{action['remove']['path']!r} (a DELETE or "
-                            "copy-on-write rewrite): rows already served may "
-                            "be duplicated or retracted. Set ignoreDeletes "
-                            "or ignoreChanges to stream past non-append "
-                            "changes (Delta streaming-source semantics)."
-                        )
-                elif "protocol" in action:
-                    deltalog.check_protocol_action(self.path, action["protocol"])
-                elif "metaData" in action:
-                    self._check_schema_change(action["metaData"], version)
+        for action in self._retained_commit(version):
+            if "add" in action:
+                if action["add"].get("dataChange") is False:
+                    continue  # compaction re-add: rows already served
+                state[action["add"]["path"]] = action["add"]
+            elif "remove" in action:
+                if action["remove"].get("dataChange") is False:
+                    continue  # compaction tombstone: no row change
+                if action["remove"]["path"] in state:
+                    del state[action["remove"]["path"]]  # add+remove: never serve
+                elif not self.ignore_changes:
+                    raise ValueError(
+                        f"commit {version} at {self.path} removes "
+                        f"{action['remove']['path']!r} (a DELETE or "
+                        "copy-on-write rewrite): rows already served may "
+                        "be duplicated or retracted. Set ignoreDeletes "
+                        "or ignoreChanges to stream past non-append "
+                        "changes (Delta streaming-source semantics)."
+                    )
+            elif "protocol" in action:
+                deltalog.check_protocol_action(self.path, action["protocol"])
+            elif "metaData" in action:
+                self._check_schema_change(action["metaData"], version)
         out = self._allowed(state.values())
         if len(self._commit_cache) >= self._COMMIT_CACHE_MAX:
             self._commit_cache.pop(next(iter(self._commit_cache)))
@@ -671,32 +640,21 @@ class GovernedStreamReader(DataSourceStreamReader):
         still on disk until vacuum, with partitionValues/size resolved from
         the prior snapshot). dataChange=false commits (compaction) yield an
         EMPTY window."""
-        p = os.path.join(deltalog.log_path(self.path), f"{version:020d}.json")
-        if not os.path.exists(p):
-            raise ValueError(
-                f"stream offset predates log retention at {self.path}: commit "
-                f"{version} was cleaned up — restart the stream from a fresh "
-                "checkpoint"
-            )
         cdc: list[dict] = []
         adds: list[dict] = []
         removes: list[dict] = []
-        with open(p, "r", encoding="utf-8") as f:
-            for line in f:
-                if not line.strip():
+        for action in self._retained_commit(version):
+            if "add" in action or "remove" in action:
+                a = action.get("add") or action.get("remove")
+                if a.get("dataChange") is False:
                     continue
-                action = json.loads(line)
-                if "add" in action or "remove" in action:
-                    a = action.get("add") or action.get("remove")
-                    if a.get("dataChange") is False:
-                        continue
-                    (adds if "add" in action else removes).append(a)
-                elif "cdc" in action:
-                    cdc.append(action["cdc"])
-                elif "protocol" in action:
-                    deltalog.check_protocol_action(self.path, action["protocol"])
-                elif "metaData" in action:
-                    self._check_schema_change(action["metaData"], version)
+                (adds if "add" in action else removes).append(a)
+            elif "cdc" in action:
+                cdc.append(action["cdc"])
+            elif "protocol" in action:
+                deltalog.check_protocol_action(self.path, action["protocol"])
+            elif "metaData" in action:
+                self._check_schema_change(action["metaData"], version)
         if cdc:
             # cdc change files are authoritative for this commit: DV
             # add/remove actions alongside them need no derivation
@@ -732,75 +690,45 @@ class GovernedStreamReader(DataSourceStreamReader):
         ``(start, end]`` — adds keyed by path, minus removes landing later in
         the SAME window; removes of files outside the window are non-append
         changes (fail unless ignoreDeletes/ignoreChanges)."""
-        d = deltalog.log_path(self.path)
-        names = sorted(os.listdir(d)) if os.path.isdir(d) else []
-        present: set[int] = set()
         state: dict[str, dict | None] = {}
-        for name in names:
-            if not (name.endswith(".json") and name[:-5].isdigit()):
-                continue
-            v = int(name[:-5])
-            if not (start < v <= end):
-                continue
-            present.add(v)
-            with open(os.path.join(d, name), "r", encoding="utf-8") as f:
-                for line in f:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "add" in action:
-                        if action["add"].get("dataChange") is False:
-                            continue  # compaction re-add: rows already served
-                        state[action["add"]["path"]] = action["add"]
-                    elif "remove" in action:
-                        if action["remove"].get("dataChange") is False:
-                            continue  # compaction tombstone: no row change
-                        if action["remove"]["path"] in state:
-                            state.pop(action["remove"]["path"])
-                        elif not self.ignore_changes:
-                            raise ValueError(
-                                f"commit {v} at {self.path} removes "
-                                f"{action['remove']['path']!r} (a DELETE or "
-                                "copy-on-write rewrite): rows already served "
-                                "may be duplicated or retracted. Set "
-                                "ignoreDeletes or ignoreChanges to stream "
-                                "past non-append changes."
-                            )
-                    elif "protocol" in action:
-                        # a mid-stream protocol upgrade must stop the
-                        # incremental reader exactly like a fresh open
-                        deltalog.check_protocol_action(self.path, action["protocol"])
-                    elif "metaData" in action:
-                        self._check_schema_change(action["metaData"], v)
-        missing = set(range(start + 1, end + 1)) - present
-        if missing:
-            raise ValueError(
-                f"stream offset version {start} predates log retention at "
-                f"{self.path}: commits {sorted(missing)} were cleaned up — "
-                "restart the stream from a fresh checkpoint"
-            )
+        for v in range(start + 1, end + 1):
+            for action in self._retained_commit(v):
+                if "add" in action:
+                    if action["add"].get("dataChange") is False:
+                        continue  # compaction re-add: rows already served
+                    state[action["add"]["path"]] = action["add"]
+                elif "remove" in action:
+                    if action["remove"].get("dataChange") is False:
+                        continue  # compaction tombstone: no row change
+                    if action["remove"]["path"] in state:
+                        state.pop(action["remove"]["path"])
+                    elif not self.ignore_changes:
+                        raise ValueError(
+                            f"commit {v} at {self.path} removes "
+                            f"{action['remove']['path']!r} (a DELETE or "
+                            "copy-on-write rewrite): rows already served "
+                            "may be duplicated or retracted. Set "
+                            "ignoreDeletes or ignoreChanges to stream "
+                            "past non-append changes."
+                        )
+                elif "protocol" in action:
+                    # a mid-stream protocol upgrade must stop the
+                    # incremental reader exactly like a fresh open
+                    deltalog.check_protocol_action(self.path, action["protocol"])
+                elif "metaData" in action:
+                    self._check_schema_change(action["metaData"], v)
         return [a for a in state.values() if a is not None]
 
     # -- offsets --------------------------------------------------------------
 
     def _first_version_at_or_after(self, ts_millis: int) -> int:
-        """Smallest retained commit version whose commitInfo.timestamp is
+        """Smallest retained commit version whose commit timestamp is
         >= ``ts_millis`` (Delta streaming ``startingTimestamp`` resolution);
         latest+1 when the timestamp is after every commit (only future
         commits will serve)."""
-        d = deltalog.log_path(self.path)
-        names = sorted(os.listdir(d)) if os.path.isdir(d) else []
-        for name in names:
-            if not (name.endswith(".json") and name[:-5].isdigit()):
-                continue
-            with open(os.path.join(d, name), "r", encoding="utf-8") as f:
-                for line in f:
-                    if '"commitInfo"' not in line[:64]:
-                        continue
-                    info = json.loads(line).get("commitInfo") or {}
-                    ts = info.get("inCommitTimestamp", info.get("timestamp"))
-                    if ts is not None and int(ts) >= ts_millis:
-                        return int(name[:-5])
+        for v, ts in deltalog._commit_timestamps(self.path):
+            if ts >= ts_millis:
+                return v
         return deltalog.latest_version(self.path) + 1
 
     def _initial_pos(self) -> dict:
@@ -967,28 +895,6 @@ class GovernedStreamReader(DataSourceStreamReader):
         pass
 
 
-def _logged_partition_cols(table_path: str) -> list[str]:
-    """Latest metaData partitionColumns, checkpoint-aware (mirrors
-    :func:`_logged_schema`'s resolution order)."""
-    cols: list[str] = []
-    ck = deltalog.last_checkpoint(table_path)
-    if ck is not None:
-        import pyarrow.parquet as pq
-
-        for ck_file in deltalog.checkpoint_data_files(table_path, ck):
-            if "metaData" not in pq.ParquetFile(ck_file).schema_arrow.names:
-                continue  # v2 sidecar files carry only add/remove state
-            for m in (
-                pq.read_table(ck_file, columns=["metaData"]).column("metaData").to_pylist()
-            ):
-                if m and m.get("partitionColumns") is not None:
-                    cols = list(m["partitionColumns"])
-    for a in _log_actions(table_path):
-        if "metaData" in a and a["metaData"].get("partitionColumns") is not None:
-            cols = list(a["metaData"]["partitionColumns"])
-    return cols
-
-
 @dataclass
 class GovernedWriteCommit(WriterCommitMessage):
     rel_paths: list
@@ -1039,7 +945,7 @@ class GovernedWriter(DataSourceArrowWriter):
                 f"{sorted(cons)} — use Engine.write_table, which validates "
                 "them (the governed DataSource writer cannot)"
             )
-        self.partition_cols = _logged_partition_cols(self.table_path)
+        self.partition_cols = deltalog.load_snapshot(self.table_path).partition_columns
         self.overwrite = overwrite
         # Log-compaction cadence (Delta spec "Log Compaction Files"): a
         # streaming sink commits once per micro-batch, so its JSON tail is

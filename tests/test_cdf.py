@@ -317,7 +317,6 @@ def test_batch_reader_rejects_read_change_feed(cdf_table, spark):
         )
 
 
-@pytest.mark.full
 def test_table_changes_timestamp_bounds(cdf_table, spark):
     """Timestamp-bounded CDF: bounds resolve through the same rule as
     timestampAsOf (ICT-aware), exclusive start / inclusive end."""
@@ -368,7 +367,6 @@ def test_table_changes_timestamp_bounds(cdf_table, spark):
         eng.table_changes("t", from_version=1, from_timestamp=1000)
 
 
-@pytest.mark.full
 def test_feed_replay_reconstructs_table(cdf_table, spark):
     """End-to-end CDF invariant: applying the whole change feed to an
     empty state — inserts/update_postimages upsert, deletes/preimages

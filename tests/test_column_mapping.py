@@ -390,6 +390,20 @@ def test_id_mode_engine_read(spark, id_mapped):
     assert rows[4]["val"] == 6.0 and rows[4]["part"] == "B"
 
 
+def test_id_mode_read_refuses_without_field_id_resolution(spark, id_mapped):
+    """A session that resolves parquet columns by name would read the wrong
+    columns of an id-mode table: the read refuses instead."""
+    eng = Engine(spark, EngineConfig(table_mapping={"t": id_mapped}))
+    key = "spark.sql.parquet.fieldId.read.enabled"
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(UnsupportedProtocolError, match="fieldId"):
+            eng.read_table("t")
+    finally:
+        spark.conf.set(key, "true")
+    assert eng.read_table("t").count() == 5
+
+
 def test_id_mode_engine_read_with_acl(spark, id_mapped):
     eng = Engine(
         spark,

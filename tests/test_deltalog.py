@@ -74,6 +74,23 @@ def test_table_metadata_latest_wins(spark, tmp_path):
     assert meta["partitionColumns"] == ["p"]
 
 
+def test_table_id_survives_metadata_commits(spark, tmp_path):
+    """The table id and creation time are fixed for the table's life: a
+    property change re-emits metaData and keeps both."""
+    from delta_lake_proxy_spark import Engine, EngineConfig
+
+    t = str(tmp_path / "t")
+    os.makedirs(t)
+    deltalog.write_commit(t, [], schema_json='{"v":1}')
+    Engine(spark, EngineConfig(table_mapping={"t": t}, read_only=False)).set_table_properties(
+        "t", {"delta.appendOnly": "true"}
+    )
+    v0, v1 = deltalog.load_snapshot(t, 0), deltalog.load_snapshot(t, 1)
+    assert v1.configuration["delta.appendOnly"] == "true"
+    assert v1.metadata["id"] == v0.metadata["id"]
+    assert v1.metadata_action["createdTime"] == v0.metadata_action["createdTime"]
+
+
 def test_commit_dir_state_tracks_disk(spark, tmp_path, lineitem):
     t = str(tmp_path / "t")
     lineitem.limit(20).repartition(1).write.partitionBy("l_returnflag").parquet(t)
@@ -563,6 +580,10 @@ def test_estimate_snapshot_actions_bounds(spark, tmp_path):
         )
     true_live = len(deltalog._live_adds_no_spark(t))
     assert deltalog.estimate_snapshot_actions(t) >= true_live
+    # a pinned version is sized at that version, not at the tip
+    at_1 = deltalog.estimate_snapshot_actions(t, 1)
+    assert len(deltalog._live_adds_no_spark(t, max_version=1)) <= at_1
+    assert at_1 < deltalog.estimate_snapshot_actions(t)
     deltalog.write_checkpoint(spark, t)
     deltalog.cleanup_log(t, retention_hours=0.0)
     est = deltalog.estimate_snapshot_actions(t)
@@ -704,7 +725,8 @@ def test_time_travel_below_cleanup_fails_loudly(spark, tmp_path):
         )
     deltalog.write_checkpoint(spark, t)
     deltalog.cleanup_log(t, retention_hours=0.0)
-    # the checkpointed tip itself still replays
+    # the checkpointed tip itself still replays, though no commit file is left
+    assert deltalog.commit_actions(t, 2) is None
     assert deltalog.snapshot_files(spark, t, version=2).count() == 3
     with _pytest.raises(ValueError, match="no longer reproducible"):
         deltalog.snapshot_files(spark, t, version=1).count()
@@ -716,4 +738,6 @@ def test_time_travel_below_cleanup_fails_loudly(spark, tmp_path):
     eng = Engine(spark, EngineConfig(table_mapping={"t": t}, read_only=False))
     with _pytest.raises(ValueError, match="no longer reproducible"):
         eng.restore("t", version=0)
+    with _pytest.raises(ValueError, match="no longer reproducible"):
+        eng.read_table("t", version=1)
     assert deltalog.snapshot_files(spark, t).count() == 3  # table intact

@@ -334,6 +334,10 @@ def test_schema_evolution_on_append(spark, tmp_path, lineitem):
     assert out.count() == 60
     assert out.filter(F.col("source_tag").isNull()).count() == 50  # old files
     assert out.filter(F.col("source_tag") == "v2").count() == 10
+    # time travel serves the version's own schema, not the tip's
+    v0 = eng.read_table("t", version=0)
+    assert v0.columns == base.columns
+    assert v0.count() == 50
     # conflicting type change rejected
     bad = base.limit(1).withColumn("l_quantity", F.lit("not-a-double"))
     with pytest.raises(ValueError):
@@ -857,7 +861,9 @@ def test_listing_join_scan_matches_enumerated_path(spark, tmp_path, lineitem):
     assert len(joined) == 60
     assert joined.reset_index(drop=True).equals(enumerated.reset_index(drop=True))
     # time travel still works through the listing-join path
-    assert eng.read_table("t", version=0).count() == 200
+    pinned = eng.read_table("t", version=0)
+    assert "LeftSemi" in pinned._jdf.queryExecution().toString()
+    assert pinned.count() == 200
 
 
 def test_scan_with_skipping_listing_join_overflow(spark, tmp_path, lineitem):

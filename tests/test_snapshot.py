@@ -9,6 +9,8 @@
   schemaString that is not JSON or whose ``fields`` is not a list of named
   objects, a ``delta.invariants`` value that is JSON but not the spec's
   wrapper, and an unknown writer feature.
+- A pinned version, a timestamp lookup and a change-feed window are read on
+  the driver: building those reads runs no Spark job.
 """
 
 from __future__ import annotations
@@ -252,3 +254,29 @@ def test_schema_without_fields_declares_no_columns(tmp_path, schema_string):
     assert snap.fields == () and snap.schema is None
     assert snap.invariants == {} and snap.generated == {} and snap.identity == {}
     assert deltalog.write_commit(path, []) == 1
+
+
+# ---------------------------------------------------------------------------
+# pinned versions and commit windows are read on the driver
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("read", ["version", "timestamp", "changes"])
+def test_pinned_reads_and_change_feeds_plan_without_spark_jobs(spark, tmp_path, count_jobs, read):
+    """Building a time-travel read, a timestamp read or a change feed runs
+    0 Spark jobs: the pinned entry, the timestamp lookup and the window's
+    actions all come from the driver-side log reader."""
+    path = _table(spark, str(tmp_path))
+    eng = _engine(spark, path)
+    eng.write_table("t", spark.range(100, 110).withColumn("p", F.lit("0")))
+    ci = next(deltalog.commit_actions(path, 0))["commitInfo"]
+    t0 = (ci["timestamp"] + 0.5) / 1000  # between v0 and v1, epoch seconds
+    build = {
+        "version": lambda: eng.read_table("t", version=0),
+        "timestamp": lambda: eng.read_table("t", timestamp_as_of=t0),
+        "changes": lambda: eng.table_changes("t", 0, 1),
+    }[read]
+    build()  # warm the tip entry and the JVM-side readers
+    df, jobs = count_jobs(build)
+    assert jobs == 0
+    assert df.count() == {"version": 100, "timestamp": 100, "changes": 10}[read]

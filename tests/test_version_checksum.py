@@ -311,8 +311,8 @@ def test_restore_and_clone_keep_chain(spark, tmp_path):
 
 def test_checkpoint_self_heals_broken_chain(spark, tmp_path):
     """A checkpoint on a crc-less table (foreign history) restarts the
-    chain with one distributed aggregate — no driver replay, no explicit
-    repair call."""
+    chain: the checkpoint writer composes the missing crc from its own
+    driver-side replay — no Spark job, no explicit repair call."""
     path = str(tmp_path / "t")
     eng = mk_engine(spark, path)
     eng.write_table("t", src_df(spark), mode="overwrite")
