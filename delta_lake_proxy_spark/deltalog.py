@@ -2951,9 +2951,15 @@ def checkpoint_data_files(table_path: str, ck: dict[str, Any]) -> list[str]:
     ``{v:020d}.checkpoint.{part:010d}.{parts:010d}.parquet`` multi-part set,
     or a V2 checkpoint ``{v:020d}.checkpoint.<unique>.parquet`` plus every
     ``_delta_log/_sidecars/`` file its ``sidecar`` actions reference (the
-    add state lives in the sidecars; reader feature ``v2Checkpoint``)."""
+    add state lives in the sidecars; reader feature ``v2Checkpoint``).
+    A ``v2Checkpoint`` field (the Delta spec's record of the v2 main file)
+    names the main file outright; without it, a classic file at the
+    version wins over a v2 one."""
     v = int(ck["version"])
     d = log_path(table_path)
+    v2 = ck.get("v2Checkpoint")
+    if v2 and v2.get("path"):
+        return _v2_checkpoint_files(d, os.path.join(d, v2["path"]))
     parts = int(ck.get("parts") or 0)
     if parts > 1:
         return [
@@ -2970,18 +2976,21 @@ def checkpoint_data_files(table_path: str, ck: dict[str, Any]) -> list[str]:
         rest = os.path.basename(main)[len(prefix) : -len(".parquet")]
         if "." in rest:
             continue  # multi-part naming (two numeric tokens), not v2
-        import pyarrow.parquet as pq
-
-        files = [main]
-        pf = pq.ParquetFile(main)
-        if "sidecar" in pf.schema_arrow.names:
-            for sc in (
-                pq.read_table(main, columns=["sidecar"]).column("sidecar").to_pylist()
-            ):
-                if sc and sc.get("path"):
-                    files.append(os.path.join(d, "_sidecars", sc["path"]))
-        return files
+        return _v2_checkpoint_files(d, main)
     return [classic]  # nothing found: let the caller fail with a clear path
+
+
+def _v2_checkpoint_files(log_dir: str, main: str) -> list[str]:
+    """A V2 checkpoint's main file plus the sidecars its ``sidecar``
+    actions reference."""
+    import pyarrow.parquet as pq
+
+    files = [main]
+    if "sidecar" in pq.ParquetFile(main).schema_arrow.names:
+        for sc in pq.read_table(main, columns=["sidecar"]).column("sidecar").to_pylist():
+            if sc and sc.get("path"):
+                files.append(os.path.join(log_dir, "_sidecars", sc["path"]))
+    return files
 
 
 def last_checkpoint(table_path: str) -> dict[str, Any] | None:
@@ -3172,9 +3181,14 @@ def _write_checkpoint(table_path: str, max_actions_per_part: int, v2: bool) -> i
             ],
             promote_options="default",
         )
-        _write_parquet_atomic(
-            main, os.path.join(logd, f"{v:020d}.checkpoint.{uuid.uuid4().hex}.parquet")
-        )
+        name = f"{v:020d}.checkpoint.{uuid.uuid4().hex}.parquet"
+        _write_parquet_atomic(main, os.path.join(logd, name))
+        st = os.stat(os.path.join(logd, name))
+        ck_meta["v2Checkpoint"] = {
+            "path": name,
+            "sizeInBytes": st.st_size,
+            "modificationTime": int(st.st_mtime * 1000),
+        }
     else:
         parts = -(-rows.num_rows // chunk)
         if parts == 1:

@@ -72,7 +72,7 @@ from .errors import (
     UnsupportedProtocolError,
 )
 from .io import local_df
-from .session import ensure_engine_confs
+from .session import LARGE_LISTING_THRESHOLD, ensure_engine_confs
 
 VIRTUAL_CATALOG = "datalake"  # the reference's single virtual bucket (src/main.rs:127)
 
@@ -140,11 +140,6 @@ def uri_rel_col(col: Column, table_path: str) -> Column:
 # broad-predicate DELETE over 100k files would blow up.
 ISIN_FILE_LIMIT = 64
 
-# Beyond this many LIVE files, reads stop enumerating the snapshot on the
-# driver entirely (no collect, no N-path reader argument list) and switch to
-# the listing-join scan — see Engine._read_data_listing_join.
-LARGE_LISTING_THRESHOLD = 100_000
-
 # Past this many LIVE files, the listing-join semi-join stops broadcasting
 # the path set (a broadcast materializes it on the DRIVER and each executor
 # — ~250 B/path puts 4M paths near 1 GB, and Spark hard-caps broadcasts at
@@ -207,13 +202,16 @@ class _FileIndex:
     never replays the live files. A pinned-version read builds one too, at
     its version, outside the cache."""
 
-    __slots__ = ("snapshot", "_adds", "_dv_map", "_scan", "_foreign", "_keys")
+    __slots__ = (
+        "snapshot", "_adds", "_dv_map", "_estimate", "_scan", "_foreign", "_keys"
+    )
 
     def __init__(self, snapshot: deltalog.Snapshot):
         self.snapshot = snapshot
         self._adds: dict[str, dict] | None = None
         self._dv_map: dict[str, dict] | None = None
-        self._scan = None
+        self._estimate: int | None = None
+        self._scan: list[str] | None = None
         self._foreign: bool | None = None
         self._keys: dict[str, list[str]] = {}
 
@@ -250,28 +248,34 @@ class _FileIndex:
             )
         return self._dv_map
 
+    @property
+    def estimate(self) -> int:
+        """:func:`deltalog.estimate_snapshot_actions` at this version: a
+        metadata-only upper bound on the live file count."""
+        if self._estimate is None:
+            self._estimate = deltalog.estimate_snapshot_actions(self.path, self.version)
+        return self._estimate
+
     def scan_files(self, limit: int):
         """Absolute paths of the live files, or ``_TOO_MANY_FILES`` past
-        ``limit`` — guarded by a metadata-only action-count estimate so an
-        over-threshold table never materializes on the driver."""
+        ``limit`` — guarded by the action-count estimate so an
+        over-threshold table never materializes on the driver. The estimate
+        and the list are memoized, not the verdict: each call compares them
+        with its own ``limit``."""
+        if self.estimate > limit or len(self.adds) > limit:
+            return _TOO_MANY_FILES
         if self._scan is None:
-            if (
-                deltalog.estimate_snapshot_actions(self.path, self.version) > limit
-                or len(self.adds) > limit
-            ):
-                self._scan = _TOO_MANY_FILES
-            else:
-                self._scan = [os.path.join(self.path, r) for r in sorted(self.adds)]
+            self._scan = [os.path.join(self.path, r) for r in sorted(self.adds)]
         return self._scan
 
     def foreign(self, limit: int) -> bool:
         """Whether any live file sits OUTSIDE the table root (shallow clone).
         An over-threshold snapshot answers False — the broad DML paths refuse
         foreign references on their own."""
+        if self.scan_files(limit) is _TOO_MANY_FILES:
+            return False
         if self._foreign is None:
-            self._foreign = self.scan_files(limit) is not _TOO_MANY_FILES and any(
-                _is_foreign_path(r) for r in self.adds
-            )
+            self._foreign = any(_is_foreign_path(r) for r in self.adds)
         return self._foreign
 
     def page(
@@ -525,9 +529,11 @@ class Engine:
         row-id columns inside files are not read). Requires the enumerable
         scan (physical positions), like the DV-writing DML paths.
 
-        The returned DataFrame's scan carries the compiled DNF filter, so
-        partition pruning selects exactly the files the reference's
-        ``get_file_uris_by_partitions`` union selects (src/main.rs:389-415).
+        The scan lists only the files the resolved DNF admits, evaluated
+        on the driver over each add's ``partitionValues`` (GET's rule) —
+        exactly the files the reference's ``get_file_uris_by_partitions``
+        union selects (src/main.rs:389-415) — and it still carries the
+        compiled DNF filter as a second check.
         ``version`` time-travels to an earlier snapshot (readable until
         :meth:`vacuum` reclaims its tombstoned files); ``timestamp_as_of``
         (Delta ``timestampAsOf``: epoch seconds, or an ISO-8601 string read
@@ -541,7 +547,8 @@ class Engine:
         version a fresh entry replayed on the driver at that version, so a
         time-travel read returns that version's files AND that version's
         schema. Below ``large_listing_threshold`` building the DataFrame
-        runs no Spark job either way; the tip's protocol and the pinned
+        runs no Spark job either way: the reader stats the admitted files on
+        the driver, never in a listing job. The tip's protocol and the pinned
         version's both gate the read.
         """
         self.counters["queries_served"] += 1
@@ -564,7 +571,11 @@ class Engine:
         if version is not None:
             ix.snapshot.check_read()  # the tip's gate; the pinned one's below
             ix = self._file_index(path, int(version))
-        df = self._with_row_ids(ix) if with_row_ids else self._read_data(path, ix=ix)
+        df = (
+            self._with_row_ids(ix, dnf)
+            if with_row_ids
+            else self._read_data(path, ix=ix, dnf=dnf)
+        )
         if pred is not None:
             # ACL BEFORE collation re-typing: partition-value comparison is
             # byte-exact directory matching, never collation-aware
@@ -572,7 +583,7 @@ class Engine:
         # no ACL configured => allow everything (src/main.rs:576)
         return self._apply_collations(ix.snapshot, df)
 
-    def _with_row_ids(self, ix: _FileIndex) -> DataFrame:
+    def _with_row_ids(self, ix: _FileIndex, dnf: acl.PartitionDNF | None) -> DataFrame:
         """Scan with materialized ``_row_id`` / ``_row_commit_version``
         (Delta rowTracking, fresh-id form): keep the raw file URI and
         physical row index through the scan (the same plumbing the
@@ -588,7 +599,9 @@ class Engine:
                 "the table's protocol",
             )
         try:
-            df = self._read_data(path, keep_file_col=True, keep_pos=True, ix=ix)
+            df = self._read_data(
+                path, keep_file_col=True, keep_pos=True, ix=ix, dnf=dnf
+            )
         except _NeedsEnumeratedScan:
             raise ValueError(
                 f"with_row_ids on {path} requires physical row positions, "
@@ -4901,6 +4914,7 @@ class Engine:
         keep_file_col: bool = False,
         keep_pos: bool = False,
         ix: _FileIndex | None = None,
+        dnf: acl.PartitionDNF | None = None,
     ) -> DataFrame:
         """Log-driven scan: read exactly the LIVE file set of the snapshot
         entry ``ix`` (default: the tip) — tombstoned files may still exist
@@ -4908,10 +4922,24 @@ class Engine:
         them. The file list, deletion vectors, schema and column mapping all
         come from ``ix``, a cached tip or a pinned version alike: its
         driver-side replay builds the scan with ZERO Spark jobs (the
-        reference's cached-snapshot lookup, src/main.rs:82-85). Past
-        ``large_listing_threshold`` the scan switches to the listing join
-        at ``ix.version``. Falls back to a plain partition-discovering read
-        for plain-parquet locations without a log.
+        reference's cached-snapshot lookup, src/main.rs:82-85), and the
+        reader stats the listed files on the driver (the session's
+        ``parallelPartitionDiscovery.threshold``, ``session.py``), not in a
+        listing job. Past ``large_listing_threshold`` the scan switches to
+        the listing join at ``ix.version``. Falls back to a plain
+        partition-discovering read for plain-parquet locations without a
+        log.
+
+        ``dnf`` (a governed read's resolved ACL) admits files on the driver
+        before the reader sees them: only the adds whose ``partitionValues``
+        satisfy it are listed — GET's :func:`acl.dnf_allows` rule, so the
+        scan reads the reference's allowed-file set (src/main.rs:389-415).
+        Grant keys match ``partitionValues`` keys exactly: a key naming a
+        non-partition column, or differing in case, admits no file. The
+        caller's Catalyst filter stays as the second check. A table whose
+        log has no schema reads every file (its column types come from the
+        files, so every user sees one schema) and the filter alone
+        enforces the grant. DML passes none and scans every live file.
 
         ``keep_file_col`` adds the source-file URI as ``_file`` (DML needs
         it): materialized INSIDE the scan projection, because
@@ -4930,16 +4958,28 @@ class Engine:
                 return self._read_data_listing_join(
                     path, ix, keep_file_col=keep_file_col
                 )
+            adds = ix.adds
+            # a table without a logged schema takes its column types from
+            # the files it reads: it keeps every file, so each user sees one
+            # schema, and the caller's filter alone enforces the grant
+            if dnf and snap.schema is not None:
+                tdnf = deltalog.translate_dnf(dnf, snap.column_mapping)
+                adds = {
+                    r: a
+                    for r, a in adds.items()
+                    if acl.dnf_allows(tdnf, a.get("partitionValues"))
+                }
+                live = [os.path.join(path, r) for r in sorted(adds)]
             if not live:
                 return self._empty_table(snap)
-            dv_items = list(ix.dv_map.items())
+            dv_items = [(r, d) for r, d in ix.dv_map.items() if r in adds]
             root_prefix = path.rstrip("/") + "/"
             if any(not p.startswith(root_prefix) for p in live):
                 # shallow clone: files live under the SOURCE root, so
                 # basePath partition derivation cannot work — partition
                 # values come from the LOG instead (Delta's own model)
                 pv_of = {
-                    r: dict(a.get("partitionValues") or {}) for r, a in ix.adds.items()
+                    r: dict(a.get("partitionValues") or {}) for r, a in adds.items()
                 }
                 return self._read_clone_enumerated(
                     path,
@@ -5070,11 +5110,12 @@ class Engine:
         log's schema, and rows are kept via a LEFT SEMI join of the scan's
         decoded ``input_file_name()`` against the snapshot's relative-path
         DataFrame. Plan size is O(1) in the file count either way; DRIVER
-        memory depends on the join strategy: up to
-        ``listing_join_broadcast_limit`` live files the path set is broadcast
-        (one job to count it, then driver + each executor hold the set —
-        cheap, no shuffle), past it a shuffle-hash join keeps driver memory
-        O(1) at the cost of shuffling the scan's path column.
+        memory depends on the join strategy: while the entry's action-count
+        estimate (an upper bound on the live files, from log metadata, no
+        job) is within ``listing_join_broadcast_limit`` the path set is
+        broadcast (driver + each executor hold the set — cheap, no
+        shuffle), past it a shuffle-hash join keeps driver memory O(1) at
+        the cost of shuffling the scan's path column.
 
         ``ix`` is the snapshot entry read: its version bounds the
         distributed replay and its metadata gives the schema.
@@ -5116,7 +5157,7 @@ class Engine:
             )
         dv_filter = snap.deletion_vectors
         live = live.select(F.col("path").alias("_live_rel"))
-        if live.count() <= self.listing_join_broadcast_limit:
+        if ix.estimate <= self.listing_join_broadcast_limit:
             live = F.broadcast(live)
         else:
             live = live.hint("shuffle_hash")

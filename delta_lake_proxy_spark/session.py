@@ -8,6 +8,11 @@ import tempfile
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
+# Beyond this many LIVE files, reads stop enumerating the snapshot on the
+# driver entirely (no collect, no N-path reader argument list) and switch to
+# the listing-join scan — see engine.Engine._read_data_listing_join.
+LARGE_LISTING_THRESHOLD = 100_000
+
 # Session-level SQL confs the engine depends on. Applied both at build time and
 # (for externally supplied sessions, e.g. the verification driver's) at use time
 # via ensure_engine_confs(); all of these are runtime-settable SQL confs.
@@ -36,6 +41,17 @@ ENGINE_SQL_CONFS = {
     # icebergCompatV1/V2 (Iceberg cannot read INT96) and strictly better
     # for every other reader (predicate pushdown works on int64).
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # Past this many reader paths or subdirectories (Spark's default: 32)
+    # Spark stats them in a listing job, one task per path, on every read.
+    # The log scan hands the reader its explicit file list, at most
+    # LARGE_LISTING_THRESHOLD paths (past it the scan switches to the
+    # listing join), so the driver stats the list itself and building a scan
+    # runs no job. The engine's log IO is POSIX (open/os.listdir): the
+    # driver sees the same filesystem as the data files. Session-wide: other
+    # reads in the session list on the driver too.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": str(
+        LARGE_LISTING_THRESHOLD
+    ),
 }
 
 

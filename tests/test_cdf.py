@@ -488,7 +488,6 @@ def test_dv_merge_feed_types(dv_cdf_table, spark):
     assert eng.read_table("t").count() == 21
 
 
-@pytest.mark.full
 def test_dv_cdf_feed_replay_reconstructs_table(dv_cdf_table, spark):
     """Replaying the full change feed (insert - delete + postimages) must
     reconstruct the DV table exactly — the invariant that certifies the

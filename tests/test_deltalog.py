@@ -670,6 +670,49 @@ def test_checkpoint_write_runs_no_spark_job(spark, tmp_path, count_jobs, layout)
     assert deltalog.table_metadata(spark, t)["partitionColumns"] == ["p"]
 
 
+def test_v2_checkpoint_over_a_classic_one_at_the_same_version(spark, tmp_path):
+    """``_last_checkpoint`` records a v2 checkpoint's main file under the
+    spec's ``v2Checkpoint`` field, and readers resolve from it: after a
+    classic and then a v2 checkpoint at one version, the checkpoint files
+    are the v2 main file plus its sidecars, not the classic file (which is
+    made unreadable here to prove it)."""
+    t = str(tmp_path / "t")
+    os.makedirs(t)
+    for i in range(3):
+        deltalog.write_commit(
+            t,
+            [
+                {
+                    "path": f"p={i % 2}/f{i}-{j}.parquet",
+                    "partitionValues": {"p": str(i % 2)},
+                    "size": j + 1,
+                    "modificationTime": 0,
+                }
+                for j in range(8)
+            ],
+            schema_json=_XP_SCHEMA if i == 0 else None,
+            partition_cols=["p"] if i == 0 else None,
+        )
+    want = deltalog._live_adds_no_spark(t)
+    v = deltalog.write_checkpoint(spark, t)
+    assert deltalog.write_checkpoint_v2(spark, t, 10) == v
+    ck = deltalog.last_checkpoint(t)
+    logd = deltalog.log_path(t)
+    main = os.path.join(logd, ck["v2Checkpoint"]["path"])
+    assert ck["v2Checkpoint"]["sizeInBytes"] == os.path.getsize(main)
+    assert ck["v2Checkpoint"]["modificationTime"] == int(os.stat(main).st_mtime * 1000)
+    files = deltalog.checkpoint_data_files(t, ck)
+    assert files[0] == main and len(files) == 4  # main + 3 sidecars of 10
+    assert all(os.path.dirname(f) == os.path.join(logd, "_sidecars") for f in files[1:])
+    with open(os.path.join(logd, f"{v:020d}.checkpoint.parquet"), "wb") as f:
+        f.write(b"not parquet")
+    for name in os.listdir(logd):
+        if name.endswith((".json", ".crc")):
+            os.remove(os.path.join(logd, name))
+    assert set(deltalog._live_adds_no_spark(t)) == set(want)
+    assert deltalog.table_metadata(spark, t)["partitionColumns"] == ["p"]
+
+
 def test_checkpoint_is_built_from_one_version(spark, tmp_path):
     """A commit that lands while version v is checkpointed must not leak
     into the checkpoint: its metaData, txn rows, adds and the healed crc

@@ -823,12 +823,15 @@ def test_rank_zorder_handles_skew(spark, tmp_path):
     assert scanned["rank"] < scanned["linear"] / 3
 
 
-def test_listing_join_scan_matches_enumerated_path(spark, tmp_path, lineitem):
+def test_listing_join_scan_matches_enumerated_path(spark, tmp_path, lineitem, count_jobs):
     """Past large_listing_threshold live files, _read_data switches to the
     listing-join scan (directory read + broadcast semi-join on the snapshot's
     relative paths — no driver-side file enumeration). Same rows as the
     enumerated path; tombstoned-but-unvacuumed and staged-uncommitted files
-    are dropped by the join, not resurrected by the directory listing."""
+    are dropped by the join, not resurrected by the directory listing. A
+    threshold lowered on a warm engine applies to the cached tip entry, and
+    the broadcast choice reads the log's action-count estimate, not a
+    count job."""
     import os
 
     from delta_lake_proxy_spark.engine import write_governed_table
@@ -853,6 +856,12 @@ def test_listing_join_scan_matches_enumerated_path(spark, tmp_path, lineitem):
     )
 
     enumerated = eng.read_table("t").toPandas().sort_values("l_orderkey")
+    eng.large_listing_threshold = 1  # on the warm engine, no cache reset
+    warm, jobs = count_jobs(lambda: eng.read_table("t"))
+    assert "LeftSemi" in warm._jdf.queryExecution().toString()
+    # the foreign-path probe's jobs only: the broadcast choice reads the
+    # log's action-count estimate and runs none
+    assert jobs == 3
     eng.invalidate_caches()
     eng.large_listing_threshold = 1  # force the listing-join path
     joined_df = eng.read_table("t")

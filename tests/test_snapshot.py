@@ -11,12 +11,16 @@
   wrapper, and an unknown writer feature.
 - A pinned version, a timestamp lookup and a change-feed window are read on
   the driver: building those reads runs no Spark job.
+- A governed tip read lists only the files its ACL admits, and the reader
+  stats them on the driver: no listing job past Spark's 32-path
+  parallel-discovery default.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from urllib.parse import unquote, urlparse
 
 import pyspark.sql.functions as F
 import pytest
@@ -280,3 +284,102 @@ def test_pinned_reads_and_change_feeds_plan_without_spark_jobs(spark, tmp_path, 
     df, jobs = count_jobs(build)
     assert jobs == 0
     assert df.count() == {"version": 100, "timestamp": 100, "changes": 10}[read]
+
+
+# ---------------------------------------------------------------------------
+# governed tip reads list the admitted files on the driver
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("user", ["alice", "bob", "carol"])
+def test_governed_tip_read_lists_admitted_files_without_spark_jobs(
+    spark, tmp_path, count_jobs, user
+):
+    """On a 40-file table (past the 32-path parallel-discovery default),
+    building a tip read runs 0 Spark jobs, and the scan's input files are
+    exactly the files the user's DNF admits: all 40 for an unrestricted
+    user, the two granted partitions for a governed one, none (and no
+    rows) for a deny-all grant."""
+    path = _table(spark, str(tmp_path), rows=400, files=40)
+    eng = Engine(
+        spark,
+        EngineConfig(table_mapping={"t": path}),
+        permissions_df=spark.createDataFrame(
+            [
+                (1, "bob", "t", json.dumps({"p": "7"})),
+                (2, "bob", "t", json.dumps({"p": "31"})),
+                (3, "carol", "t", json.dumps({})),
+            ],
+            "id int, user_id string, table_name string, partition_filters string",
+        ),
+    )
+    admitted = {"alice": None, "bob": {"7", "31"}, "carol": set()}[user]
+    adds = deltalog._live_adds_no_spark(path)
+    assert len(adds) == 40
+    want = sorted(
+        os.path.join(path, r)
+        for r, a in adds.items()
+        if admitted is None or a["partitionValues"]["p"] in admitted
+    )
+    build = lambda: eng.read_table("t", user=user)  # noqa: E731
+    build()  # warm the ACL and snapshot caches
+    df, jobs = count_jobs(build)
+    assert jobs == 0
+    assert sorted(unquote(urlparse(u).path) for u in df.inputFiles()) == want
+    assert df.count() == 10 * len(want)
+
+
+@pytest.mark.parametrize("key", ["P", "id"])
+def test_grant_keys_match_partition_values_exactly(spark, tmp_path, key):
+    """A grant key that differs in case from the partition column, or names
+    a non-partition column, admits no file on the driver — the rule GET
+    applies — so the read returns no rows (fail-closed), where a
+    case-insensitive Catalyst filter alone would have matched rows."""
+    from delta_lake_proxy_spark.errors import ForbiddenByPolicyError
+
+    path = _table(spark, str(tmp_path), rows=20, files=2)
+    eng = Engine(
+        spark,
+        EngineConfig(table_mapping={"t": path}, allowed_partitions={"t": [{key: "1"}]}),
+    )
+    assert eng.read_table("t").count() == 0
+    adds = deltalog._live_adds_no_spark(path)
+    rel = next(r for r, a in adds.items() if a["partitionValues"]["p"] == "1")
+    with pytest.raises(ForbiddenByPolicyError):
+        eng.authorize_file("t", "anonymous", rel)
+
+
+def test_governed_read_admitting_no_file_of_a_schemaless_table(spark, tmp_path):
+    """A table whose log carries no schema takes its column types from the
+    files, so a governed read keeps every file and the Catalyst filter
+    alone enforces the grant: a grant that admits no file still reads (0
+    rows) with the partition column, and a grant on one partition sees the
+    same schema as an unrestricted user even when only the other
+    partition's value is not an integer."""
+    path = str(tmp_path / "t")
+    spark.range(0, 20).withColumn("p", (F.col("id") % 2).cast("string")).write.partitionBy(
+        "p"
+    ).parquet(path)
+    deltalog.commit_dir_state(path, ["p"])
+    assert deltalog.load_snapshot(path).schema is None
+    for grant, rows in (([{"p": "1"}], 10), ([{"p": "9"}], 0), ([{}], 0)):
+        eng = Engine(
+            spark, EngineConfig(table_mapping={"t": path}, allowed_partitions={"t": grant})
+        )
+        assert eng.read_table("t").count() == rows
+
+    mixed = str(tmp_path / "mixed")
+    spark.range(0, 20).withColumn(
+        "p", F.when(F.col("id") % 2 == 0, F.lit("1")).otherwise(F.lit("x"))
+    ).write.partitionBy("p").parquet(mixed)
+    deltalog.commit_dir_state(mixed, ["p"])
+    assert deltalog.load_snapshot(mixed).schema is None
+    everyone = Engine(spark, EngineConfig(table_mapping={"m": mixed}))
+    granted = Engine(
+        spark, EngineConfig(table_mapping={"m": mixed}, allowed_partitions={"m": [{"p": "1"}]})
+    )
+    assert dict(everyone.read_table("m").dtypes)["p"] == "string"
+    df = granted.read_table("m")
+    assert df.schema == everyone.read_table("m").schema
+    assert sorted(r.p for r in df.select("p").distinct().collect()) == ["1"]
+    assert df.count() == 10
