@@ -1211,32 +1211,72 @@ def write_log_compaction(table_path: str, start: int, end: int) -> str:
     return name
 
 
-# Deliberately LOW bytes-per-action divisor: real add actions serialize to
-# ~300-800 bytes, so dividing by 64 OVERESTIMATES the action count — the
-# estimate errs toward the distributed path, never toward an oversized
-# driver-side replay.
-_BYTES_PER_ACTION_ESTIMATE = 64
+def _checkpoint_add_rows(path: str) -> int:
+    """Rows of one checkpoint parquet file that carry an ``add``, from the
+    footer alone: ``num_rows`` minus the ``add.path`` null count per row
+    group, or ``num_rows`` when a row group has no null count. A file
+    with no ``add`` column carries none."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    col = next(
+        (i for i in range(md.num_columns) if md.schema.column(i).path == "add.path"),
+        None,
+    )
+    if col is None:
+        return 0
+    total = 0
+    for r in range(md.num_row_groups):
+        rg = md.row_group(r)
+        st = rg.column(col).statistics
+        nulls = st.null_count if st is not None and st.has_null_count else 0
+        total += rg.num_rows - nulls
+    return total
+
+
+# Tail files up to this size are scanned for add lines (about 1.5 ms per
+# MiB); a larger one, a bulk commit, is bounded from its size alone: an add
+# line carries at least its path, partitionValues, size, modificationTime
+# and dataChange keys, more than 64 bytes, so bytes // 64 is an upper bound
+# on its add count. Scanning it would make every snapshot entry after a
+# commit re-read the whole bulk commit (45-75 ms for 110k adds, 31 MB).
+_TAIL_SCAN_MAX_BYTES = 1 << 20
+_MIN_ADD_LINE_BYTES = 64
+
+
+def _tail_add_lines(path: str) -> int:
+    """Upper bound on the ``add`` actions of one JSON log file: in a small
+    file, the lines naming the key ``"add"`` plus any with a ``\\u`` escape
+    (the only other way JSON can spell that key); in a large one, its size
+    over the smallest add line."""
+    size = os.path.getsize(path)
+    if size > _TAIL_SCAN_MAX_BYTES:
+        return size // _MIN_ADD_LINE_BYTES
+    with open(path, "rb") as f:
+        return sum(1 for line in f if b'"add"' in line or b"\\u" in line)
 
 
 def estimate_snapshot_actions(table_path: str, max_version: int | None = None) -> int:
-    """Cheap upper-bound estimate of the action count of the snapshot at
-    ``max_version`` (None: the tip) WITHOUT replaying: checkpoint parquet
-    row counts (footer metadata only, no column reads) plus tail-JSON
-    bytes / 64. O(#log files) driver work — used to decide whether a
-    driver-side replay is safe or the distributed path is needed."""
+    """Cheap upper bound on the live file count of the snapshot at
+    ``max_version`` (None: the tip) WITHOUT replaying: every live file is
+    an ``add`` of the checkpoint or of the tail after it, so the bound is
+    the checkpoint's add rows (parquet footers only, no column reads) plus
+    the tail's add lines (bytes // 64 for a tail file over 1 MiB).
+    Tombstones, removes and the other actions do not count. Driver work is
+    O(#log files), plus reading tail files of at most 1 MiB each — used to
+    decide whether a driver-side replay is safe or the distributed path is
+    needed."""
     total = 0
     min_version = -1
     ck = _checkpoint_at_or_below(table_path, max_version)
     if ck is not None:
-        import pyarrow.parquet as pq
-
         for f in checkpoint_data_files(table_path, ck):
-            total += pq.ParquetFile(f).metadata.num_rows
+            total += _checkpoint_add_rows(f)
         min_version = int(ck["version"])
-    # size the files a replay would actually read: a compacted tail counts
+    # count the files a replay would actually read: a compacted tail counts
     # its (reconciled, much smaller) compaction files, not the raw commits
     for _s, _e, fp in log_segments(table_path, min_version, max_version):
-        total += max(1, os.path.getsize(fp) // _BYTES_PER_ACTION_ESTIMATE)
+        total += _tail_add_lines(fp)
     return total
 
 
@@ -2876,8 +2916,10 @@ def version_at_or_after_timestamp(
 
 def cleanup_log(table_path: str, retention_hours: float = 0.0) -> int:
     """Delta log-retention cleanup: delete JSON commits AT OR BELOW the last
-    checkpoint version, plus checkpoint part files of superseded (older)
-    checkpoints. Returns how many files were removed.
+    checkpoint version, plus the checkpoint files ``_last_checkpoint`` does
+    not name: older checkpoints, and ones at its own version that a rewrite
+    (another part count, the other layout, a concurrent writer) superseded.
+    Returns how many files were removed.
 
     Commits after the checkpoint are never touched — snapshot replay needs
     them. ``retention_hours`` keeps recently-written files (a reader replaying
@@ -2914,7 +2956,7 @@ def cleanup_log(table_path: str, retention_hours: float = 0.0) -> int:
             and name.endswith(".parquet")
             and name not in keep
             and name[:20].isdigit()
-            and int(name[:20]) < v
+            and int(name[:20]) <= v
         )
         # log-compaction files aggregate commits; once the checkpoint covers
         # their whole range they are as dead as the commits themselves

@@ -54,7 +54,7 @@ import shutil
 import time
 import urllib.parse
 import uuid
-from collections import Counter
+from collections import Counter, OrderedDict
 from typing import Any
 
 import pyarrow as pa
@@ -72,7 +72,11 @@ from .errors import (
     UnsupportedProtocolError,
 )
 from .io import local_df
-from .session import LARGE_LISTING_THRESHOLD, ensure_engine_confs
+from .session import (
+    LARGE_LISTING_THRESHOLD,
+    ensure_engine_confs,
+    set_conf_if_modifiable,
+)
 
 VIRTUAL_CATALOG = "datalake"  # the reference's single virtual bucket (src/main.rs:127)
 
@@ -191,6 +195,14 @@ _LIST_PAGE_SCHEMA = pa.schema(
         ("is_common_prefix", pa.bool_()),
     ]
 )
+# LIST page DataFrames memoized per snapshot-cache entry, least recently
+# served evicted first: at most this many pages and this many rows in all
+# (a kept page holds ~30 KB of JVM heap plus ~0.3 KB per row, so a full
+# entry stays near 25 MB); a page longer than S3's MaxKeys ceiling is built
+# fresh and not kept.
+_LIST_PAGE_MEMO_SIZE = 512
+_LIST_PAGE_MEMO_ROWS = 25_600
+_LIST_PAGE_MEMO_MAX_ROWS = 1000
 
 
 class _FileIndex:
@@ -199,11 +211,14 @@ class _FileIndex:
     LIST, the enumerated scan and DML derive from it — the live ``add`` map,
     the deletion-vector map, the scan's file list, the foreign-file flag and
     the sorted alias-namespaced keys — each built on first use, so an append
-    never replays the live files. A pinned-version read builds one too, at
-    its version, outside the cache."""
+    never replays the live files. It also keeps the LIST page DataFrames it
+    has served, so a repeated page plans nothing new; a commit or a tip
+    change replaces the entry and drops them with it. A pinned-version read
+    builds one too, at its version, outside the cache."""
 
     __slots__ = (
-        "snapshot", "_adds", "_dv_map", "_estimate", "_scan", "_foreign", "_keys"
+        "snapshot", "_adds", "_dv_map", "_estimate", "_scan", "_foreign", "_keys",
+        "_pages", "_page_rows",
     )
 
     def __init__(self, snapshot: deltalog.Snapshot):
@@ -214,6 +229,9 @@ class _FileIndex:
         self._scan: list[str] | None = None
         self._foreign: bool | None = None
         self._keys: dict[str, list[str]] = {}
+        # (has delimiter, page rows) -> DataFrame, least recently served first
+        self._pages: OrderedDict[tuple, DataFrame] = OrderedDict()
+        self._page_rows = 0
 
     @property
     def path(self) -> str:
@@ -251,14 +269,14 @@ class _FileIndex:
     @property
     def estimate(self) -> int:
         """:func:`deltalog.estimate_snapshot_actions` at this version: a
-        metadata-only upper bound on the live file count."""
+        cheap upper bound on the live file count."""
         if self._estimate is None:
             self._estimate = deltalog.estimate_snapshot_actions(self.path, self.version)
         return self._estimate
 
     def scan_files(self, limit: int):
         """Absolute paths of the live files, or ``_TOO_MANY_FILES`` past
-        ``limit`` — guarded by the action-count estimate so an
+        ``limit`` — guarded by the live-file bound so an
         over-threshold table never materializes on the driver. The estimate
         and the list are memoized, not the verdict: each call compares them
         with its own ``limit``."""
@@ -314,6 +332,37 @@ class _FileIndex:
                 out.append((group, None, None, True))
             lo = _run_end(keys, group, lo, hi)
         return out
+
+    def page_frame(
+        self,
+        spark: SparkSession,
+        rows: list[tuple[str, int | None, int | None, bool]],
+        delimiter: str | None,
+    ) -> DataFrame:
+        """The DataFrame of one :meth:`page`: a local Arrow relation, with
+        ``is_common_prefix`` only under a delimiter. Memoized by content —
+        a relation of literal rows is fixed by those rows and the schema, so
+        requests that resolve to the same rows share one DataFrame and its
+        plan."""
+        key = (bool(delimiter), tuple(rows))
+        df = self._pages.get(key)
+        if df is not None:
+            self._pages.move_to_end(key)
+            return df
+        page = pa.table(list(zip(*rows)) or [()] * 4, schema=_LIST_PAGE_SCHEMA)
+        if not delimiter:
+            page = page.drop_columns(["is_common_prefix"])
+        df = spark.createDataFrame(page)
+        if len(rows) <= _LIST_PAGE_MEMO_MAX_ROWS:
+            self._pages[key] = df
+            self._page_rows += len(rows)
+            while (
+                len(self._pages) > _LIST_PAGE_MEMO_SIZE
+                or self._page_rows > _LIST_PAGE_MEMO_ROWS
+            ):
+                (_, old), _ = self._pages.popitem(last=False)
+                self._page_rows -= len(old)
+        return df
 
 
 def _safe_castable(src, dst) -> bool:
@@ -5741,16 +5790,15 @@ class Engine:
         commit landed) and walked by binary search over its sorted keys.
         The page is a local Arrow relation, so building and collecting it
         runs zero Spark jobs — the reference's cached-snapshot listing
-        (src/main.rs:228-339).
+        (src/main.rs:228-339). The entry keeps the page DataFrames it has
+        served: a page whose rows it already served at this version comes
+        back as the same DataFrame, with no new Catalyst plan.
         """
         index = self._file_index(self.resolve(alias))
         rows = index.page(
             alias, prefix or "", continuation_token or start_after, max_keys, delimiter
         )
-        page = pa.table(list(zip(*rows)) or [()] * 4, schema=_LIST_PAGE_SCHEMA)
-        if not delimiter:
-            page = page.drop_columns(["is_common_prefix"])
-        return self.spark.createDataFrame(page)
+        return index.page_frame(self.spark, rows, delimiter)
 
     # -- writes & maintenance (S12/G2/G9) ----------------------------------
 
@@ -5958,7 +6006,7 @@ class Engine:
         - int64 timestamps come from the session conf
           ``spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS``
           (session.ENGINE_SQL_CONFS), re-asserted here for driver-supplied
-          sessions.
+          sessions; a session that keeps any other value refuses the write.
 
         ``df`` arrives already renamed to PHYSICAL columns. Returns the
         prepared frame and the directory-partition column list."""
@@ -5976,12 +6024,16 @@ class Engine:
                 "delta.enableIcebergCompat forbids active deletion vectors "
                 "(Iceberg readers cannot apply them); disable DVs first",
             )
-        try:
-            self.spark.conf.set(
-                "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+        ts_conf = "spark.sql.parquet.outputTimestampType"
+        set_conf_if_modifiable(self.spark, ts_conf, "TIMESTAMP_MICROS")
+        ts_type = self.spark.conf.get(ts_conf)
+        if ts_type.upper() != "TIMESTAMP_MICROS":
+            raise UnsupportedProtocolError(
+                path,
+                "delta.enableIcebergCompat needs int64 timestamps, but the "
+                f"session's {ts_conf} is {ts_type} and cannot be set to "
+                "TIMESTAMP_MICROS (Iceberg cannot read INT96)",
             )
-        except Exception:
-            pass
         if snap.mapping_has_struct:
             raise UnsupportedProtocolError(
                 path,

@@ -88,9 +88,16 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     refuses without ``spark.sql.parquet.fieldId.read.enabled``). Any other
     failure raises."""
     for k, v in ENGINE_SQL_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except AnalysisException as e:
-            if e.getCondition() not in ("CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG"):
-                raise
+        set_conf_if_modifiable(spark, k, v)
     return spark
+
+
+def set_conf_if_modifiable(spark: SparkSession, key: str, value: str) -> None:
+    """Set one SQL conf, leaving it as it is when the deployment does not
+    let the session modify it; any other failure raises. Callers whose
+    correctness depends on the value read it back."""
+    try:
+        spark.conf.set(key, value)
+    except AnalysisException as e:
+        if e.getCondition() not in ("CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG"):
+            raise

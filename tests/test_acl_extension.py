@@ -57,7 +57,6 @@ def test_extension_confs_reject_control_characters(tmp_path):
 
 
 @pytest.mark.skipif(not os.path.exists(JAR), reason="extension jar not built")
-@pytest.mark.full
 def test_raw_read_is_filtered_in_extension_session(spark, tmp_path, lineitem):
     """End-to-end in a fresh JVM: a session built with extension_confs
     filters raw parquet reads of the governed path (allow one partition,

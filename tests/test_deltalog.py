@@ -784,3 +784,176 @@ def test_time_travel_below_cleanup_fails_loudly(spark, tmp_path):
     with _pytest.raises(ValueError, match="no longer reproducible"):
         eng.read_table("t", version=1)
     assert deltalog.snapshot_files(spark, t).count() == 3  # table intact
+
+
+def _checkpoint_files_at(t: str, v: int) -> set[str]:
+    prefix = f"{v:020d}.checkpoint."
+    return {n for n in os.listdir(deltalog.log_path(t)) if n.startswith(prefix)}
+
+
+def _rewrite_fixture(t: str) -> set[str]:
+    os.makedirs(t)
+    deltalog.write_commit(
+        t,
+        [
+            {"path": f"p={i % 3}/f{i}.parquet", "partitionValues": {"p": str(i % 3)},
+             "size": i + 1, "modificationTime": 0}
+            for i in range(24)
+        ],
+        schema_json='{"v":1}',
+    )
+    deltalog.write_commit(t, [], removes=[{"path": "p=0/f0.parquet"}])
+    return {f"p={i % 3}/f{i}.parquet" for i in range(1, 24)}
+
+
+def test_rewritten_checkpoint_leaves_only_its_own_files(spark, tmp_path):
+    """Rewriting the checkpoint at a version that already has one, with
+    another part count or the other layout, supersedes the earlier files:
+    log cleanup reclaims them, only what ``_last_checkpoint`` names stays,
+    and the snapshot reads the same — also once the commits it covers are
+    gone and each rewrite is built from the previous checkpoint."""
+    t = str(tmp_path / "rewrite")
+    want = _rewrite_fixture(t)
+    writes = [
+        lambda: deltalog.write_checkpoint(spark, t),  # one part
+        lambda: deltalog.write_checkpoint(spark, t, max_actions_per_part=10),  # 3
+        lambda: deltalog.write_checkpoint_v2(spark, t, 10),
+        lambda: deltalog.write_checkpoint(spark, t, max_actions_per_part=10),
+        lambda: deltalog.write_checkpoint(spark, t),
+    ]
+    for write in writes:
+        v = write()
+        deltalog.cleanup_log(t, retention_hours=0.0)
+        ck = deltalog.last_checkpoint(t)
+        listed = {os.path.basename(f) for f in deltalog.checkpoint_data_files(t, ck)}
+        assert _checkpoint_files_at(t, v) == {
+            n for n in listed if n.startswith(f"{v:020d}.")
+        }
+        assert set(deltalog._live_adds_no_spark(t)) == want
+        assert {r["path"] for r in deltalog.snapshot_files(spark, t).collect()} == want
+    assert deltalog.last_checkpoint(t).get("parts") is None
+    assert _checkpoint_files_at(t, v) == {f"{v:020d}.checkpoint.parquet"}
+
+
+def test_checkpoint_rewrite_spares_the_files_last_checkpoint_names(spark, tmp_path):
+    """Two writers checkpoint one version and the first one's
+    ``_last_checkpoint`` lands last (v2 main files are uuid-named, so their
+    files differ): the rewrite itself deletes nothing, so a reader still
+    holding either pointer reads on, and cleanup reclaims only the files
+    the final ``_last_checkpoint`` does not name — and only once they are
+    past the retention window."""
+    import json
+
+    t = str(tmp_path / "race")
+    want = _rewrite_fixture(t)
+    v = deltalog.write_checkpoint_v2(spark, t, 10)
+    first = deltalog.last_checkpoint(t)
+    first_files = deltalog.checkpoint_data_files(t, first)
+    deltalog.write_checkpoint_v2(spark, t, 10)
+    second_files = deltalog.checkpoint_data_files(t, deltalog.last_checkpoint(t))
+    assert not set(first_files) & set(second_files)
+    assert all(os.path.exists(f) for f in first_files + second_files)
+    with open(deltalog._last_checkpoint_file(t), "w", encoding="utf-8") as f:
+        f.write(json.dumps(first))
+    assert deltalog.cleanup_log(t, retention_hours=1.0) == 0
+    assert all(os.path.exists(f) for f in second_files)
+    deltalog.cleanup_log(t, retention_hours=0.0)
+    assert all(os.path.exists(f) for f in first_files)
+    assert not any(os.path.exists(f) for f in second_files)
+    assert _checkpoint_files_at(t, v) == {os.path.basename(first_files[0])}
+    assert set(deltalog._live_adds_no_spark(t)) == want
+    assert {r["path"] for r in deltalog.snapshot_files(spark, t).collect()} == want
+
+
+def _stats_add(path: str, part: str) -> dict:
+    import json
+
+    return {
+        "path": path, "partitionValues": {"p": part}, "size": 1000,
+        "modificationTime": 0, "dataChange": True,
+        "stats": json.dumps({"numRecords": 10, "minValues": {"id": 0},
+                             "maxValues": {"id": 9}, "nullCount": {"id": 0}}),
+    }
+
+
+def test_estimate_counts_only_adds_on_a_churned_table(spark, tmp_path):
+    """40 one-file partitions, 30 of them tombstoned: the estimate counts
+    add rows and add lines only, so it stays between the live count and
+    the 40 files ever added, before and after a checkpoint."""
+    t = str(tmp_path / "churn")
+    os.makedirs(t)
+    deltalog.write_commit(
+        t, [_stats_add(f"p={i}/f.parquet", str(i)) for i in range(40)],
+        partition_cols=["p"], schema_json="{}",
+    )
+    deltalog.write_commit(t, [], removes=[{"path": f"p={i}/f.parquet"} for i in range(30)])
+    assert len(deltalog._live_adds_no_spark(t)) == 10
+    assert 10 <= deltalog.estimate_snapshot_actions(t) <= 40
+    assert deltalog.estimate_snapshot_actions(t, 0) == 40
+    deltalog.write_checkpoint(spark, t)
+    assert deltalog.estimate_snapshot_actions(t) == 10
+    deltalog.write_commit(
+        t, [_stats_add("p=50/f.parquet", "50")],
+        removes=[{"path": "p=30/f.parquet"}],
+    )
+    assert deltalog.estimate_snapshot_actions(t) == 11
+
+
+@pytest.mark.parametrize("layout", ["single", "multi", "v2"])
+def test_estimate_bounds_live_files_in_every_checkpoint_layout(spark, tmp_path, layout):
+    """Checkpoint add rows come from the footer's ``add.path`` null count
+    (the v2 main file carries none; its sidecars do), falling back to the
+    row count when the footer has no statistics."""
+    import pyarrow.parquet as pq
+
+    t = str(tmp_path / layout)
+    os.makedirs(t)
+    deltalog.write_commit(
+        t, [_stats_add(f"p={i % 4}/f{i}.parquet", str(i % 4)) for i in range(25)],
+        partition_cols=["p"], schema_json="{}",
+    )
+    deltalog.write_commit(t, [], removes=[{"path": f"p={i % 4}/f{i}.parquet"} for i in range(5)])
+    if layout == "v2":
+        deltalog.write_checkpoint_v2(spark, t, 10)
+    else:
+        deltalog.write_checkpoint(spark, t, 10 if layout == "multi" else 1_000_000)
+    deltalog.write_commit(
+        t, [_stats_add("p=0/g.parquet", "0")], removes=[{"path": "p=1/f5.parquet"}]
+    )
+    live = len(deltalog._live_adds_no_spark(t))
+    assert live == 20
+    assert deltalog.estimate_snapshot_actions(t) == 21  # 20 checkpoint adds + 1 tail add
+    # a checkpoint written without footer statistics counts every row
+    files = deltalog.checkpoint_data_files(t, deltalog.last_checkpoint(t))
+    rows = 0
+    for f in files:
+        table = pq.read_table(f)
+        pq.write_table(table, f, write_statistics=False)
+        rows += table.num_rows if "add" in table.column_names else 0
+    est = deltalog.estimate_snapshot_actions(t)
+    assert est == rows + 1 and est >= live
+
+
+def test_estimate_bounds_a_large_tail_file_by_its_size(tmp_path, monkeypatch):
+    """A tail file past the scan limit (a bulk commit) is bounded by its
+    size over the smallest add line, not read: still an upper bound on
+    its adds, and no read of the file."""
+    t = str(tmp_path / "bulk")
+    os.makedirs(t)
+    deltalog.write_commit(
+        t, [_stats_add(f"p={i % 4}/f{i}.parquet", str(i % 4)) for i in range(30)],
+        partition_cols=["p"], schema_json="{}",
+    )
+    deltalog.write_commit(t, [], removes=[{"path": "p=0/f0.parquet"}])
+    assert deltalog.estimate_snapshot_actions(t) == 30
+    commits = [os.path.join(deltalog.log_path(t), f"{v:020d}.json") for v in (0, 1)]
+    monkeypatch.setattr(deltalog, "_TAIL_SCAN_MAX_BYTES", 0)
+    real_open = open
+
+    def no_log_reads(path, *a, **k):
+        assert path not in commits, f"read {path}"
+        return real_open(path, *a, **k)
+
+    monkeypatch.setattr("builtins.open", no_log_reads)
+    est = deltalog.estimate_snapshot_actions(t)
+    assert est == sum(os.path.getsize(c) // 64 for c in commits) and est >= 30

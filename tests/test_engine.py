@@ -1325,9 +1325,10 @@ def test_clone_read_routes_to_listing_join_past_threshold(
         EngineConfig(table_mapping={"d": dv_src, "dc": dvc}, read_only=False),
     )
     eng.clone_table("d", dvc)
-    # 2 parent dirs fit under the threshold; the byte-based action estimate
-    # (protocol+metaData+DV adds) exceeds it, forcing the distributed path
+    # 2 parent dirs fit under the threshold; a live-file bound above it (a
+    # tail that adds files it later removes) forces the distributed path
     eng.large_listing_threshold = 2
+    monkeypatch.setattr(deltalog, "estimate_snapshot_actions", lambda *a: 3)
     eng.invalidate_caches()
 
     def forbid(self, *a, **k):

@@ -279,3 +279,43 @@ def test_inactive_feature_demands_nothing(spark, tmp_path):
         partition_by=["part"],
     )
     assert eng.read_table("t", user="admin").count() == 6
+
+
+def test_write_refuses_when_int64_timestamps_cannot_be_set(spark, tmp_path, monkeypatch):
+    """A session that refuses to set ``outputTimestampType`` and keeps
+    INT96 would stage files Iceberg cannot read: the write fails closed,
+    before anything is committed."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.conf import RuntimeConfig
+
+    root, eng = _iceberg_enabled(spark, tmp_path)
+    key = "spark.sql.parquet.outputTimestampType"
+
+    class Refused(AnalysisException):
+        def __init__(self):
+            Exception.__init__(self, f"cannot modify {key}")
+
+        def getCondition(self):
+            return "CANNOT_MODIFY_CONFIG"
+
+    real_set, real_get = RuntimeConfig.set, RuntimeConfig.get
+
+    def refuse(self, k, v):
+        if k == key:
+            raise Refused()
+        return real_set(self, k, v)
+
+    def get(self, k, *a, **kw):
+        return "INT96" if k == key else real_get(self, k, *a, **kw)
+
+    monkeypatch.setattr(RuntimeConfig, "set", refuse)
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+    before = deltalog.latest_version(root)
+    with pytest.raises(UnsupportedProtocolError, match="INT96"):
+        eng.write_table(
+            "t",
+            spark.createDataFrame([Row(id=11, val=1.0, part="A")]),
+            mode="append",
+            partition_by=["part"],
+        )
+    assert deltalog.latest_version(root) == before

@@ -283,3 +283,87 @@ def test_list_sees_commit_written_behind_the_engine(spark, churned):
     after = keys(eng.list_files("t"))
     assert after == sorted(before + ["t/" + rel])
     assert eng.authorize_file("t", "u", rel)
+
+
+def test_repeated_page_reuses_its_dataframe(churned, count_jobs, monkeypatch):
+    """A page whose rows the entry already served comes back as the same
+    DataFrame: no new createDataFrame, and its collect still runs no job.
+    Requests that resolve to the same rows share it; the same rows under a
+    delimiter are another relation (one more column)."""
+    eng, _, _ = churned
+    eng.invalidate_caches()
+    built = []
+    real = eng.spark.createDataFrame
+    monkeypatch.setattr(
+        eng.spark, "createDataFrame", lambda *a, **k: built.append(1) or real(*a, **k)
+    )
+    first = eng.list_files("t", prefix="t/", max_keys=3)
+    want = first.collect()
+    assert len(built) == 1
+    again = eng.list_files("t", prefix="t/", max_keys=3)
+    assert again is first and len(built) == 1
+    rows, jobs = count_jobs(again.collect)
+    assert rows == want and jobs == 0
+    # a marker before every key selects the same rows
+    assert eng.list_files("t", prefix="t/", start_after="t/", max_keys=3) is first
+    grouped = eng.list_files("t", prefix="t/", max_keys=3, delimiter="#")
+    assert grouped is not first and len(built) == 2
+    assert [tuple(r)[:3] for r in grouped.collect()] == [tuple(r) for r in want]
+
+
+def test_readded_path_lists_its_new_size(spark, tmp_path):
+    """A path removed and then added again with another size lists with
+    the new size: the served page of the earlier version is not reused."""
+    import os
+
+    from delta_lake_proxy_spark import deltalog
+
+    t = str(tmp_path / "readd")
+    os.makedirs(t)
+
+    def add(size):
+        return {"path": "p=1/a.parquet", "partitionValues": {"p": "1"},
+                "size": size, "modificationTime": 7}
+
+    deltalog.write_commit(t, [add(10)], partition_cols=["p"], schema_json="{}")
+    eng = Engine(spark, EngineConfig(table_mapping={"t": t}))
+
+    def page():
+        return [tuple(r) for r in eng.list_files("t").collect()]
+
+    assert page() == [("t/p=1/a.parquet", 10, 7)]
+    deltalog.write_commit(t, [], [{"path": "p=1/a.parquet", "dataChange": True}])
+    assert page() == []
+    deltalog.write_commit(t, [add(20)])
+    assert page() == [("t/p=1/a.parquet", 20, 7)]
+
+
+def test_page_memo_is_bounded(spark, churned, monkeypatch):
+    """The entry keeps at most its bound of pages and of rows, evicting the
+    least recently served, and never keeps a page over the MaxKeys
+    ceiling."""
+    from delta_lake_proxy_spark import deltalog, engine
+
+    _, path, _ = churned
+    monkeypatch.setattr(engine, "_LIST_PAGE_MEMO_SIZE", 2)
+    ix = engine._FileIndex(deltalog.load_snapshot(path))
+    pages = [[(f"t/k{i}", i, 0, False)] for i in range(4)]
+    frames = [ix.page_frame(spark, rows, None) for rows in pages]
+    assert len(ix._pages) == 2
+    assert ix.page_frame(spark, pages[3], None) is frames[3]
+    assert ix.page_frame(spark, pages[0], None) is not frames[0]
+    assert len(ix._pages) == 2
+    ceiling = engine._LIST_PAGE_MEMO_MAX_ROWS
+    long = [(f"t/k{i:05d}", i, 0, False) for i in range(ceiling + 1)]
+    big = ix.page_frame(spark, long, None)
+    assert ix.page_frame(spark, long, None) is not big
+    assert big.count() == ceiling + 1
+    at_ceiling = long[:ceiling]
+    assert ix.page_frame(spark, at_ceiling, None) is ix.page_frame(
+        spark, at_ceiling, None
+    )
+    assert len(ix._pages) == 2
+    # the row bound evicts the oldest pages until the rows fit
+    monkeypatch.setattr(engine, "_LIST_PAGE_MEMO_ROWS", ceiling + 1)
+    last = ix.page_frame(spark, long[:2], None)
+    assert list(ix._pages.values()) == [last] and ix._page_rows == 2
